@@ -191,14 +191,6 @@ def _read_checkpoint_cached(
     )
 
 
-def latest_checkpoint_id(db_path: str) -> int | None:
-    """Newest checkpoint's top txn id from a fresh listing (None if no
-    checkpoint exists)."""
-    committed_txn_ids(db_path)  # refreshes _CK_HINT
-    ck = _CK_HINT.get(db_path)
-    return None if ck is None else ck[0]
-
-
 def _list_checkpoints(db_path: str) -> list[tuple[int, int]]:
     """(top, gen) keys of every checkpoint file, ascending."""
     return sorted(

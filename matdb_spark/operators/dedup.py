@@ -910,7 +910,8 @@ def admit_batches(
     listing is snapshotted when the read DataFrame is built, before
     the write starts). The returned frame never embeds a per-batch
     decision plan at all: it re-derives admitted ids from the FINAL
-    index (admitted == appended), which is exact because this
+    index (admitted == appended), plus the docs too short to shingle
+    (no banding rows, so never rejected), which is exact because this
     lifecycle starts from an empty/absent index and ``batch_fn``
     partitions ids disjointly — the preconditions this operator
     declares (a replayed/pre-populated index needs admit_batch's
@@ -927,9 +928,21 @@ def admit_batches(
     banded_all = banded_minhash(
         docs, id_col, text_col, k, bands, shingle_n
     ).localCheckpoint()
+    # docs too short to shingle (fewer than shingle_n words — the
+    # ``count`` of shingles_from_words, same normalize+split) have no
+    # banding rows, so nothing can reject them: admit_batch admits them
+    # in their own batch. A per-row filter, not an anti-join against
+    # banded_all (which would shuffle the corpus's ids at scale), pinned
+    # like banded_all so the returned plan reads no docs.
+    gramless = docs.filter(
+        F.coalesce(F.size(F.split(normalize(F.col(text_col)), " ")), F.lit(0))
+        < shingle_n
+    ).select(F.col(id_col).alias("doc_id")).localCheckpoint()
     for b in range(n_batches):
         nb = banded_all.filter(batch_fn(F.col("doc_id")) == F.lit(b))
-        have_index = b > 0
+        # an earlier batch with no banding rows (no docs, or only docs
+        # too short to shingle) writes a directory without band= dirs
+        have_index = b > 0 and _index_has_bands(spark, path)
         rejected = _admission_rejected_ids(
             spark, path, nb, max_bucket, True, have_index
         )
@@ -946,12 +959,15 @@ def admit_batches(
             "append" if have_index else "overwrite",
             cluster=not have_index,
         )
-    # every admitted doc has exactly ONE banding row per band, so the
-    # band=0 partition alone IS the admitted id set — partition-pruned
-    # single-band scan, no distinct, zero exchanges in the returned
-    # plan (a distinct over the full index would shuffle doc_ids of
-    # the whole admitted corpus at scale for nothing)
-    idx_ids = _rp(spark, path).filter(F.col("band") == 0).select("doc_id")
+    # every admitted doc with shingles has exactly ONE banding row per
+    # band, so the band=0 partition alone IS that admitted id set —
+    # partition-pruned single-band scan, no distinct, zero exchanges in
+    # the returned plan (a distinct over the full index would shuffle
+    # doc_ids of the whole admitted corpus at scale for nothing)
+    idx_ids = gramless
+    if _index_has_bands(spark, path):
+        banded_ids = _rp(spark, path).filter(F.col("band") == 0).select("doc_id")
+        idx_ids = banded_ids.unionByName(gramless)
     return idx_ids.select(
         F.col("doc_id").alias(id_col),
         batch_fn(F.col("doc_id")).cast("int").alias("admitted_in_batch"),

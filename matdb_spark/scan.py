@@ -27,14 +27,23 @@ SURVEY §2.1 O2. Within-transaction duplicates resolve to the highest
 write sequence (last-write-wins, mirroring the in-place cell overwrite
 of block.rs:45-49).
 
-Scale: the only shuffle is the dedup aggregation, partitioned by the
-full dimension tuple (maximum key cardinality → no skew beyond actual
-key skew, which AQE skew handling covers). If a caller does not need
-global order, ``ordered=False`` skips the range shuffle entirely.
+Scale: a full or key-range scan shuffles once for the dedup
+aggregation, partitioned by the full dimension tuple (maximum key
+cardinality → no skew beyond actual key skew, which AQE skew handling
+covers), plus the range shuffle of the ordering sort; ``ordered=False``
+skips the latter. A point get prunes per key instead of by the key
+set's envelope: a transaction is read only if its manifest stats may
+hold one of the keys, and of its files only the chunk directories of
+THOSE keys. When a bounded read (point get or key range) is left with
+at most ``_SINGLE_TASK_MAX_FILES`` files of at most
+``_SINGLE_TASK_MAX_BYTES`` in all, the sources are coalesced to one
+partition before version resolution, so the read plans no exchange at
+all and runs as one Spark job.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -123,31 +132,54 @@ def _chunk_ranges(schema: Schema, bounds: dict[str, tuple]) -> dict[str, tuple]:
     return out
 
 
-def _select_manifest_files(
-    files: list[str], chunk_ranges: dict[str, tuple]
-) -> list[str]:
+def _chunk_matches(parts: dict[str, str], chunk_ranges: dict[str, tuple]) -> bool:
+    """Do a file's ``__chunk_<dim>=<v>`` directory components (``parts``)
+    lie inside one box's chunk ranges? A component the path lacks, or
+    cannot parse, cannot prune."""
+    for ccol, (clo, chi) in chunk_ranges.items():
+        v = parts.get(ccol)
+        if v is None:
+            continue
+        try:
+            iv = int(v)
+        except ValueError:
+            continue
+        if (clo is not None and iv < clo) or (chi is not None and iv > chi):
+            return False
+    return True
+
+
+def _select_manifest_files(files: list[str], chunk_ranges) -> list[str]:
     """Chunk-prune a manifest file list driver-side: keep only paths
     whose ``__chunk_<dim>=<v>`` directory components intersect the
-    bounds. Paths without a referenced chunk component are kept
-    (cannot prune ⇒ read)."""
-    if not chunk_ranges:
+    bounds. ``chunk_ranges`` is one box's ranges (``_chunk_ranges``) or
+    a list of them, one per box; a path is kept if ANY box keeps it.
+    Paths without a referenced chunk component are kept (cannot prune
+    ⇒ read).
+
+    A box that pins every chunk column (a point key) matches exactly
+    one chunk tuple, so those boxes are tested by set membership —
+    O(files + boxes) rather than O(files × boxes); only the other
+    boxes (ranges) are tested one by one."""
+    boxes = [chunk_ranges] if isinstance(chunk_ranges, dict) else chunk_ranges
+    if not all(boxes):  # a box without chunk bounds keeps every file
         return files
+    cols = list(boxes[0])
+    pinned: set[tuple] = set()
+    ranged = []
+    for cr in boxes:
+        if list(cr) == cols and all(lo is not None and lo == hi for lo, hi in cr.values()):
+            pinned.add(tuple(lo for lo, _ in cr.values()))
+        else:
+            ranged.append(cr)
     keep = []
     for f in files:
         parts = dict(p.split("=", 1) for p in f.split("/") if "=" in p)
-        ok = True
-        for ccol, (clo, chi) in chunk_ranges.items():
-            v = parts.get(ccol)
-            if v is None:
-                continue
-            try:
-                iv = int(v)
-            except ValueError:
-                continue
-            if (clo is not None and iv < clo) or (chi is not None and iv > chi):
-                ok = False
-                break
-        if ok:
+        try:
+            hit = tuple(int(parts[c]) for c in cols) in pinned
+        except (KeyError, ValueError):  # no full chunk tuple: test every box
+            hit = any(_chunk_matches(parts, cr) for cr in boxes)
+        if hit or any(_chunk_matches(parts, cr) for cr in ranged):
             keep.append(f)
     return keep
 
@@ -155,6 +187,32 @@ def _select_manifest_files(
 #: above this many explicit paths, pass directories instead (py4j
 #: argument-marshalling and driver plan size outweigh listing savings)
 _MAX_EXPLICIT_PATHS = 50_000
+
+#: a bounded read (point get or key range) whose pruned file set is at
+#: most this many explicit files, of at most ``_SINGLE_TASK_MAX_BYTES``
+#: in all, resolves versions in ONE task: the sources are coalesced to
+#: one partition, so neither the dedup aggregation nor the ordering
+#: sort plans an exchange. 8 is the largest set measured faster this
+#: way (storebench ``lookup``: 8 keys in 8 small files); larger sets
+#: keep the parallel plan
+_SINGLE_TASK_MAX_FILES = 8
+
+#: byte cap of the single-task rule: Spark's default
+#: ``spark.sql.files.openCostInBytes``, the bytes its planner reckons
+#: one more file open costs — an input no larger cannot repay the
+#: shuffle stages that spreading it over cores adds
+_SINGLE_TASK_MAX_BYTES = 4 * 1024 * 1024
+
+
+def _small_input(paths: list[str]) -> bool:
+    """Are ``paths`` (explicit data files) few and small enough for the
+    single-task rule? A file that cannot be sized counts as large."""
+    if len(paths) > _SINGLE_TASK_MAX_FILES:
+        return False
+    try:
+        return sum(os.path.getsize(p) for p in paths) <= _SINGLE_TASK_MAX_BYTES
+    except OSError:
+        return False
 
 
 def _read_schema(schema: Schema):
@@ -216,6 +274,56 @@ def _range_filters(
     return conds
 
 
+#: dim types whose keys render as SQL integer literals
+_INTEGRAL_TYPES = {"long", "int"}
+
+
+def _key_predicate(schema: Schema, keys: list[tuple]):
+    """Column: the row's full dim tuple is one of ``keys``. When every
+    dim is integral and every key value a plain int, the predicate is
+    ONE SQL string — ``IN (...)`` for a single dim, an OR of ANDs
+    otherwise — parsed JVM-side in one call instead of several py4j
+    calls per key; other dim types build it Column by Column. Both
+    forms push down to the parquet scan (In / Or(And(EqualTo)))."""
+    dims = schema.dim_names
+    # plain ints only: bools, Decimals and numpy scalars keep the Column build
+    if all(d.type in _INTEGRAL_TYPES for d in schema.dimensions) and all(
+        type(v) is int for k in keys for v in k
+    ):
+        if len(dims) == 1:
+            return F.expr(f"`{dims[0]}` IN ({', '.join(str(k[0]) for k in keys)})")
+        return F.expr(
+            " OR ".join(
+                "(" + " AND ".join(f"`{d}` = {v}" for d, v in zip(dims, k)) + ")"
+                for k in keys
+            )
+        )
+    if len(dims) == 1:
+        return F.col(dims[0]).isin([k[0] for k in keys])
+    pred = F.lit(False)
+    for k in keys:
+        clause = F.lit(True)
+        for d, v in zip(dims, k):
+            clause = clause & (F.col(d) == F.lit(v))
+        pred = pred | clause
+    return pred
+
+
+def _envelope(boxes: list[dict[str, tuple]]) -> dict[str, tuple]:
+    """One box covering every box: per dim, the least lo and greatest
+    hi (None — open — when any box leaves that side open or does not
+    bound the dim at all)."""
+    env = {}
+    for name in dict.fromkeys(n for b in boxes for n in b):
+        los = [b.get(name, (None, None))[0] for b in boxes]
+        his = [b.get(name, (None, None))[1] for b in boxes]
+        env[name] = (
+            None if None in los else min(los),
+            None if None in his else max(his),
+        )
+    return env
+
+
 def scan_dataframe(
     spark: SparkSession,
     source: ScanSource,
@@ -228,35 +336,50 @@ def scan_dataframe(
 ) -> DataFrame:
     """Build the snapshot-scan DataFrame for a pinned source set.
 
-    ``bounds`` maps dim name → (lo, hi) inclusive key bounds (either
-    side None for open): applied at the scan relation itself so both
-    partition pruning and parquet stats pruning engage before any
-    shuffle. ``predicate`` is an optional extra Column over DIM
-    columns only, also applied at the scan relation (point lookups push
-    exact key sets down this way); dim-only predicates commute with the
-    version-dedup aggregation, so applying them pre-shuffle is
-    semantics-preserving."""
+    ``bounds`` is a box — dim name → (lo, hi) inclusive key bounds,
+    either side None for open — or a list of boxes, read as their
+    union (a point get passes one box per key). Pruning is per box:
+    a transaction is read only if its manifest stats may hold some
+    box, and of its files only those whose chunk directories match
+    the boxes THAT transaction may hold. The envelope of the boxes is
+    applied at the scan relation itself so both partition pruning and
+    parquet stats pruning engage before any shuffle. ``predicate`` is
+    an optional extra Column over DIM columns only, also applied at
+    the scan relation (point lookups push exact key sets down this
+    way); dim-only predicates commute with the version-dedup
+    aggregation, so applying them pre-shuffle is semantics-preserving.
+
+    When ``bounds`` is given and the pruned sources are at most
+    ``_SINGLE_TASK_MAX_FILES`` explicit files of at most
+    ``_SINGLE_TASK_MAX_BYTES`` in all, version resolution runs in one
+    task with no exchange (see ``_SINGLE_TASK_MAX_FILES``)."""
     schema = source.schema
     dims = schema.dim_names
     vals = schema.value_names
 
     parts: list[DataFrame] = []
 
+    boxes = bounds if isinstance(bounds, list) else [bounds] if bounds else []
+    env = _envelope(boxes) if boxes else {}
+    single_task = False
     read_txns = list(source.visible_txns)
-    if bounds:
+    # committed txn -> indices of the boxes its stats may hold
+    txn_boxes: dict[int, list[int]] = {}
+    if boxes:
         # Tier-0 pruning: drop whole transactions whose manifest stats
-        # (txn-level zone maps, stats.py) cannot intersect the bounds —
-        # before any file listing or Spark job. Missing stats keep the
-        # txn (correctness never depends on stats).
+        # (txn-level zone maps, stats.py) cannot intersect any box —
+        # before any file listing or Spark job. Every (txn, box) pair
+        # is checked, since the file pruning below needs each txn's
+        # own boxes. Missing stats keep the txn for every box
+        # (correctness never depends on stats).
         from matdb_spark.stats import txn_intersects
 
-        read_txns = [
-            t
-            for t in read_txns
-            if txn_intersects(
-                manifest.read_manifest_cached(source.db_path, t).get("stats"), bounds
-            )
-        ]
+        for t in read_txns:
+            st = manifest.read_manifest_cached(source.db_path, t).get("stats")
+            hits = [i for i, b in enumerate(boxes) if txn_intersects(st, b)]
+            if hits:
+                txn_boxes[t] = hits
+        read_txns = [t for t in read_txns if t in txn_boxes]
     # Dedup-free fast path: a snapshot that provably holds ONE version
     # per key needs no version-resolution aggregation — the scan's only
     # shuffle disappears. Provable case: exactly one visible txn whose
@@ -320,7 +443,7 @@ def scan_dataframe(
         # list (legacy store, capped txn) falls back to directories.
         paths: list[str] = []
         explicit_ok = True
-        cranges = _chunk_ranges(schema, bounds or {})
+        box_cranges = [_chunk_ranges(schema, b) for b in boxes]
         for t in read_txns:
             tdir = manifest.txn_data_dir(source.db_path, t)
             if t == source.own_txn:
@@ -330,7 +453,9 @@ def scan_dataframe(
             if fl is None:
                 explicit_ok = False
                 break
-            paths.extend(f"{tdir}/{rel}" for rel in _select_manifest_files(fl, cranges))
+            if boxes:
+                fl = _select_manifest_files(fl, [box_cranges[i] for i in txn_boxes[t]])
+            paths.extend(f"{tdir}/{rel}" for rel in fl)
             if len(paths) > _MAX_EXPLICIT_PATHS:
                 # bail BEFORE materializing millions of path strings —
                 # past this size the directory reader wins anyway
@@ -338,6 +463,12 @@ def scan_dataframe(
                 break
         if not explicit_ok:
             paths = [manifest.txn_data_dir(source.db_path, t) for t in read_txns]
+        single_task = (
+            bool(boxes)
+            and explicit_ok
+            and source.own_txn not in read_txns
+            and _small_input(paths)
+        )
         # Catalog-schema read: no footer inference, no mergeSchema job
         # (see _read_schema). Files predating an evolved value column
         # read it as typed null.
@@ -347,7 +478,7 @@ def scan_dataframe(
         if paths:  # empty = every committed file chunk-pruned away
             df = reader.parquet(*paths)
             # Prune BEFORE projecting away the __chunk_* partition columns.
-            for cond in _range_filters(schema, bounds or {}, with_chunks=True):
+            for cond in _range_filters(schema, env, with_chunks=True):
                 df = df.filter(cond)
             if predicate is not None:
                 df = df.filter(predicate)
@@ -384,7 +515,7 @@ def scan_dataframe(
         # tops out at 2⁶³−1, the last representable long.
         own = source.own_txn if source.own_txn is not None else (1 << 31) - 1
         buf = spark.createDataFrame(source.buffered_rows, schema.staging_schema())
-        for cond in _range_filters(schema, bounds or {}, with_chunks=False):
+        for cond in _range_filters(schema, env, with_chunks=False):
             buf = buf.filter(cond)
         if predicate is not None:
             buf = buf.filter(predicate)
@@ -406,6 +537,11 @@ def scan_dataframe(
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
+    if single_task:
+        # A bounded read of a few small files: one partition satisfies
+        # both the dedup's clustering and the sort's ordering, so the
+        # plan below gets neither exchange and the whole read is one job.
+        df = df.coalesce(1)
 
     # O2: newest-(txn, seq) wins per key. max_by keeps map-side partial
     # aggregation (one shuffle) — cheaper at scale than a row_number

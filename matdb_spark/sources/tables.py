@@ -10,6 +10,8 @@ same files), so every downstream query sees proper timestamps.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 TABLES = [
@@ -65,20 +67,25 @@ def _force_utc(spark: SparkSession) -> None:
 # touching many fixture/index paths cannot grow it unboundedly.
 _SCHEMA_CACHE: "OrderedDict" = __import__("collections").OrderedDict()
 _SCHEMA_CACHE_MAX = 512
+#: concurrent streams in one session share the cache; a get's lookup
+#: and its move_to_end must not interleave with another thread's eviction
+_SCHEMA_CACHE_LOCK = threading.Lock()
 
 
 def _schema_cache_get(key):
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is not None:
-        _SCHEMA_CACHE.move_to_end(key)
-    return sch
+    with _SCHEMA_CACHE_LOCK:
+        sch = _SCHEMA_CACHE.get(key)
+        if sch is not None:
+            _SCHEMA_CACHE.move_to_end(key)
+        return sch
 
 
 def _schema_cache_put(key, schema) -> None:
-    _SCHEMA_CACHE[key] = schema
-    _SCHEMA_CACHE.move_to_end(key)
-    while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
-        _SCHEMA_CACHE.popitem(last=False)
+    with _SCHEMA_CACHE_LOCK:
+        _SCHEMA_CACHE[key] = schema
+        _SCHEMA_CACHE.move_to_end(key)
+        while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.popitem(last=False)
 
 
 def cached_schema(spark: SparkSession, path: str):

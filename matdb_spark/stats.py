@@ -12,10 +12,11 @@ thousands of transactions, each with many chunk directories. So the
 commit manifest additionally carries per-transaction min/max bounds
 per dimension, aggregated driver-side from the Parquet FOOTERS of the
 just-written segment (no data scan — footer metadata only, O(files)
-small reads). A key-range scan then drops entire transactions at
-*planning* time, before any file listing or Spark job: three pruning
-tiers — manifest stats (txn level) → Hive partition pruning (chunk
-level) → Parquet row-group stats (page level).
+small reads). A key-range scan, or a point get key by key, then drops
+entire transactions at *planning* time, before any file listing or
+Spark job: three pruning tiers — manifest stats (txn level) → Hive
+partition pruning (chunk level) → Parquet row-group stats (page
+level).
 
 Only integral/float dimension stats are recorded (the types chunking
 supports plus float); anything else is left absent, and absent stats
@@ -107,21 +108,6 @@ def collect_segment_info(seg_dir: str, schema) -> tuple[dict | None, list[str]]:
     return stats, sorted(files)
 
 
-def list_segment_files(seg_dir: str) -> list[str]:
-    """Relative '/'-normalized parquet paths of one segment (walk
-    only; prefer :func:`collect_segment_info` to share the walk with
-    the stats sweep)."""
-    n = len(seg_dir.rstrip(os.sep)) + 1
-    return sorted(
-        p[n:].replace(os.sep, "/") for p in _iter_parquet_files(seg_dir)
-    )
-
-
-def collect_segment_stats(seg_dir: str, schema) -> dict | None:
-    """Stats half of :func:`collect_segment_info` (compat wrapper)."""
-    return collect_segment_info(seg_dir, schema)[0]
-
-
 def merge_stats(a: dict | None, b: dict | None) -> dict | None:
     """Combine per-segment stats into per-transaction stats. None is
     infectious: one segment without stats disables txn-level pruning
@@ -138,7 +124,9 @@ def merge_stats(a: dict | None, b: dict | None) -> dict | None:
 
 
 def txn_intersects(stats: dict | None, bounds: dict[str, tuple]) -> bool:
-    """Planner check: may this transaction contain rows in ``bounds``?
+    """Planner check: may this transaction contain rows in the box
+    ``bounds``? A range scan asks once per transaction; a point get asks
+    once per (transaction, key) pair, each key being its own box.
     Missing stats (or a dim absent from them) → True (cannot prune)."""
     if not stats:
         return True

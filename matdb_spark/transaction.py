@@ -29,7 +29,7 @@ from typing import TYPE_CHECKING, Iterable, Iterator, Sequence
 from pyspark.sql import DataFrame, Row, functions as F
 
 from matdb_spark import manifest
-from matdb_spark.scan import ScanSource, iterate_rows, scan_dataframe
+from matdb_spark.scan import ScanSource, _key_predicate, iterate_rows, scan_dataframe
 from matdb_spark.schema import SEQ_COL
 
 #: The packed (txn, seq) version key (scan.py) reserves 32 bits for
@@ -439,14 +439,19 @@ class Transaction:
         include_txn: bool = False,
     ) -> DataFrame:
         """Point lookups: rows whose full dimension tuple is in
-        ``keys``. Pushes down through all three pruning tiers — the
-        envelope (per-dim min..max over the key set) drives manifest
-        txn pruning + partition pruning + row-group stats, and the
-        exact key-set predicate reaches the parquet scan (In /
-        OR-of-ANDs pushdown; parquet bloom filters on dims, where
-        enabled, catch the point probes the sort order can't). The
-        key-set predicate references dim columns only, so it commutes
-        with version dedup."""
+        ``keys``. Each key is its own box for pruning: a transaction is
+        read only if its manifest stats may hold one of the keys, and of
+        its files only those in the chunk directories of the keys it
+        may hold — so 8 keys read about 8 files, not every file under
+        the key set's min..max envelope. The exact key-set predicate
+        (one SQL string for integral dims: ``IN`` for one dim, an OR of
+        ANDs otherwise) reaches the parquet scan, where row-group stats
+        and, where enabled, parquet bloom filters on dims skip what the
+        sort order can't. It references dim columns only, so it
+        commutes with version dedup. When the pruned file set is small
+        (``scan._SINGLE_TASK_MAX_FILES`` files, ``_SINGLE_TASK_MAX_BYTES``
+        bytes), versions resolve in one task: no exchange, one Spark
+        job."""
         self._check_open()
         dims = self.schema.dim_names
         # accept mappings keyed by dim name as well as positional
@@ -472,26 +477,13 @@ class Transaction:
                     )
         if not pts:
             return self.query(ordered=ordered, include_txn=include_txn).limit(0)
-        env = {
-            d: (min(p[i] for p in pts), max(p[i] for p in pts))
-            for i, d in enumerate(dims)
-        }
-        if len(dims) == 1:
-            pred = F.col(dims[0]).isin([p[0] for p in pts])
-        else:
-            pred = F.lit(False)
-            for p in pts:
-                clause = F.lit(True)
-                for i, d in enumerate(dims):
-                    clause = clause & (F.col(d) == F.lit(p[i]))
-                pred = pred | clause
         return scan_dataframe(
             self.db.spark,
             self._source(),
             ordered=ordered,
             include_txn=include_txn,
-            bounds=env,
-            predicate=pred,
+            bounds=[{d: (v, v) for d, v in zip(dims, p)} for p in pts],
+            predicate=_key_predicate(self.schema, pts),
         )
 
     def query_rows(self) -> Iterator[Row]:

@@ -7,14 +7,16 @@ at the operator level so a future edit can't drift them silently):
 - selection.importance_filter vs the two-step weights → filter →
   semi-join form (q_llm_pipeline's selection stage);
 - dedup.admit_batches (fused decide+append lifecycle) vs chaining
-  admit_batch per batch;
+  admit_batch per batch, gramless docs and an empty first batch
+  included;
 - the r9 F.expr rewrites of minhash_signatures / banded_minhash vs
   the original Column-composed forms (r9 advice item 4 — the only r9
   rewrites without a bit-identity guard);
 - the non-finite-literal validation of the similarity/OPQ from_json
   builders (r9 advice item 1);
 - stream_state_partitions' derivation (r9 verdict item 7);
-- the schema cache's LRU cap (r9 advice item 2).
+- the schema cache's LRU cap (r9 advice item 2) and its thread
+  safety.
 """
 
 from __future__ import annotations
@@ -87,8 +89,33 @@ def test_importance_filter_plan_is_exchange_free_single_scan(spark):
 
 
 # ------------------------------------------------------- admit_batches
+def _chained_admission(spark, path, docs, n_batches, batch_fn):
+    """The reference form admit_batches must match: admit_batch chained
+    per batch over one shared banding relation, admitted ids unioned
+    with their batch number."""
+    banded = D.banded_minhash(docs, "doc_id", "text", 32, 8, 3).localCheckpoint()
+    out = None
+    for b in range(n_batches):
+        in_b = batch_fn(F.col("doc_id")) == b
+        admitted = D.admit_batch(
+            spark,
+            path,
+            docs.filter(in_b),
+            "doc_id",
+            "text",
+            banded=banded.filter(in_b),
+        ).select("doc_id", F.lit(b).cast("int").alias("admitted_in_batch"))
+        out = admitted if out is None else out.union(admitted)
+    return out
+
+
 def test_admit_batches_matches_chained_admit_batch(spark, tmp_db_path):
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    # plus an empty and a 2-word doc: fewer words than shingle_n means
+    # no shingles and no banding rows, yet the doc is still admitted
+    gramless = spark.createDataFrame(
+        [(1000, ""), (1001, "two words")], "doc_id long, text string"
+    )
+    docs = load_table(spark, SF, "documents").select("doc_id", "text").union(gramless)
 
     fused_path = os.path.join(tmp_db_path, "fused_idx")
     fused = D.admit_batches(
@@ -96,27 +123,47 @@ def test_admit_batches_matches_chained_admit_batch(spark, tmp_db_path):
     )
 
     chained_path = os.path.join(tmp_db_path, "chained_idx")
-    banded = D.banded_minhash(docs, "doc_id", "text", 32, 8, 3).localCheckpoint()
-    out = None
-    for b in range(3):
-        admitted = D.admit_batch(
-            spark,
-            chained_path,
-            docs.filter(F.col("doc_id") % 3 == b),
-            "doc_id",
-            "text",
-            banded=banded.filter(F.col("doc_id") % 3 == b),
-        ).select("doc_id", F.lit(b).cast("int").alias("admitted_in_batch"))
-        out = admitted if out is None else out.union(admitted)
+    out = _chained_admission(spark, chained_path, docs, 3, lambda c: c % 3)
 
     assert fused.columns == ["doc_id", "admitted_in_batch"]
     assert _symdiff(fused, out) == 0
+    got = {r["doc_id"]: r["admitted_in_batch"] for r in fused.collect()}
+    assert got[1000] == 1000 % 3 and got[1001] == 1001 % 3
     # teeth: the lifecycle must actually reject near-dups somewhere
     assert fused.count() < docs.count()
     # the two index directories hold the same banding relation
     a = spark.read.parquet(fused_path).select("doc_id", "band", "key")
     c = spark.read.parquet(chained_path).select("doc_id", "band", "key")
     assert _symdiff(a.distinct(), c.distinct()) == 0
+
+
+@pytest.mark.parametrize(
+    "batch0",
+    [[], [(1, ""), (2, "two words")]],
+    ids=["empty", "gramless"],
+)
+def test_admit_batches_first_batch_writes_no_bands(spark, tmp_db_path, batch0):
+    """Batch 0 that appends no banding rows (no docs, or only docs too
+    short to shingle) leaves no index for batch 1 to probe."""
+    later = [
+        (10, "the quick brown fox jumps over the lazy dog"),
+        (11, "the quick brown fox jumps over the lazy dog"),
+        (12, "an entirely different sentence about parquet files"),
+    ]
+    docs = spark.createDataFrame(batch0 + later, "doc_id long, text string")
+
+    def batch_fn(c):
+        return F.when(c < 10, 0).otherwise(1)
+
+    fused = D.admit_batches(
+        spark, os.path.join(tmp_db_path, "fused"), docs, "doc_id", "text", 2, batch_fn
+    )
+    out = _chained_admission(
+        spark, os.path.join(tmp_db_path, "chained"), docs, 2, batch_fn
+    )
+    assert _symdiff(fused, out) == 0
+    want = {(i, 0) for i, _ in batch0} | {(10, 1), (12, 1)}
+    assert {(r["doc_id"], r["admitted_in_batch"]) for r in fused.collect()} == want
 
 
 def test_admit_batches_rejects_prepopulated_index(spark, tmp_db_path):
@@ -337,3 +384,102 @@ def test_schema_cache_is_lru_capped():
     finally:
         T._SCHEMA_CACHE.clear()
         T._SCHEMA_CACHE.update(saved)
+
+
+def test_schema_cache_survives_concurrent_access(monkeypatch):
+    """Concurrent streams in one session share the LRU. Pin the worst
+    interleaving: a reader is paused between its lookup hit and the
+    move_to_end that follows, while a writer fills the cache past its
+    cap and evicts that very key. Unguarded, the reader then raises
+    KeyError; guarded, the writer waits for the reader to finish."""
+    import threading
+    from collections import OrderedDict
+
+    from matdb_spark.sources import tables as T
+
+    looked_up, resume = threading.Event(), threading.Event()
+
+    class PausingLRU(OrderedDict):
+        def get(self, key, default=None):
+            out = super().get(key, default)
+            if threading.current_thread().name == "reader":
+                looked_up.set()
+                resume.wait(5)
+            return out
+
+    cache = PausingLRU((("p", i, 0), i) for i in range(4))
+    monkeypatch.setattr(T, "_SCHEMA_CACHE", cache)
+    monkeypatch.setattr(T, "_SCHEMA_CACHE_MAX", 4)
+    errors: list[BaseException] = []
+
+    def run(fn):
+        def target():
+            try:
+                fn()
+            except BaseException as e:  # noqa: BLE001 - asserted below
+                errors.append(e)
+
+        return target
+
+    def fill():
+        for i in range(4, 8):  # evicts every original key, ("p", 0, 0) first
+            T._schema_cache_put(("p", i, 0), i)
+
+    reader = threading.Thread(
+        target=run(lambda: T._schema_cache_get(("p", 0, 0))), name="reader"
+    )
+    reader.start()
+    assert looked_up.wait(5)
+    writer = threading.Thread(target=run(fill))
+    writer.start()
+    writer.join(0.5)  # finishes only if nothing guards the cache
+    resume.set()
+    reader.join(5)
+    writer.join(5)
+    assert not reader.is_alive() and not writer.is_alive()
+    assert not errors, errors
+    assert list(cache) == [("p", i, 0) for i in range(4, 8)]
+
+
+def test_schema_cache_threaded_hammer(monkeypatch):
+    """More threads than cores get and put over a cache a third the size
+    of the key set, with thread switches as frequent as the interpreter
+    allows: no call raises, every hit is the schema put for its key,
+    and the cap holds."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    from matdb_spark.sources import tables as T
+
+    monkeypatch.setattr(T, "_SCHEMA_CACHE", OrderedDict())
+    monkeypatch.setattr(T, "_SCHEMA_CACHE_MAX", 4)
+    errors: list[BaseException] = []
+
+    def hammer(seed: int) -> None:
+        try:
+            for i in range(2_000):
+                key = ("p", (seed * 5 + i) % 12, 0)
+                got = T._schema_cache_get(key)
+                if got is None:
+                    T._schema_cache_put(key, f"schema{key[1]}")
+                elif got != f"schema{key[1]}":
+                    raise AssertionError(f"{key} -> {got}")
+        except BaseException as e:  # noqa: BLE001 - asserted below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=hammer, args=(n,)) for n in range(2 * os.cpu_count())
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(T._SCHEMA_CACHE) == T._SCHEMA_CACHE_MAX

@@ -252,6 +252,92 @@ def test_point_lookup_pushdown(spark, tmp_path_factory):
     assert "In(k" in pf.replace(" ", "") or "EqualTo(k" in pf.replace(" ", ""), pf
 
 
+def _twelve_txn_store(spark, base, rewrite=False):
+    """12 txns of 10 ticks x 16 sensors (4 files each, ``v = t % 10 +
+    10 * s``); with ``rewrite``, txn i >= 1 also rewrites the last tick
+    of txn i - 1 (``t = i * 10 - 1``) with ``v = -t``."""
+    db = Database.create(
+        spark, os.path.join(base, "db"),
+        Schema(dimensions=[Dimension("t", 4096), Dimension("s", 4)], values=[Value("v")]),
+    )
+    for i in range(12):
+        with db.begin() as t:
+            df = spark.range(160).selectExpr(
+                f"{i * 10} + id % 10 AS t", "id div 10 AS s", "id AS v"
+            )
+            if rewrite and i:
+                df = df.unionByName(
+                    spark.range(16).selectExpr(f"{i * 10 - 1} AS t", "id AS s", f"{1 - i * 10} AS v")
+                )
+            t.add_dataframe(df)
+            t.commit()
+    return db
+
+
+def _one_group(spark, group, build):
+    """Build and collect ``build()`` under job group ``group``; return
+    (df, rows, ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, rows, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_point_get_is_one_job_without_exchange(spark, tmp_path_factory):
+    """An 8-key point get on a 12-txn store prunes per key (one file per
+    key, not every file under the key set's envelope) and resolves
+    versions in one task: no exchange, one Spark job, build included."""
+    db = _twelve_txn_store(spark, str(tmp_path_factory.mktemp("ptjob")))
+    keys = [(i * 10 + i % 10, (5 * i) % 16) for i in (0, 1, 3, 4, 6, 8, 9, 11)]
+
+    df, rows, jobs = _one_group(
+        spark, "point-get-plan", lambda: db.begin().query_points(keys)
+    )
+
+    assert [(r.t, r.s) for r in rows] == sorted(keys)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert len(jobs) == 1, jobs
+    assert len(df.inputFiles()) <= 8
+
+
+def test_small_range_read_is_one_job_without_exchange(spark, tmp_path_factory, monkeypatch):
+    """A key range over a few small files takes the point get's
+    single-task plan: newest versions win, rows come back in key order,
+    no exchange, one Spark job. Past the byte cap the same read keeps
+    the parallel plan and the same rows."""
+    from matdb_spark import scan
+
+    db = _twelve_txn_store(spark, str(tmp_path_factory.mktemp("rgjob")), rewrite=True)
+    # t 15..34 lies in txns 1-3 (txn 4 starts at its rewrite of t = 39);
+    # s 4..7 is one s chunk, so one file per txn
+    bounds = {"t": (15, 34), "s": (4, 7)}
+    want = [
+        (t, s, -t if t % 10 == 9 else t % 10 + 10 * s)
+        for t in range(15, 35)
+        for s in range(4, 8)
+    ]
+
+    df, rows, jobs = _one_group(
+        spark, "range-read-plan", lambda: db.begin().query_range(bounds)
+    )
+    assert [(r.t, r.s, r.v) for r in rows] == want
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert len(jobs) == 1, jobs
+    assert len(df.inputFiles()) == 3
+
+    monkeypatch.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+    wide = db.begin().query_range(bounds)
+    assert [(r.t, r.s, r.v) for r in wide.collect()] == want
+    assert "Exchange" in wide._jdf.queryExecution().executedPlan().toString()
+
+
 def test_simhash_is_exchange_free(spark):
     """simhash64 computes the whole fingerprint per row (tokenize →
     hash array → per-bit counts) — no explode, no groupBy, so the plan
