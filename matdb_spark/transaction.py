@@ -14,6 +14,10 @@ Two write paths:
   no driver materialization, arbitrarily large inputs. This replaces
   the reference example's parser-threads→channel→writer pipeline
   (examples/sensor-log.rs:241-305) with Spark's own parallelism.
+  A small generated input (at most ``scan._SINGLE_TASK_MAX_BYTES`` by
+  Spark's estimate) skips the chunk exchange and is written by one
+  task, in one Spark job, like the reference's one writer per flush
+  (segment.rs:30-46).
 
 Every row carries a write sequence (``__seq``): within a transaction
 the newest sequence wins at scan time, faithfully producing the
@@ -28,8 +32,14 @@ from typing import TYPE_CHECKING, Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Row, functions as F
 
-from matdb_spark import manifest
-from matdb_spark.scan import ScanSource, _key_predicate, iterate_rows, scan_dataframe
+from matdb_spark import manifest, scan
+from matdb_spark.scan import (
+    ScanSource,
+    _chunked,
+    _key_predicate,
+    iterate_rows,
+    scan_dataframe,
+)
 from matdb_spark.schema import SEQ_COL
 
 #: The packed (txn, seq) version key (scan.py) reserves 32 bits for
@@ -45,6 +55,25 @@ _MANIFEST_FILES_CAP = 20_000
 
 if TYPE_CHECKING:
     from matdb_spark.database import Database
+
+
+def _small_write(df: DataFrame) -> bool:
+    """Is ``df`` small enough to write as one task? Spark's own size
+    estimate of the analyzed plan (no job) must be at most
+    ``scan._SINGLE_TASK_MAX_BYTES``, and every leaf must be generated
+    in memory (``Range``, ``LocalRelation``, ``OneRowRelation``), whose
+    estimate is the rows' in-memory size. File and source scans are
+    estimated at their compressed on-disk bytes, far below the rows
+    they decode to, so compaction, MERGE and UPDATE inputs never
+    qualify; Python-row frames (``LogicalRDD``) estimate as unbounded."""
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    if not all(
+        leaves.apply(i).nodeName() in ("Range", "LocalRelation", "OneRowRelation")
+        for i in range(leaves.size())
+    ):
+        return False
+    return plan.stats().sizeInBytes() <= scan._SINGLE_TASK_MAX_BYTES
 
 
 class Transaction:
@@ -272,7 +301,10 @@ class Transaction:
           schema.rs:28-38);
         - repartition by chunk before writing so each chunk's rows are
           produced by few tasks (bounded file counts at scale; AQE
-          coalesces tiny outputs locally);
+          coalesces tiny outputs locally) — unless the input is small
+          (``_small_write``): then one task writes every chunk dir, in
+          one job with no exchange, and each chunk dir still gets one
+          file holding the same rows in the same order;
         - sort within partitions by key so Parquet row-group min/max
           stats act as the reference's zone maps (block.rs:210-232).
         """
@@ -281,8 +313,6 @@ class Transaction:
         seg_dir = f"{manifest.txn_data_dir(self.db.path, txn)}/seg={seg}"
 
         schema = self.schema
-        from matdb_spark.scan import _chunked
-
         # Canonicalize column types so every segment file carries the
         # exact declared schema — mixed int/long inputs must not create
         # per-segment parquet schema drift (breaks multi-segment scans).
@@ -296,7 +326,11 @@ class Transaction:
         # a layout choice; chunk routing always stays outermost so
         # partition pruning is unaffected.
         sort_cols = chunk_cols + list(cluster_by or schema.dim_names)
-        if cluster_by is not None:
+        if (chunk_cols or cluster_by is not None) and _small_write(out):
+            # One partition already satisfies both exchanges below: the
+            # sort then routes every chunk's rows into one file.
+            out = out.coalesce(1)
+        elif cluster_by is not None:
             # Clustered rewrite: RANGE-partition on (chunks, cluster
             # key) so the clustering is GLOBAL — every task (hence
             # every file) owns a contiguous cluster-key range. A hash

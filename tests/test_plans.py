@@ -114,6 +114,13 @@ def test_compacted_scan_is_dedup_free(spark):
     assert exchange_count(rng) == 0
     assert "__chunk_t" in " ".join(partition_filters(rng))
     assert rng.count() == 100 * 5
+    # an empty commit adds no rows, so the read stays dedup-free
+    t3 = db.begin()
+    t3.add_dataframe(spark.range(0).selectExpr("id AS t", "id AS sensor", "id AS v"))
+    t3.commit()
+    after_empty = db.begin().query(ordered=False)
+    assert exchange_count(after_empty) == 0
+    assert {tuple(r) for r in after_empty.collect()} == before
 
     # guard 1: a commit after the compaction restores the dedup agg
     t4 = db.begin()
@@ -274,18 +281,29 @@ def _twelve_txn_store(spark, base, rewrite=False):
     return db
 
 
-def _one_group(spark, group, build):
-    """Build and collect ``build()`` under job group ``group``; return
-    (df, rows, ids of the Spark jobs it ran)."""
+def _group_jobs(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; return (its result, ids
+    of the Spark jobs it ran)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        df = build()
-        rows = df.collect()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return df, rows, sc.statusTracker().getJobIdsForGroup(group)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _one_group(spark, group, build):
+    """Build and collect ``build()`` under job group ``group``; return
+    (df, rows, ids of the Spark jobs it ran)."""
+
+    def run():
+        df = build()
+        return df, df.collect()
+
+    (df, rows), jobs = _group_jobs(spark, group, run)
+    return df, rows, jobs
 
 
 def test_point_get_is_one_job_without_exchange(spark, tmp_path_factory):
@@ -336,6 +354,71 @@ def test_small_range_read_is_one_job_without_exchange(spark, tmp_path_factory, m
     wide = db.begin().query_range(bounds)
     assert [(r.t, r.s, r.v) for r in wide.collect()] == want
     assert "Exchange" in wide._jdf.queryExecution().executedPlan().toString()
+
+
+def _commit_plans(spark, db, df, group):
+    """Commit ``df`` as one txn under job group ``group``; return (ids
+    of the Spark jobs it ran, physical plans of their SQL executions)."""
+
+    def run():
+        with db.begin() as t:
+            t.add_dataframe(df)
+            t.commit()
+
+    _, jobs = _group_jobs(spark, group, run)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+    return jobs, plans
+
+
+def _files_per_chunk_dir(db_path):
+    """{chunk dir relative to the txn dir: parquet files in it}."""
+    out = {}
+    for root, _, files in os.walk(os.path.join(db_path, "data")):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            out[root.split("/seg=0/", 1)[1]] = n
+    return out
+
+
+def test_small_commit_is_one_job_without_exchange(spark, tmp_path_factory, monkeypatch):
+    """A small generated frame commits in one Spark job with no
+    exchange: one task writes every chunk dir, one file each. Past the
+    byte cap, or from a parquet source (whose size estimate is its
+    compressed bytes), the same commit keeps the chunk exchange, with
+    the same rows and layout."""
+    from matdb_spark import scan
+
+    base = str(tmp_path_factory.mktemp("smallcommit"))
+    schema = Schema(dimensions=[Dimension("t", 100), Dimension("s", 1)], values=[Value("v")])
+    # t 0..199 x s 0..1: four chunk dirs
+    frame = spark.range(400).selectExpr("id % 200 AS t", "id div 200 AS s", "id AS v")
+    want = [(i % 200, i // 200, i) for i in sorted(range(400), key=lambda i: (i % 200, i // 200))]
+    layout = {f"__chunk_t={ct}/__chunk_s={cs}": 1 for ct in (0, 1) for cs in (0, 1)}
+
+    def commit(name, df):
+        db = Database.create(spark, os.path.join(base, name), schema)
+        jobs, plans = _commit_plans(spark, db, df, f"commit-{name}")
+        assert [(r.t, r.s, r.v) for r in db.begin().query().collect()] == want
+        assert _files_per_chunk_dir(db.path) == layout
+        return jobs, plans
+
+    jobs, plans = commit("small", frame)
+    assert len(jobs) == 1, jobs
+    assert plans and not any("Exchange" in p for p in plans), plans
+
+    pq = os.path.join(base, "frame.parquet")
+    frame.write.parquet(pq)
+    _, plans = commit("parquet", spark.read.parquet(pq))
+    assert any("Exchange" in p for p in plans), plans
+
+    monkeypatch.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+    _, plans = commit("capped", frame)
+    assert any("Exchange" in p for p in plans), plans
 
 
 def test_simhash_is_exchange_free(spark):
