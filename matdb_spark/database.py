@@ -72,10 +72,21 @@ class Database:
         protocol for free (immutable segments + per-txn manifests);
         they remain readable until ``vacuum()`` garbage-collects
         segments superseded by a later compaction. The reference
-        cannot express this (its visibility is always "now")."""
+        cannot express this (its visibility is always "now").
+
+        One ``_commits`` listing resolves the snapshot
+        (``manifest.resolve``) and fixes the current horizon, which
+        covers every commit visible ON DISK right now, not just those
+        this handle made. The reference's horizon is its in-memory
+        next-id counter (database.rs:68-72) — correct for an embedded
+        single-process store, but with multiple handles or processes
+        sharing one path a handle-local counter goes stale and a
+        'current' snapshot would silently miss foreign commits (found
+        by the auto-compact concurrency soak)."""
+        snap = manifest.resolve(self.path, None if as_of is None else as_of + 1)
+        horizon = max(self.next_txn_id, max(snap.committed, default=0) + 1)
         if as_of is None:
-            return Transaction(self, horizon=self._current_horizon())
-        horizon = self._current_horizon()
+            return Transaction(self, snap, horizon)
         if as_of >= horizon:
             raise ValueError(f"as_of={as_of} is in the future (next txn {horizon})")
         # Fail LOUDLY when the historical snapshot is no longer
@@ -91,20 +102,7 @@ class Database:
                 f"{gone} were superseded by a later compaction and vacuumed "
                 f"away; historical reads are valid only until vacuum"
             )
-        return Transaction(self, horizon=as_of + 1, read_only=True)
-
-    def _current_horizon(self) -> int:
-        """Snapshot horizon covering every commit visible ON DISK right
-        now, not just those this handle made. The reference's horizon
-        is its in-memory next-id counter (database.rs:68-72) — correct
-        for an embedded single-process store, but with multiple handles
-        or processes sharing one path a handle-local counter goes stale
-        and a 'current' snapshot would silently miss foreign commits
-        (found by the auto-compact concurrency soak). One directory
-        listing; the manifest sweep that follows reads the same
-        listing anyway."""
-        committed = manifest.committed_txn_ids(self.path)
-        return max(self.next_txn_id, max(committed, default=0) + 1)
+        return Transaction(self, snap, as_of + 1, read_only=True)
 
     def allocate_txn_id(self) -> int:
         """Lazy txn-id allocation at first flush
@@ -226,14 +224,15 @@ class Database:
     def add_value_column(self, name: str, type: str = "long") -> None:
         """Grow the VALUE set (additive schema evolution — the one
         evolution the storage layout supports without rewrite).
-        Existing segments simply lack the column; scans of an evolved
-        store merge parquet footers and read it as null, so history
-        stays fully queryable. Dimensions cannot change: they are the
-        physical key (chunk routing, sort, dedup identity).
+        Existing segments simply lack the column; scans read with the
+        catalog schema (``scan._read_schema``, no footer merge), so
+        older files read it as typed null and history stays fully
+        queryable. Dimensions cannot change: they are the physical key
+        (chunk routing, sort, dedup identity).
 
         New transactions must supply the column (``add_dataframe``
         selects the full schema); a compaction after evolution rewrites
-        everything to the current schema, clearing the merge cost.
+        everything to the current schema.
         """
         from matdb_spark.schema import Schema as _S, Value as _V
 
@@ -335,12 +334,8 @@ class Database:
             raise ValueError(f"max_txns={max_txns}; folding needs at least 2 txns")
         if fold not in ("oldest", "newest"):
             raise ValueError(f"fold={fold!r}; expected 'oldest' or 'newest'")
-        visible = m.visible_txn_ids(self.path, self._current_horizon())
-
-        def _eff(t: int) -> int:
-            return m.effective_version(self.path, t)
-
-        by_version = sorted(visible, key=_eff)
+        snap = m.resolve(self.path)
+        by_version = sorted(snap.txns, key=snap.rank)
         if max_txns is None:
             window = by_version
         elif fold == "oldest":
@@ -349,18 +344,16 @@ class Database:
             window = by_version[-max_txns:]
         if len(window) < 2:
             return None
-        rank = max(_eff(t) for t in window)
+        rank = max(snap.rank(t) for t in window)
         # Downward-closed folds (start at the oldest visible version)
         # may drop tombstones for good — there is nothing older left to
         # resurrect. An interior/newest window must KEEP them: a
         # tombstone in the window shadows versions below it.
         downward_closed = window[0] == by_version[0]
-        src = ScanSource(
-            db_path=self.path, schema=self.schema, visible_txns=sorted(window)
-        )
-        snap = scan_dataframe(
+        pinned = snap.restrict(sorted(window))
+        rewrite = scan_dataframe(
             self.spark,
-            src,
+            ScanSource(snapshot=pinned, schema=self.schema),
             ordered=False,
             cell_merge=(resolution == "cell"),
             drop_null_value_rows=downward_closed,
@@ -373,27 +366,26 @@ class Database:
             # every folded txn carries them (zero Spark jobs); the
             # snapshot aggregation — a full extra scan+dedup pass — is
             # only the fallback for stats-less stores.
-            bounds = self._stats_bounds(window)
+            bounds = self._stats_bounds(pinned)
             if bounds is not None:
                 cluster_by = [zorder_key_from_bounds(self.schema, bounds)]
             else:
-                cluster_by = [zorder_key(snap, self.schema)]
+                cluster_by = [zorder_key(rewrite, self.schema)]
         # Context manager: a failed rewrite (Spark job error mid-write)
         # must roll back, or the leaked reservation + staged dir pin
         # safe_feed_head and block every later downward-closed
         # compaction as a phantom pending conflict.
         with self.begin() as txn:
             return self._finish_compaction(
-                txn, snap, cluster_by, window, rank, downward_closed
+                txn, rewrite, cluster_by, pinned, rank, downward_closed
             )
 
     def _finish_compaction(
-        self, txn, snap, cluster_by, window, rank, downward_closed
+        self, txn, rewrite, cluster_by, window, rank, downward_closed
     ) -> int | None:
+        """Write and publish the rewrite of ``window`` (the compaction's
+        pinned Snapshot), unless a concurrent writer conflicts."""
         from matdb_spark import manifest as m
-
-        def _eff(t: int) -> int:
-            return m.effective_version(self.path, t)
 
         # Declare the covered interval on our reservation BEFORE the
         # (long) rewrite job: a reservation id alone cannot reveal a
@@ -402,12 +394,12 @@ class Database:
         # would both pass the pending test and both publish — a
         # redundant rollup, and a vacuum between the two publishes
         # deletes window files the loser's rewrite is still scanning.
-        lo_eff = min(_eff(t) for t in window)
+        lo_eff = min(window.rank(t) for t in window.txns)
         my_id = txn._ensure_txn_id()
         m.write_reservation_intent(
             self.path, my_id, {"op": "compact", "lo": lo_eff, "rank": rank}
         )
-        txn.add_dataframe(snap, cluster_by=cluster_by)
+        txn.add_dataframe(rewrite, cluster_by=cluster_by)
         # Pre-publish conflict check. The rewrite shadows, for its
         # keys, every effective version <= rank — so an un-folded txn
         # whose version lands INSIDE the interval would lose data.
@@ -420,13 +412,14 @@ class Database:
         # pin commits always carry ids above the rank and are safe.
         floor = None if downward_closed else lo_eff
         # READ ORDER MATTERS: pending ids and intents FIRST, committed
-        # manifests LAST. A competitor is pending (reservation +
-        # intent) until it publishes, and releases its reservation only
-        # AFTER publishing — so a competitor absent from our
-        # pending/intent snapshots has already published and must show
-        # up in the later committed read. Snapshotting committed first
-        # would open a gap (competitor publishes + releases between the
-        # two reads) in which it is invisible to all three tests.
+        # manifests LAST — a FRESH snapshot, never the pinned window. A
+        # competitor is pending (reservation + intent) until it
+        # publishes, and releases its reservation only AFTER publishing
+        # — so a competitor absent from our pending/intent snapshots
+        # has already published and must show up in the later committed
+        # read. Snapshotting committed first would open a gap
+        # (competitor publishes + releases between the two reads) in
+        # which it is invisible to all three tests.
         pending = {t for t in m.outstanding_txn_ids(self.path) if t != my_id}
         # A concurrent COMPACTION's reservation id is always above the
         # rank, so the pending-id interval test cannot see it; its
@@ -437,8 +430,7 @@ class Database:
         # committed-interval test catches its published rollup
         # instead).
         intents = m.read_reservation_intents(self.path)
-        committed_now = set(m.committed_txn_ids(self.path))
-        superseded = m.replaced_txn_ids(self.path)
+        now = m.resolve(self.path)
         compact_conflicts = {
             t
             for t, info in intents.items()
@@ -453,11 +445,11 @@ class Database:
         conflicts = (
             {
                 t
-                for t in committed_now
-                if t not in window
-                and t not in superseded
-                and _eff(t) <= rank
-                and (floor is None or _eff(t) >= floor)
+                for t in now.committed
+                if t not in window.txns
+                and t not in now.replaced
+                and now.rank(t) <= rank
+                and (floor is None or now.rank(t) >= floor)
             }
             | {t for t in pending if t <= rank and (floor is None or t >= floor)}
             | compact_conflicts
@@ -479,8 +471,7 @@ class Database:
             # missing_feed_content) see through chains even after
             # intermediates are vacuumed
             "covers_lo": min(
-                m.covers_lo_value(m.read_manifest_cached(self.path, t), t)
-                for t in window
+                m.covers_lo_value(window.manifests[t], t) for t in window.txns
             ),
         }
         # Carry streaming replay-suppression records forward: the
@@ -489,8 +480,8 @@ class Database:
         # delete those manifests. Without the carry, a replayed old
         # batch would re-commit as a duplicate transaction.
         carried: dict[str, int] = {}
-        for t in window:
-            mf = m.read_manifest_cached(self.path, t)
+        for t in window.txns:
+            mf = window.manifests[t]
             if mf.get("stream_source") is not None and "batch_id" in mf:
                 s = mf["stream_source"]
                 carried[s] = max(carried.get(s, -1), int(mf["batch_id"]))
@@ -498,17 +489,16 @@ class Database:
                 carried[s] = max(carried.get(s, -1), int(b))
         if carried:
             extra["stream_batch_ids"] = carried
-        txn.commit(replaces=sorted(window), extra=extra)
+        txn.commit(replaces=window.txns, extra=extra)
         return txn.txn_id
 
-    def _stats_bounds(self, txns: list[int]) -> dict[str, tuple] | None:
-        """Merge per-txn manifest stats into {dim: (lo, hi)} covering
-        every dimension, or None if any txn/dim lacks stats."""
-        from matdb_spark import manifest as m
-
+    def _stats_bounds(self, snap: "manifest.Snapshot") -> dict[str, tuple] | None:
+        """Merge the manifest stats of ``snap``'s txns into {dim: (lo,
+        hi)} covering every dimension, or None if any txn/dim lacks
+        stats."""
         bounds: dict[str, tuple] = {}
-        for t in txns:
-            stats = m.read_manifest_cached(self.path, t).get("stats") or {}
+        for t in snap.txns:
+            stats = snap.stats(t) or {}
             dims = stats.get("dims") or {}
             for d in self.schema.dimensions:
                 rng = dims.get(d.name)
@@ -532,9 +522,9 @@ class Database:
         from matdb_spark import manifest as m
 
         cutoff = _time.time() - min_age_seconds
+        snap = m.resolve(self.path)
         eligible: set[int] = set()
-        for t in m.committed_txn_ids(self.path):
-            mf = m.read_manifest_cached(self.path, t)
+        for mf in snap.manifests.values():
             if mf.get("replaces") and mf.get("committed_at", 0) <= cutoff:
                 eligible.update(mf["replaces"])
         # Hold back files an IN-FLIGHT compaction is still scanning: a
@@ -544,21 +534,16 @@ class Database:
         # The hold lapses with the reservation (publish, rollback, or
         # recover sweep) — safety over immediacy, same as
         # safe_feed_head.
+        intents = m.read_reservation_intents(self.path)
+        pending = m.outstanding_txn_ids(self.path) if intents else set()
         holds = [
             (int(i.get("lo", 0)), int(i.get("rank", 0)))
-            for t, i in m.read_reservation_intents(self.path).items()
-            if i.get("op") == "compact" and t in m.outstanding_txn_ids(self.path)
+            for t, i in intents.items()
+            if i.get("op") == "compact" and t in pending
         ]
-        if holds:
-
-            def _eff(t: int) -> int:
-                return m.effective_version(self.path, t)
-
-            eligible = {
-                t
-                for t in eligible
-                if not any(lo <= _eff(t) <= hi for lo, hi in holds)
-            }
+        eligible = {
+            t for t in eligible if not any(lo <= snap.rank(t) <= hi for lo, hi in holds)
+        }
         removed = sorted(eligible)
         pruned_removed: set[int] = set()
         for t in removed:
@@ -585,8 +570,7 @@ class Database:
         batch stamps, and the txn-level stats zone map. Metadata-only
         (one manifest read per commit, no data access)."""
         out = []
-        for t in manifest.committed_txn_ids(self.path):
-            m = manifest.read_manifest_cached(self.path, t)
+        for t, m in manifest.resolve(self.path).manifests.items():
             out.append(
                 {
                     "txn": t,
@@ -628,12 +612,11 @@ class Database:
         and bytes. O(files) listing — cheap next to any query."""
         from matdb_spark import manifest as m
 
-        committed = m.committed_txn_ids(self.path)
-        visible = m.visible_txn_ids(self.path, self._current_horizon())
+        snap = m.resolve(self.path)
         n_files = 0
         n_bytes = 0
         n_segments = 0
-        for t in visible:
+        for t in snap.txns:
             d = m.txn_data_dir(self.path, t)
             for root, dirs, files in os.walk(d):
                 n_segments += sum(1 for x in dirs if x.startswith("seg="))
@@ -642,10 +625,10 @@ class Database:
                         n_files += 1
                         n_bytes += os.path.getsize(os.path.join(root, f))
         return {
-            "committed_txns": len(committed),
-            "visible_txns": len(visible),
+            "committed_txns": len(snap.committed),
+            "visible_txns": len(snap.txns),
             # superseded txns whose data still exists (i.e. vacuumable)
-            "replaced_txns": len(m.replaced_txn_ids(self.path) & set(committed)),
+            "replaced_txns": len(snap.replaced & set(snap.committed)),
             "segments": n_segments,
             "data_files": n_files,
             "data_bytes": n_bytes,
@@ -659,7 +642,7 @@ class Database:
         include_compactions: bool = False,
         with_preimage: bool = False,
         resolution: str = "row",
-        _window: list[int] | None = None,
+        _window: "manifest.Snapshot | None" = None,
     ) -> "DataFrame":
         """Change feed (CDC): the NET effect of the commits in
         ``(since, until]`` — for every key written in that window, its
@@ -740,15 +723,14 @@ class Database:
         # window for this exact (since, hi) — recomputing would double
         # the per-poll manifest sweep
         window = (
-            self._change_window_txns(since, hi, include_compactions)
+            self._change_window(since, hi, include_compactions)
             if _window is None
             else _window
         )
-        src = ScanSource(db_path=self.path, schema=self.schema, visible_txns=window)
         cell = resolution == "cell"
         df = scan_dataframe(
             self.spark,
-            src,
+            ScanSource(snapshot=window, schema=self.schema),
             ordered=False,
             include_txn=True,
             drop_null_value_rows=False,  # row mode: tombstones ARE the deletes
@@ -779,7 +761,7 @@ class Database:
                 f"with_preimage=True aliases pre-images as old_<col>, which "
                 f"collides with existing column(s) {clash!r}; rename them"
             )
-        if since >= 1 and m.committed_txn_ids(self.path):
+        if since >= 1 and window.committed:
             from matdb_spark.transaction import Transaction
 
             # same loud-failure rule as begin(as_of): a vacuumed
@@ -793,7 +775,8 @@ class Database:
                     f"later compaction and vacuumed away; re-sync from a "
                     f"full snapshot instead"
                 )
-            pre_txn = Transaction(self, horizon=since + 1, read_only=True)
+            pre_snap = m.resolve(self.path, since + 1)
+            pre_txn = Transaction(self, pre_snap, since + 1, read_only=True)
             # Prune the pre-image scan to the CHANGED KEYS' envelope,
             # taken from the window txns' manifest stats: the snapshot
             # side then skips whole txns / partitions / row groups
@@ -827,19 +810,18 @@ class Database:
         )
         return df.withColumn("change_type", refined).drop("__pre")
 
-    def _change_window_txns(
+    def _change_window(
         self, since: int, until: int, include_compactions: bool
-    ) -> list[int]:
-        """Committed txns in (since, until] that carry feed content
-        (compaction rewrites excluded unless opted in). Raises when the
-        window's content was vacuumed away — a compaction manifest
-        replaces ids inside the window whose own manifests no longer
-        exist — instead of silently returning an incomplete feed.
-        Manifests are immutable, so reads go through the cache (a tail
-        loop would otherwise re-open every manifest each poll)."""
+    ) -> "manifest.Snapshot":
+        """The current snapshot restricted to the committed txns in
+        (since, until] that carry feed content
+        (``Snapshot.feed_window``). Raises when the window's content was
+        vacuumed away — a compaction manifest replaces ids inside the
+        window whose own manifests no longer exist — instead of
+        silently returning an incomplete feed."""
         from matdb_spark import manifest as m
 
-        committed = set(m.committed_txn_ids(self.path))
+        snap = m.resolve(self.path)
         if not include_compactions:
             # covers_lo-aware chain walk: a vacuumed INTERMEDIATE
             # rollup must not hide that window commits are gone (the
@@ -853,16 +835,7 @@ class Database:
                     f"away; re-sync from a snapshot or pass "
                     f"include_compactions=True"
                 )
-        window = []
-        for t in sorted(committed):
-            if not (since < t <= until):
-                continue
-            if not include_compactions and (
-                m.read_manifest_cached(self.path, t).get("replaces")
-            ):
-                continue
-            window.append(t)
-        return window
+        return snap.feed_window(since, until, include_compactions)
 
     def follow_changes(
         self,
@@ -906,11 +879,11 @@ class Database:
             while max_empty_polls is None or empty < max_empty_polls:
                 newest = m.safe_feed_head(self.path)
                 win = (
-                    self._change_window_txns(cursor, newest, include_compactions)
+                    self._change_window(cursor, newest, include_compactions)
                     if newest > cursor
-                    else []
+                    else None
                 )
-                if win:
+                if win is not None and win.txns:
                     df = self.changes(
                         since=cursor,
                         until=newest,

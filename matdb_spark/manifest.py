@@ -15,8 +15,9 @@ atomic on object stores, so the Spark-native equivalent (SURVEY §3.3,
 
 Snapshot resolution (reference: database.rs:68-72, :85-89 — horizon =
 next txn id; a txn sees segments with id < horizon) becomes: list
-``_commits/``, keep manifests with ``txn < horizon``. The resolved
-*file list* is pinned at transaction start, so a Scan DataFrame is a
+``_commits/``, keep manifests with ``txn < horizon`` (``resolve``). The
+resulting ``Snapshot`` — visible txns plus their manifests, file lists
+included — is pinned at transaction start, so a Scan DataFrame is a
 true snapshot even under Spark's lazy evaluation (SURVEY §7.4.2).
 
 Scale note: manifests are O(1) driver-side metadata — a listing of
@@ -27,6 +28,7 @@ distributes. Nothing here touches row-level data on the driver.
 
 from __future__ import annotations
 
+import dataclasses as _dataclasses
 import functools as _functools
 import json
 import os
@@ -128,12 +130,13 @@ def read_manifest(db_path: str, txn_id: int) -> dict:
 def read_manifest_cached(db_path: str, txn_id: int) -> dict:
     """Cached manifest read — safe because a published manifest is
     immutable (the protocol's atomic point is the rename; content
-    never changes afterward). Used on EVERY manifest-sweep path
-    (snapshot resolution, stats pruning, file-set resolution, history,
-    vacuum eligibility). maxsize is deliberately small: a manifest can
-    carry up to ~20k file paths (~2 MB JSON), so a large cache could
-    pin gigabytes on the driver; 256 entries covers the visible-txn
-    sweep of a healthy store while bounding worst-case retention.
+    never changes afterward). ``resolve`` reads every manifest of a
+    ``Snapshot`` through it, once; stats pruning, file-set resolution,
+    history and vacuum eligibility then read the dicts the snapshot
+    holds. maxsize is deliberately small: a manifest can carry up to
+    ~20k file paths (~2 MB JSON), so a large cache could pin gigabytes
+    on the driver; 256 entries covers the sweep of a healthy store
+    while bounding worst-case retention.
 
     On miss, the newest CHECKPOINT (folded manifest map, ``_CK_HINT``
     — refreshed by the listing every sweep starts with) is consulted
@@ -414,30 +417,80 @@ def prune_manifest_log(
     return sorted(eligible + leftovers)
 
 
+@_dataclasses.dataclass(frozen=True)
+class Snapshot:
+    """One resolved snapshot (``resolve``): the visible txns — committed
+    ids below the horizon, minus every id a visible compaction lists in
+    ``replaces`` (reference: database.rs:85-89; a later compaction's
+    list includes every earlier id it absorbed, so chains resolve) —
+    and the manifest of each committed txn below the horizon. Scans,
+    the DSv2 reader and maintenance read snapshot facts only from this
+    value. ``manifests`` holds the cached dicts, not copies: read-only."""
+
+    db_path: str
+    committed: list[int]  # every committed id, ascending (the listing)
+    txns: list[int]  # visible: committed, below the horizon, not replaced
+    replaced: frozenset[int]  # superseded by a compaction below the horizon
+    manifests: dict[int, dict]  # committed id below the horizon -> manifest
+
+    def stats(self, t: int) -> dict | None:
+        return self.manifests[t].get("stats")
+
+    def files(self, t: int) -> list[str] | None:
+        """Data files relative to the txn dir: None = not recorded
+        (legacy or capped manifest — list the dir), [] = empty commit."""
+        return self.manifests[t].get("files")
+
+    def unique_keys(self, t: int) -> bool:
+        return bool(self.manifests[t].get("unique_keys"))
+
+    def rank(self, t: int) -> int:
+        """The version rank resolution compares: a rollup's recorded
+        ``version_rank`` (the top of its covered interval), else the
+        physical id. THE single interpretation — scans, compaction
+        window selection, conflict checks and vacuum holds all share
+        it. An id the snapshot does not hold (vacuumed, or above the
+        horizon) ranks as its physical id, which is conservative for
+        the hold checks."""
+        m = self.manifests.get(t)
+        return t if m is None else int(m.get("version_rank", t))
+
+    def restrict(self, txns) -> "Snapshot":
+        """The same snapshot reading only ``txns`` (a compaction window
+        or a change-feed window)."""
+        return _dataclasses.replace(self, txns=list(txns))
+
+    def feed_window(
+        self, lo: int, hi: int, include_compactions: bool = False
+    ) -> "Snapshot":
+        """The change-feed window ``(lo, hi]``: committed txns in it,
+        without compaction rewrites (``replaces``) unless opted in."""
+        return self.restrict(
+            t
+            for t in self.committed
+            if lo < t <= hi
+            and (include_compactions or not self.manifests[t].get("replaces"))
+        )
+
+
+def resolve(db_path: str, horizon: int | None = None) -> Snapshot:
+    """Resolve the snapshot at ``horizon`` (None: every committed txn)
+    from ONE ``committed_txn_ids`` listing and one
+    ``read_manifest_cached`` call per committed txn below it."""
+    committed = committed_txn_ids(db_path)
+    manifests = {
+        t: read_manifest_cached(db_path, t)
+        for t in committed
+        if horizon is None or t < horizon
+    }
+    replaced = frozenset(r for m in manifests.values() for r in m.get("replaces", []))
+    txns = sorted(set(manifests) - replaced)
+    return Snapshot(db_path, committed, txns, replaced, manifests)
+
+
 def visible_txn_ids(db_path: str, horizon: int) -> list[int]:
-    """Snapshot rule from the reference (database.rs:85-89): committed
-    txn ids strictly below the horizon — minus any txns superseded by a
-    visible compaction (its manifest lists them in ``replaces``; the
-    compacted segment carries their merged content). Chained
-    compactions resolve naturally: a later compaction's replaces list
-    includes every earlier id it absorbed, compactions included."""
-    visible = set()
-    replaced: set[int] = set()
-    for t in committed_txn_ids(db_path):
-        if t >= horizon:
-            continue
-        visible.add(t)
-        m = read_manifest_cached(db_path, t)
-        replaced.update(m.get("replaces", []))
-    return sorted(visible - replaced)
-
-
-def replaced_txn_ids(db_path: str) -> set[int]:
-    """Every txn superseded by any committed compaction (vacuum set)."""
-    out: set[int] = set()
-    for t in committed_txn_ids(db_path):
-        out.update(read_manifest_cached(db_path, t).get("replaces", []))
-    return out
+    """The visible txn ids below ``horizon`` (``resolve(...).txns``)."""
+    return resolve(db_path, horizon).txns
 
 
 def staged_txn_ids(db_path: str) -> list[int]:
@@ -632,8 +685,7 @@ def max_committed_batch_id(db_path: str, source: str) -> int | None:
     post-crash replay of an old batch would no longer be recognized
     (and would re-commit as a duplicate transaction)."""
     best: int | None = None
-    for t in committed_txn_ids(db_path):
-        m = read_manifest_cached(db_path, t)
+    for m in resolve(db_path).manifests.values():
         cands = []
         if m.get("stream_source") == source and "batch_id" in m:
             cands.append(int(m["batch_id"]))
@@ -644,20 +696,6 @@ def max_committed_batch_id(db_path: str, source: str) -> int | None:
             if best is None or b > best:
                 best = b
     return best
-
-
-def effective_version(db_path: str, txn_id: int) -> int:
-    """The version rank resolution compares: a rollup's recorded
-    ``version_rank`` (the top of its covered interval), else the
-    physical txn id. THE single interpretation — compaction window
-    selection, conflict checks, and vacuum holds must all share it.
-    A vacuumed/unreadable manifest falls back to the physical id
-    (conservative for the hold checks that tolerate missing files)."""
-    try:
-        mf = read_manifest_cached(db_path, txn_id)
-    except FileNotFoundError:
-        return txn_id
-    return int(mf.get("version_rank", txn_id))
 
 
 def covers_lo_value(mf: dict, txn_id: int) -> int:

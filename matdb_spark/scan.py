@@ -56,13 +56,14 @@ from matdb_spark import manifest
 @dataclass
 class ScanSource:
     """Pinned inputs of one snapshot scan (reference: ScanSource,
-    database.rs:91-98 + transaction.rs:67-85). Captured eagerly at
-    transaction start so lazy execution cannot see later commits
-    (SURVEY §7.4.2)."""
+    database.rs:91-98 + transaction.rs:67-85): the ``manifest.Snapshot``
+    resolved once at transaction start — its visible txns are what the
+    scan reads, and its manifests answer every planning question, so
+    lazy execution cannot see later commits (SURVEY §7.4.2) and
+    planning reads no manifest — plus the transaction's own writes."""
 
-    db_path: str
+    snapshot: manifest.Snapshot
     schema: Schema
-    visible_txns: list[int] = field(default_factory=list)  # committed, < horizon
     own_txn: int | None = None          # this txn's staged (flushed) data
     own_staged_segments: int = 0
     buffered_rows: list[tuple] = field(default_factory=list)  # unsaved, with seq
@@ -334,6 +335,51 @@ def _envelope(boxes: list[dict[str, tuple]]) -> dict[str, tuple]:
     return env
 
 
+def plan_txns(
+    snap: manifest.Snapshot, boxes: list[dict[str, tuple]]
+) -> tuple[dict[int, list[int]], bool, dict[int, int]]:
+    """``(kept, dedup_free, ranks)`` of a read of ``snap``'s committed
+    rows inside ``boxes`` (none: all rows) — the one planning rule of
+    ``scan_dataframe`` and the DSv2 reader. ``kept`` maps each txn the
+    read must open to the indices of the boxes it may hold."""
+    from matdb_spark.stats import txn_intersects
+
+    kept: dict[int, list[int]] = {}
+    for t in snap.txns:
+        # A txn that wrote no data file (an empty commit) adds no rows
+        # or paths; it must not turn off the dedup-free plan.
+        if snap.files(t) == []:
+            continue
+        # Tier-0 pruning: drop whole transactions whose manifest stats
+        # (txn-level zone maps, stats.py) cannot intersect any box —
+        # before any file listing or Spark job. Every (txn, box) pair
+        # is checked, since file pruning needs each txn's own boxes.
+        # Missing stats keep the txn for every box (correctness never
+        # depends on stats).
+        hits = [i for i, b in enumerate(boxes) if txn_intersects(snap.stats(t), b)]
+        if hits or not boxes:
+            kept[t] = hits
+    # Dedup-free: a read that provably holds ONE version per key needs
+    # no version-resolution aggregation — the scan's only shuffle
+    # disappears. Provable case: exactly one kept txn whose manifest
+    # carries ``unique_keys`` (stamped by compaction, whose output is by
+    # construction the version-resolved snapshot, or by a deduplicated
+    # load). At 100 TB this is the difference between a full-table
+    # shuffle and a pure scan for every read of a compacted store.
+    # Bounded reads compose: a key inside the boxes cannot live in a
+    # pruned txn, so a surviving single unique-keys txn is still
+    # duplicate-free within the boxes.
+    dedup_free = len(kept) == 1 and snap.unique_keys(next(iter(kept)))
+    # Version-rank overrides: a compaction that folded only a PREFIX of
+    # the version order (minor compaction) writes under a new physical
+    # txn id but must keep its *logical* position — its manifest's
+    # ``version_rank``. Version resolution compares effective versions,
+    # so transactions newer than the folded prefix still win over the
+    # rewrite.
+    ranks = {t: snap.rank(t) for t in kept if snap.rank(t) != t}
+    return kept, dedup_free, ranks
+
+
 def scan_dataframe(
     spark: SparkSession,
     source: ScanSource,
@@ -371,53 +417,13 @@ def scan_dataframe(
 
     boxes = bounds if isinstance(bounds, list) else [bounds] if bounds else []
     env = _envelope(boxes) if boxes else {}
-    single_task = False
-    read_txns = list(source.visible_txns)
-    # committed txn -> indices of the boxes its stats may hold
-    txn_boxes: dict[int, list[int]] = {}
-    if boxes:
-        # Tier-0 pruning: drop whole transactions whose manifest stats
-        # (txn-level zone maps, stats.py) cannot intersect any box —
-        # before any file listing or Spark job. Every (txn, box) pair
-        # is checked, since the file pruning below needs each txn's
-        # own boxes. Missing stats keep the txn for every box
-        # (correctness never depends on stats).
-        from matdb_spark.stats import txn_intersects
-
-        for t in read_txns:
-            st = manifest.read_manifest_cached(source.db_path, t).get("stats")
-            hits = [i for i, b in enumerate(boxes) if txn_intersects(st, b)]
-            if hits:
-                txn_boxes[t] = hits
-        read_txns = [t for t in read_txns if t in txn_boxes]
-    # A committed txn that wrote no data file (an empty commit) adds no
-    # rows or paths; it must not turn off the two fast paths below.
-    read_txns = [
-        t
-        for t in read_txns
-        if manifest.read_manifest_cached(source.db_path, t).get("files") != []
-    ]
-    # Dedup-free fast path: a snapshot that provably holds ONE version
-    # per key needs no version-resolution aggregation — the scan's only
-    # shuffle disappears. Provable case: exactly one visible txn whose
-    # manifest carries ``unique_keys`` (stamped by compaction, whose
-    # output is by construction the version-resolved snapshot), and no
-    # read-your-own-writes overlay. At 100 TB this is the difference
-    # between a full-table shuffle and a pure scan for every read of a
-    # compacted store. Bounded scans compose: tier-0 pruning can only
-    # REMOVE txns, and a key inside the bounds cannot live in a pruned
-    # txn (its stats don't intersect), so a surviving single
-    # unique-keys txn is still duplicate-free within the bounds.
-    dedup_free = (
-        not source.buffered_rows
-        and not (source.own_txn is not None and source.own_staged_segments > 0)
-        and len(read_txns) == 1
-        and bool(
-            manifest.read_manifest_cached(source.db_path, read_txns[0]).get(
-                "unique_keys"
-            )
-        )
-    )
+    snap = source.snapshot
+    staged = source.own_txn is not None and source.own_staged_segments > 0
+    overlay = staged or bool(source.buffered_rows)
+    txn_boxes, dedup_free, rank_overrides = plan_txns(snap, boxes)
+    read_txns = list(txn_boxes)
+    # a read-your-own-writes overlay may add a version of any key
+    dedup_free = dedup_free and not overlay
     # Tie-free: version TIES (identical (txn, seq) on one key) can only
     # arise from duplicate keys inside a single write call; when EVERY
     # visible txn is stamped unique_keys (dedup'ed bulk loads,
@@ -426,28 +432,10 @@ def scan_dataframe(
     # per-column max_by over the packed-long version — hash-aggregable
     # — without risking a row stitched from different tied writes.
     tie_free = (
-        not source.buffered_rows
-        and not (source.own_txn is not None and source.own_staged_segments > 0)
-        and len(read_txns) > 0
-        and all(
-            manifest.read_manifest_cached(source.db_path, t).get("unique_keys")
-            for t in read_txns
-        )
+        not overlay and bool(read_txns) and all(snap.unique_keys(t) for t in read_txns)
     )
-    # Version-rank overrides: a compaction that folded only a PREFIX of
-    # the version order (minor compaction) writes under a new physical
-    # txn id but must keep its *logical* position — its manifest's
-    # ``version_rank`` (= the highest effective version it absorbed).
-    # Version resolution compares effective versions, so transactions
-    # newer than the folded prefix still win over the rewrite.
-    rank_overrides: dict[int, int] = {}
-    # read_txns holds only committed txns here (the own staged txn — which
-    # has no manifest yet — is appended just below)
-    for t in read_txns:
-        vr = manifest.read_manifest_cached(source.db_path, t).get("version_rank")
-        if vr is not None and int(vr) != int(t):
-            rank_overrides[int(t)] = int(vr)
-    if source.own_txn is not None and source.own_staged_segments > 0:
+    single_task = False
+    if staged:
         read_txns.append(source.own_txn)
     if read_txns:
         # Resolve the file set from manifests when every committed txn
@@ -462,11 +450,11 @@ def scan_dataframe(
         explicit_ok = True
         box_cranges = [_chunk_ranges(schema, b) for b in boxes]
         for t in read_txns:
-            tdir = manifest.txn_data_dir(source.db_path, t)
+            tdir = manifest.txn_data_dir(snap.db_path, t)
             if t == source.own_txn:
                 paths.append(tdir)
                 continue
-            fl = manifest.read_manifest_cached(source.db_path, t).get("files")
+            fl = snap.files(t)
             if fl is None:
                 explicit_ok = False
                 break
@@ -479,7 +467,7 @@ def scan_dataframe(
                 explicit_ok = False
                 break
         if not explicit_ok:
-            paths = [manifest.txn_data_dir(source.db_path, t) for t in read_txns]
+            paths = [manifest.txn_data_dir(snap.db_path, t) for t in read_txns]
         single_task = (
             bool(boxes)
             and explicit_ok
@@ -490,7 +478,7 @@ def scan_dataframe(
         # (see _read_schema). Files predating an evolved value column
         # read it as typed null.
         reader = spark.read.option(
-            "basePath", manifest.data_dir(source.db_path)
+            "basePath", manifest.data_dir(snap.db_path)
         ).schema(_read_schema(schema))
         if paths:  # empty = every committed file chunk-pruned away
             df = reader.parquet(*paths)

@@ -22,11 +22,11 @@ cursors on the read side, (stream_source, batch_id) manifest stamps
 on the write side), deletes included (tombstones ride as
 all-null-value rows, which IS the engine's delete).
 
-Built on the Spark 4 Python Data Source API. The DRIVER side reuses
-the exact planning tiers of the library scan (scan.py scan_dataframe):
-manifest-resolved file lists (no listing job), tier-0 txn-stats
-pruning, chunk pruning from pushed-down dimension filters, and
-version-rank overrides for minor compactions. The EXECUTOR side is
+Built on the Spark 4 Python Data Source API. The DRIVER side plans
+with the library scan's own rule (scan.py ``plan_txns``) over one
+``manifest.Snapshot``: manifest-resolved file lists (no listing job),
+tier-0 txn-stats pruning, chunk pruning from pushed-down dimension
+filters, and version-rank overrides for minor compactions. The EXECUTOR side is
 one Arrow pipeline per CHUNK: every version of a key lives in the
 same chunk by construction (chunk = f(key), schema.rs:28-38's routing
 invariant), so newest-(txn, seq)-wins resolution is chunk-local and
@@ -85,7 +85,7 @@ from pyspark.sql.datasource import (
 
 from matdb_spark import manifest
 from matdb_spark.schema import SEQ_COL, Schema
-from matdb_spark.scan import _chunk_ranges, _select_manifest_files
+from matdb_spark.scan import _chunk_ranges, _select_manifest_files, plan_txns
 
 SCHEMA_FILENAME = "schema.json"
 
@@ -284,6 +284,34 @@ class ChunkPartition(InputPartition):
     dedup_free: bool = False
 
 
+def _txn_files(snap: manifest.Snapshot, t: int) -> list[str]:
+    """Data files of committed txn ``t``, relative to its txn dir: the
+    manifest's list, or a walk of the dir when it recorded none (legacy
+    or capped manifest)."""
+    fl = snap.files(t)
+    if fl is not None:
+        return fl
+    tdir = manifest.txn_data_dir(snap.db_path, t)
+    return [
+        os.path.relpath(os.path.join(r, f), tdir)
+        for r, _, fs in os.walk(tdir)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+
+
+def _chunk_partitions(files: list[tuple[str, int]]) -> list[ChunkPartition]:
+    """One resolving partition per chunk: every version of a key lives
+    in the key's chunk directory, so each group resolves on its own."""
+    groups: dict[tuple, list] = {}
+    for path, eff in files:
+        key = tuple(
+            sorted(p for p in path.split(os.sep) if p.startswith("__chunk_") and "=" in p)
+        )
+        groups.setdefault(key, []).append((path, eff))
+    return [ChunkPartition(files=g) for g in groups.values()] or [ChunkPartition()]
+
+
 def register_matdb_source(spark) -> None:
     """Register the ``matdb`` format with a session (idempotent).
     Python-source filter pushdown ships behind a conf flag in Spark 4
@@ -463,68 +491,24 @@ class MatdbSnapshotReader(DataSourceReader):
 
     # ---- driver-side planning ----------------------------------------
     def partitions(self):
-        horizon = self._horizon()
-        visible = manifest.visible_txn_ids(self.db_path, horizon)
-        if self.bounds:
-            from matdb_spark.stats import txn_intersects
-
-            visible = [
-                t
-                for t in visible
-                if txn_intersects(
-                    manifest.read_manifest_cached(self.db_path, t).get("stats"),
-                    self.bounds,
-                )
-            ]
-        dedup_free = len(visible) == 1 and bool(
-            manifest.read_manifest_cached(self.db_path, visible[0]).get(
-                "unique_keys"
-            )
-        )
-        rank = {}
-        for t in visible:
-            vr = manifest.read_manifest_cached(self.db_path, t).get("version_rank")
-            if vr is not None and int(vr) != int(t):
-                rank[int(t)] = int(vr)
+        snap = self._snapshot()
+        kept, dedup_free, rank = plan_txns(snap, [self.bounds] if self.bounds else [])
         cranges = _chunk_ranges(self.schema_obj, self.bounds)
-        files: list[tuple[str, int]] = []  # (abs path, effective txn)
-        for t in visible:
-            tdir = manifest.txn_data_dir(self.db_path, t)
-            fl = manifest.read_manifest_cached(self.db_path, t).get("files")
-            if fl is None:  # legacy/capped manifest: walk the txn dir
-                fl = [
-                    os.path.relpath(os.path.join(r, f), tdir)
-                    for r, _, fs in os.walk(tdir)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-            eff = rank.get(t, t)
-            files.extend(
-                (os.path.join(tdir, rel), eff)
-                for rel in _select_manifest_files(fl, cranges)
-            )
-        if not files:
-            return [ChunkPartition(files=[], dedup_free=dedup_free)]
-        if dedup_free:
+        files = [  # (abs path, effective txn)
+            (os.path.join(manifest.txn_data_dir(self.db_path, t), rel), rank.get(t, t))
+            for t in kept
+            for rel in _select_manifest_files(_txn_files(snap, t), cranges)
+        ]
+        if dedup_free and files:
             # no resolution needed: maximum parallelism, one task/file
             return [ChunkPartition(files=[fe], dedup_free=True) for fe in files]
-        groups: dict[tuple, list] = {}
-        for path, eff in files:
-            key = tuple(
-                sorted(
-                    p
-                    for p in path.split(os.sep)
-                    if p.startswith("__chunk_") and "=" in p
-                )
-            )
-            groups.setdefault(key, []).append((path, eff))
-        return [ChunkPartition(files=g, dedup_free=False) for g in groups.values()]
+        return _chunk_partitions(files)
 
-    def _horizon(self) -> int:
-        committed = manifest.committed_txn_ids(self.db_path)
-        current = max(committed, default=0) + 1
+    def _snapshot(self) -> manifest.Snapshot:
         if self.as_of is None:
-            return current
+            return manifest.resolve(self.db_path)
+        snap = manifest.resolve(self.db_path, self.as_of + 1)
+        current = max(snap.committed, default=0) + 1
         if self.as_of >= current:
             raise ValueError(
                 f"as_of={self.as_of} is in the future (next txn {current})"
@@ -535,7 +519,7 @@ class MatdbSnapshotReader(DataSourceReader):
                 f"time-travel snapshot as_of={self.as_of} is unreadable: "
                 f"txns {gone} were vacuumed after a later compaction"
             )
-        return self.as_of + 1
+        return snap
 
     # ---- executor-side read ------------------------------------------
     def read(self, partition: ChunkPartition):
@@ -990,39 +974,15 @@ class MatdbChangesStreamReader(DataSourceStreamReader):
         return {"cursor": manifest.safe_feed_head(self.db_path)}
 
     def partitions(self, start: dict, end: dict):
-        lo, hi = int(start["cursor"]), int(end["cursor"])
-        window = []
-        for t in manifest.committed_txn_ids(self.db_path):
-            if not (lo < t <= hi):
-                continue
-            if manifest.read_manifest_cached(self.db_path, t).get("replaces"):
-                continue  # compaction rewrite, not a logical change
-            window.append(t)
-        files: list[tuple[str, int]] = []
-        for t in window:
-            tdir = manifest.txn_data_dir(self.db_path, t)
-            fl = manifest.read_manifest_cached(self.db_path, t).get("files")
-            if fl is None:
-                fl = [
-                    os.path.relpath(os.path.join(r, f), tdir)
-                    for r, _, fs in os.walk(tdir)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-            files.extend((os.path.join(tdir, rel), t) for rel in fl)
-        if not files:
-            return [ChunkPartition(files=[], dedup_free=False)]
-        groups: dict[tuple, list] = {}
-        for path, eff in files:
-            key = tuple(
-                sorted(
-                    p
-                    for p in path.split(os.sep)
-                    if p.startswith("__chunk_") and "=" in p
-                )
-            )
-            groups.setdefault(key, []).append((path, eff))
-        return [ChunkPartition(files=g, dedup_free=False) for g in groups.values()]
+        snap = manifest.resolve(self.db_path)
+        window = snap.feed_window(int(start["cursor"]), int(end["cursor"]))
+        return _chunk_partitions(
+            [
+                (os.path.join(manifest.txn_data_dir(self.db_path, t), rel), t)
+                for t in window.txns
+                for rel in _txn_files(snap, t)
+            ]
+        )
 
     def read(self, partition: ChunkPartition):
         """Window-net-effect rows for one chunk: newest (txn, seq) per

@@ -79,17 +79,22 @@ def _small_write(df: DataFrame) -> bool:
 class Transaction:
     """One writer/reader transaction with snapshot isolation.
 
-    The snapshot horizon and its visible manifest list are pinned at
-    construction (reference: database.rs:68-72, :85-89). The txn id is
-    allocated lazily at first flush (reference: transaction.rs:152-160).
+    The snapshot — resolved once by the caller (``manifest.resolve``)
+    — and its horizon are pinned at construction (reference:
+    database.rs:68-72, :85-89); every scan the transaction builds reads
+    that one value. The txn id is allocated lazily at first flush
+    (reference: transaction.rs:152-160).
     """
 
-    def __init__(self, db: "Database", horizon: int, read_only: bool = False):
+    def __init__(
+        self, db: "Database", snapshot: manifest.Snapshot, horizon: int, read_only=False
+    ):
         self.db = db
         self.schema = db.schema
+        self.snapshot = snapshot
         self.horizon = horizon
         self.read_only = read_only
-        self.visible_txns = manifest.visible_txn_ids(db.path, horizon)
+        self.visible_txns = snapshot.txns
         self.txn_id: int | None = None
         self.segments_flushed = 0
         self._buffer: list[tuple] = []
@@ -396,9 +401,8 @@ class Transaction:
     # ---- read -------------------------------------------------------
     def _source(self) -> ScanSource:
         return ScanSource(
-            db_path=self.db.path,
+            snapshot=self.snapshot,
             schema=self.schema,
-            visible_txns=self.visible_txns,
             own_txn=self.txn_id,
             own_staged_segments=self.segments_flushed,
             buffered_rows=list(self._buffer),

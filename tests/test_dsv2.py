@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from matdb_spark import Database, Dimension, Schema, Value
+from matdb_spark import Database, Dimension, Schema, Value, manifest
 from matdb_spark.sources.dsv2 import (
     MatdbSnapshotReader,
     register_matdb_source,
@@ -113,6 +113,13 @@ def test_dsv2_compacted_store_parallel_per_file(spark, tmp_path_factory):
     r = MatdbSnapshotReader(p, None)
     parts = r.partitions()
     assert all(pt.dedup_free and len(pt.files) == 1 for pt in parts)
+    # an empty commit adds no rows, so the per-file plan stays
+    t3 = db.begin()
+    t3.add_dataframe(spark.range(0).selectExpr("id AS k", "CAST(id AS double) AS v"))
+    t3.commit()
+    assert manifest.read_manifest(p, t3.txn_id)["files"] == []
+    assert MatdbSnapshotReader(p, None).partitions() == parts
+    assert _key(spark.read.format("matdb").load(p)) == lib
 
 
 def test_dsv2_schema_evolution_nulls(spark, tmp_path_factory):

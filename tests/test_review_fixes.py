@@ -150,8 +150,7 @@ def test_stats_bounds_merge_and_zorder_compact_uses_them(spark, tmp_db_path):
         spark.createDataFrame([(i, i * 2, i) for i in range(50, 100)], "x long, y long, v long")
     )
     t2.commit()
-    visible = manifest.visible_txn_ids(db.path, db.next_txn_id)
-    b = db._stats_bounds(visible)
+    b = db._stats_bounds(manifest.resolve(db.path))
     assert b == {"x": (0, 99), "y": (0, 198)}
     before = sorted(tuple(r) for r in db.snapshot().collect())
     assert db.compact(cluster="zorder") is not None
