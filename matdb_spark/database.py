@@ -524,9 +524,11 @@ class Database:
         cutoff = _time.time() - min_age_seconds
         snap = m.resolve(self.path)
         eligible: set[int] = set()
+        committed = set(snap.committed)
         for mf in snap.manifests.values():
             if mf.get("replaces") and mf.get("committed_at", 0) <= cutoff:
-                eligible.update(mf["replaces"])
+                # ids already vacuumed are gone, not prunable again
+                eligible.update(committed.intersection(mf["replaces"]))
         # Hold back files an IN-FLIGHT compaction is still scanning: a
         # pending reservation with a compact intent declares its
         # covered effective-version interval; deleting a superseded txn
@@ -723,7 +725,7 @@ class Database:
         # window for this exact (since, hi) — recomputing would double
         # the per-poll manifest sweep
         window = (
-            self._change_window(since, hi, include_compactions)
+            manifest.resolve(self.path).feed_window(since, hi, include_compactions)
             if _window is None
             else _window
         )
@@ -810,33 +812,6 @@ class Database:
         )
         return df.withColumn("change_type", refined).drop("__pre")
 
-    def _change_window(
-        self, since: int, until: int, include_compactions: bool
-    ) -> "manifest.Snapshot":
-        """The current snapshot restricted to the committed txns in
-        (since, until] that carry feed content
-        (``Snapshot.feed_window``). Raises when the window's content was
-        vacuumed away — a compaction manifest replaces ids inside the
-        window whose own manifests no longer exist — instead of
-        silently returning an incomplete feed."""
-        from matdb_spark import manifest as m
-
-        snap = m.resolve(self.path)
-        if not include_compactions:
-            # covers_lo-aware chain walk: a vacuumed INTERMEDIATE
-            # rollup must not hide that window commits are gone (the
-            # direct-replaces check alone would find nothing once the
-            # rollup that listed them was itself vacuumed)
-            vacuumed = m.missing_feed_content(self.path, since, until)
-            if vacuumed:
-                raise ValueError(
-                    f"change window ({since}, {until}] is unreadable: txns "
-                    f"{vacuumed} were superseded by compaction and vacuumed "
-                    f"away; re-sync from a snapshot or pass "
-                    f"include_compactions=True"
-                )
-        return snap.feed_window(since, until, include_compactions)
-
     def follow_changes(
         self,
         since: int | None = None,
@@ -879,7 +854,7 @@ class Database:
             while max_empty_polls is None or empty < max_empty_polls:
                 newest = m.safe_feed_head(self.path)
                 win = (
-                    self._change_window(cursor, newest, include_compactions)
+                    m.resolve(self.path).feed_window(cursor, newest, include_compactions)
                     if newest > cursor
                     else None
                 )

@@ -464,7 +464,20 @@ class Snapshot:
         self, lo: int, hi: int, include_compactions: bool = False
     ) -> "Snapshot":
         """The change-feed window ``(lo, hi]``: committed txns in it,
-        without compaction rewrites (``replaces``) unless opted in."""
+        without compaction rewrites (``replaces``) unless opted in.
+        Without them, raises when the window's content was vacuumed
+        away (``missing_feed_content``, over this snapshot's listing)
+        instead of returning an incomplete feed — the one check
+        ``Database.changes`` and the DSv2 change-feed source share."""
+        if not include_compactions:
+            vacuumed = _missing_feed(self.db_path, set(self.committed), lo, hi)
+            if vacuumed:
+                raise ValueError(
+                    f"change window ({lo}, {hi}] is unreadable: txns "
+                    f"{vacuumed} were superseded by compaction and vacuumed "
+                    f"away; re-sync from a snapshot or pass "
+                    f"include_compactions=True"
+                )
         return self.restrict(
             t
             for t in self.committed
@@ -718,7 +731,11 @@ def missing_feed_content(db_path: str, since: int, until: int) -> list[int]:
     child whose parent's covered interval intersects the window is
     reported conservatively (it may have been a raw commit in the
     window or a rollup covering one)."""
-    committed = set(committed_txn_ids(db_path))
+    return _missing_feed(db_path, set(committed_txn_ids(db_path)), since, until)
+
+
+def _missing_feed(db_path: str, committed: set[int], since: int, until: int) -> list[int]:
+    """``missing_feed_content`` given the store's committed ids."""
     out: set[int] = set()
     seen: set[int] = set()
 

@@ -39,15 +39,24 @@ at most ``_SINGLE_TASK_MAX_FILES`` files of at most
 ``_SINGLE_TASK_MAX_BYTES`` in all, the sources are coalesced to one
 partition before version resolution, so the read plans no exchange at
 all and runs as one Spark job.
+
+Plans are built as SQL text (``_sql_literal``, ``_range_filters``,
+``_key_predicate``, one ``filter`` and one ``selectExpr`` per source),
+not Column by Column: PySpark's origin capture makes every
+``pyspark.sql.functions`` call and Column method cost about 8 py4j
+round trips, which made building a small read cost more than running it.
 """
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import numbers
 import os
 from dataclasses import dataclass, field
 from typing import Iterator
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
 from matdb_spark.schema import Schema, SEQ_COL, TXN_COL, _dtype
 from matdb_spark import manifest
@@ -69,8 +78,12 @@ class ScanSource:
     buffered_rows: list[tuple] = field(default_factory=list)  # unsaved, with seq
 
 
-def _chunked(df: DataFrame, schema: Schema) -> DataFrame:
-    """Derive ``__chunk_<dim> = dim // chunk_size`` partition columns.
+def _chunked(df: DataFrame, schema: Schema, cols: dict[str, str] | None = None) -> DataFrame:
+    """``df`` projected to ``cols`` (output name -> SQL expression;
+    default: every column of ``df`` as is) plus the partition columns
+    ``__chunk_<dim> = dim // chunk_size``, in ONE ``selectExpr``. Each
+    chunk expression reads its dim through that dim's ``cols``
+    expression, as a separate projection over ``cols`` would.
 
     Exact integer floor division (``x - pmod(x, s)`` is the greatest
     multiple of ``s`` ≤ ``x``, and ``div`` on it is exact), matching
@@ -79,11 +92,11 @@ def _chunked(df: DataFrame, schema: Schema) -> DataFrame:
     (where ``div`` alone truncates toward zero) and keys above 2^53
     (where ``floor(x / s)`` in double arithmetic is inexact). Write
     routing and read pruning must share one arithmetic or rows near
-    chunk boundaries silently vanish from range scans. Every chunk
-    column is added in one projection."""
-    exprs = {}
+    chunk boundaries silently vanish from range scans."""
+    cols = cols or {c: f"`{c}`" for c in df.columns}
+    exprs = [f"{e} AS `{name}`" for name, e in cols.items()]
     for d in schema.chunked_dims:
-        n, s = f"`{d.name}`", int(d.chunk_size)
+        n, s = f"({cols[d.name]})", int(d.chunk_size)
         if d.type.startswith("decimal"):
             # div would narrow to BIGINT and overflow near 2^64; stay
             # in decimal (exact: numerator is a multiple of s, and
@@ -100,8 +113,8 @@ def _chunked(df: DataFrame, schema: Schema) -> DataFrame:
                 f"({n} div {s}) - "
                 f"(CASE WHEN ({n} % {s}) != 0 AND {n} < 0 THEN 1 ELSE 0 END)"
             )
-        exprs[d.chunk_col] = F.expr(expr)
-    return df.withColumns(exprs) if exprs else df
+        exprs.append(f"{expr} AS `{d.chunk_col}`")
+    return df.selectExpr(*exprs)
 
 
 def _floor_div(x, size: int):
@@ -255,82 +268,94 @@ def _read_schema(schema: Schema):
     return T.StructType(fields)
 
 
+def _sql_literal(value, dim_type: str) -> str:
+    """``value`` as Spark SQL literal text for comparison with a
+    ``dim_type`` column, exact for every key type a store holds: it
+    parses back to an equal value under any parser setting.
+
+    Integers render as digits — INT, BIGINT or DECIMAL by magnitude,
+    the types ``F.lit`` gives them — or as a DECIMAL (``BD``) literal
+    for a decimal dim; floats as a cast of their shortest round-trip
+    text (NaN and infinities included); strings and bytes as hex, so
+    no quote or backslash escaping applies; dates and timestamps as the
+    day and microsecond counts ``createDataFrame`` stores for them."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, numbers.Integral):
+        return f"{int(value)}BD" if dim_type.startswith("decimal") else str(int(value))
+    if isinstance(value, decimal.Decimal):
+        return f"{value:f}BD"
+    if isinstance(value, numbers.Real):
+        return f"CAST('{float(value)!r}' AS DOUBLE)"
+    if isinstance(value, str):
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(value, (bytes, bytearray)):
+        return f"X'{bytes(value).hex()}'"
+    if isinstance(value, datetime.datetime):
+        return f"TIMESTAMP_MICROS({T.TimestampType().toInternal(value)})"
+    if isinstance(value, datetime.date):
+        return f"DATE_FROM_UNIX_DATE({T.DateType().toInternal(value)})"
+    raise TypeError(f"no SQL literal for {type(value).__name__} {value!r}")
+
+
 def _range_filters(
     schema: Schema, bounds: dict[str, tuple], with_chunks: bool
-) -> list:
-    """Filters for a key-range scan: per bounded dim, a row-level
+) -> list[str]:
+    """SQL conditions for a key-range scan: per bounded dim, a row-level
     predicate (drives parquet row-group min/max skipping — the zone
     maps of segment.rs:138-163) and, when the dim is chunked and the
     relation still carries its ``__chunk_*`` partition column, the
     derived chunk-range predicate floor(lo/size)..floor(hi/size) —
     which Catalyst turns into Hive partition pruning (the merge-scan's
     lazy block activation, scan.rs:119-180, at directory granularity).
-    """
+
+    Text, not Columns: every ``pyspark.sql.functions`` call and Column
+    method pays PySpark's origin capture (about 8 py4j round trips),
+    while the conditions' text is parsed JVM-side in one call."""
+    # chunk predicates from the SAME arithmetic as the driver-side
+    # manifest file pruning (_chunk_ranges/_floor_div) — one source of
+    # truth, so the two pruning layers cannot desynchronize
+    ranges = {**bounds, **(_chunk_ranges(schema, bounds) if with_chunks else {})}
+    types = {n: d.type for d in schema.dimensions for n in (d.name, d.chunk_col)}
     conds = []
-    for name, (lo, hi) in bounds.items():
-        col = F.col(name)
+    for name, (lo, hi) in ranges.items():
         if lo is not None:
-            conds.append(col >= F.lit(lo))
+            conds.append(f"`{name}` >= {_sql_literal(lo, types[name])}")
         if hi is not None:
-            conds.append(col <= F.lit(hi))
-    if with_chunks:
-        # chunk predicates from the SAME arithmetic as the driver-side
-        # manifest file pruning (_chunk_ranges/_floor_div) — one source
-        # of truth, so the two pruning layers cannot desynchronize
-        for ccol, (clo, chi) in _chunk_ranges(schema, bounds).items():
-            if clo is not None:
-                conds.append(F.col(ccol) >= F.lit(clo))
-            if chi is not None:
-                conds.append(F.col(ccol) <= F.lit(chi))
+            conds.append(f"`{name}` <= {_sql_literal(hi, types[name])}")
     return conds
 
 
-#: dim types whose keys render as SQL integer literals
-_INTEGRAL_TYPES = {"long", "int"}
-
-
-def _key_predicate(schema: Schema, keys: list[tuple]):
-    """Column: the row's full dim tuple is one of ``keys``. When every
-    dim is integral and every key value a plain int, the predicate is
-    ONE SQL string — ``IN (...)`` for a single dim, an OR of ANDs
-    otherwise — parsed JVM-side in one call instead of several py4j
-    calls per key; other dim types build it Column by Column. Both
-    forms push down to the parquet scan (In / Or(And(EqualTo)))."""
-    dims = schema.dim_names
-    # plain ints only: bools, Decimals and numpy scalars keep the Column build
-    if all(d.type in _INTEGRAL_TYPES for d in schema.dimensions) and all(
-        type(v) is int for k in keys for v in k
-    ):
-        if len(dims) == 1:
-            return F.expr(f"`{dims[0]}` IN ({', '.join(str(k[0]) for k in keys)})")
-        return F.expr(
-            " OR ".join(
-                "(" + " AND ".join(f"`{d}` = {v}" for d, v in zip(dims, k)) + ")"
-                for k in keys
-            )
-        )
+def _key_predicate(schema: Schema, keys: list[tuple]) -> str:
+    """SQL text: the row's full dim tuple is one of ``keys`` — ``IN
+    (...)`` for a single dim, an OR of ANDs otherwise, parsed JVM-side
+    in one call instead of several py4j calls per key (see
+    ``_range_filters``). Both forms push down to the parquet scan
+    (In / Or(And(EqualTo)))."""
+    dims = schema.dimensions
     if len(dims) == 1:
-        return F.col(dims[0]).isin([k[0] for k in keys])
-    pred = F.lit(False)
-    for k in keys:
-        clause = F.lit(True)
-        for d, v in zip(dims, k):
-            clause = clause & (F.col(d) == F.lit(v))
-        pred = pred | clause
-    return pred
+        lits = ", ".join(_sql_literal(k[0], dims[0].type) for k in keys)
+        return f"`{dims[0].name}` IN ({lits})"
+    return " OR ".join(
+        "(" + " AND ".join(f"`{d.name}` = {_sql_literal(v, d.type)}" for d, v in zip(dims, k)) + ")"
+        for k in keys
+    )
 
 
 def _envelope(boxes: list[dict[str, tuple]]) -> dict[str, tuple]:
     """One box covering every box: per dim, the least lo and greatest
-    hi (None — open — when any box leaves that side open or does not
-    bound the dim at all)."""
+    hi (None — open — when any box leaves that side open, bounds it by
+    NaN or does not bound the dim at all)."""
     env = {}
     for name in dict.fromkeys(n for b in boxes for n in b):
         los = [b.get(name, (None, None))[0] for b in boxes]
         his = [b.get(name, (None, None))[1] for b in boxes]
+        # a NaN side (unordered for min/max; above +inf in Spark) stays open
         env[name] = (
-            None if None in los else min(los),
-            None if None in his else max(his),
+            None if any(v is None or v != v for v in los) else min(los),
+            None if any(v is None or v != v for v in his) else max(his),
         )
     return env
 
@@ -387,7 +412,7 @@ def scan_dataframe(
     include_txn: bool = False,
     drop_null_value_rows: bool = True,
     bounds: dict[str, tuple] | None = None,
-    predicate=None,
+    predicate: str | None = None,
     cell_merge: bool = False,
 ) -> DataFrame:
     """Build the snapshot-scan DataFrame for a pinned source set.
@@ -400,10 +425,18 @@ def scan_dataframe(
     the boxes THAT transaction may hold. The envelope of the boxes is
     applied at the scan relation itself so both partition pruning and
     parquet stats pruning engage before any shuffle. ``predicate`` is
-    an optional extra Column over DIM columns only, also applied at
-    the scan relation (point lookups push exact key sets down this
-    way); dim-only predicates commute with the version-dedup
-    aggregation, so applying them pre-shuffle is semantics-preserving.
+    optional extra SQL text over DIM columns only, also applied at the
+    scan relation (point lookups push exact key sets down this way);
+    dim-only predicates commute with the version-dedup aggregation, so
+    applying them pre-shuffle is semantics-preserving.
+
+    The plan is built from SQL text — one ``filter`` for the envelope,
+    chunk and key conditions, one ``selectExpr`` per source, a
+    ``max_by`` expression per resolved column — not from per-literal
+    Column calls: each ``pyspark.sql.functions`` call or Column method
+    costs about 8 py4j round trips for PySpark's origin capture, and
+    each Dataset op an eager analysis. The plans Spark derives are the
+    same.
 
     When ``bounds`` is given and the pruned sources are at most
     ``_SINGLE_TASK_MAX_FILES`` explicit files of at most
@@ -412,6 +445,7 @@ def scan_dataframe(
     schema = source.schema
     dims = schema.dim_names
     vals = schema.value_names
+    cols = [f"`{c}`" for c in dims + vals]
 
     parts: list[DataFrame] = []
 
@@ -474,40 +508,25 @@ def scan_dataframe(
             and source.own_txn not in read_txns
             and _small_input(paths)
         )
-        # Catalog-schema read: no footer inference, no mergeSchema job
-        # (see _read_schema). Files predating an evolved value column
-        # read it as typed null.
-        reader = spark.read.option(
-            "basePath", manifest.data_dir(snap.db_path)
-        ).schema(_read_schema(schema))
         if paths:  # empty = every committed file chunk-pruned away
-            df = reader.parquet(*paths)
+            # Catalog-schema read: no footer inference, no mergeSchema
+            # job (see _read_schema). Files predating an evolved value
+            # column read it as typed null.
+            df = (
+                spark.read.option("basePath", manifest.data_dir(snap.db_path))
+                .schema(_read_schema(schema))
+                .parquet(*paths)
+            )
             # Prune BEFORE projecting away the __chunk_* partition columns.
-            for cond in _range_filters(schema, env, with_chunks=True):
-                df = df.filter(cond)
-            if predicate is not None:
-                df = df.filter(predicate)
+            df = _where(df, _range_filters(schema, env, True), predicate)
             # Partition dirs contribute txn=<t>, seg=<s>, __chunk_* columns;
             # the explicit catalog read schema guarantees every value
             # column exists (typed null where a file predates it).
-            txn_expr = F.col("txn").cast("long")
+            txn_expr = "txn"
             if rank_overrides:
-                case = None
-                for t, r in sorted(rank_overrides.items()):
-                    cond = F.col("txn") == F.lit(t)
-                    case = (
-                        F.when(cond, F.lit(r))
-                        if case is None
-                        else case.when(cond, F.lit(r))
-                    )
-                txn_expr = case.otherwise(txn_expr).cast("long")
-            df = df.select(
-                txn_expr.alias(TXN_COL),
-                F.col(SEQ_COL),
-                *[F.col(c) for c in dims],
-                *[F.col(c) for c in vals],
-            )
-            parts.append(df)
+                whens = " ".join(f"WHEN {t} THEN {r}" for t, r in sorted(rank_overrides.items()))
+                txn_expr = f"CAST(CASE txn {whens} ELSE txn END AS BIGINT)"
+            parts.append(df.selectExpr(f"{txn_expr} AS {TXN_COL}", SEQ_COL, *cols))
 
     if source.buffered_rows:
         # Read-your-own-writes overlay for unflushed rows
@@ -520,24 +539,13 @@ def scan_dataframe(
         # tops out at 2⁶³−1, the last representable long.
         own = source.own_txn if source.own_txn is not None else (1 << 31) - 1
         buf = spark.createDataFrame(source.buffered_rows, schema.staging_schema())
-        for cond in _range_filters(schema, env, with_chunks=False):
-            buf = buf.filter(cond)
-        if predicate is not None:
-            buf = buf.filter(predicate)
-        buf = buf.select(
-            F.lit(own).cast("long").alias(TXN_COL),
-            F.col(SEQ_COL),
-            *[F.col(c) for c in dims],
-            *[F.col(c) for c in vals],
-        )
-        parts.append(buf)
+        buf = _where(buf, _range_filters(schema, env, False), predicate)
+        parts.append(buf.selectExpr(f"CAST({own} AS BIGINT) AS {TXN_COL}", SEQ_COL, *cols))
 
     if not parts:
         empty = spark.createDataFrame([], schema.spark_schema())
-        out = empty.select(*dims, *vals)
-        if include_txn:
-            out = out.withColumn(TXN_COL, F.lit(None).cast("long"))
-        return out
+        txn = [f"CAST(NULL AS BIGINT) AS {TXN_COL}"] if include_txn else []
+        return empty.selectExpr(*cols, *txn)
 
     df = parts[0]
     for p in parts[1:]:
@@ -565,40 +573,30 @@ def scan_dataframe(
     # O(n log n) per scan, and the map-side partial still collapses a
     # hot key (one dim tuple holding 10% of rows) to one candidate per
     # task before the shuffle.
-    version = F.struct(F.col(TXN_COL), F.col(SEQ_COL))
-    version_long = F.col(TXN_COL) * F.lit(1 << 32) + F.col(SEQ_COL)
+    version = f"struct({TXN_COL}, {SEQ_COL})"
+    version_long = f"{TXN_COL} * {1 << 32} + {SEQ_COL}"
+    txn_col = [TXN_COL] if include_txn else []
     if dedup_free:
         # One version per key already (single compacted txn): project
         # away the bookkeeping columns and skip the aggregation. Under
         # one version per key, row-level and cell-level resolution
         # coincide, so ``cell_merge`` needs no separate handling.
-        cols = [F.col(d) for d in dims] + [F.col(v) for v in vals]
-        if include_txn:
-            cols.append(F.col(TXN_COL))
-        df = df.select(*cols)
-    elif cell_merge:
-        # CELL-level resolution — the reference's actual write model:
-        # add_row overwrites individual value cells in place
-        # (block.rs:45-49), so each value column's newest NON-NULL
-        # write wins independently; a null cell is "no write", not a
-        # value. This is what a partial-column upsert needs. Same
+        df = df.selectExpr(*cols, *txn_col)
+    elif not vals and not include_txn:  # key-only schema: plain distinct on dims
+        df = df.selectExpr(*cols).distinct()
+    elif cell_merge or len(vals) == 1 or tie_free:
+        # CELL-level resolution (``cell_merge``) — the reference's
+        # actual write model: add_row overwrites individual value cells
+        # in place (block.rs:45-49), so each value column's newest
+        # NON-NULL write wins independently; a null cell is "no write",
+        # not a value. This is what a partial-column upsert needs. Same
         # single shuffle (max_by per column, ordering null for null
         # cells → ignored by the aggregate). Consequence: all-null
         # tombstones cannot delete under cell merge — deletes need the
         # default row-level mode.
-        aggs = [
-            F.max_by(F.col(v), F.when(F.col(v).isNotNull(), version_long)).alias(v)
-            for v in vals
-        ]
-        if include_txn:
-            aggs.append(F.max_by(F.col(TXN_COL), version_long).alias(TXN_COL))
-        if not aggs:  # key-only schema: plain distinct on dims
-            df = df.select(*[F.col(d) for d in dims]).distinct()
-        else:
-            df = df.groupBy(*[F.col(d) for d in dims]).agg(*aggs)
-    elif len(vals) == 1 or tie_free:
-        # Per-column max_by over the packed-long version IS row-level
-        # resolution whenever no two versions of a key can tie:
+        #
+        # Otherwise per-column max_by over the packed-long version IS
+        # row-level resolution whenever no two versions of a key can tie:
         # - a SINGLE value column (the reference's exercised shape,
         #   block.rs:45-49) has no cross-column atomicity to protect
         #   (ties pick an arbitrary value, same as the struct path, and
@@ -606,37 +604,40 @@ def scan_dataframe(
         # - ``tie_free`` stores (every visible txn stamped unique_keys)
         #   provably have no ties at all, multi-value included.
         # Unlocks two-phase HashAggregate (see version note above).
-        aggs = [F.max_by(F.col(v), version_long).alias(v) for v in vals]
-        if include_txn:
-            aggs.append(F.max_by(F.col(TXN_COL), version_long).alias(TXN_COL))
-        df = df.groupBy(*[F.col(d) for d in dims]).agg(*aggs)
+        aggs = [
+            f"max_by(`{v}`, CASE WHEN `{v}` IS NOT NULL THEN {version_long} END) AS `{v}`"
+            if cell_merge
+            else f"max_by(`{v}`, {version_long}) AS `{v}`"
+            for v in vals
+        ]
+        aggs += [f"max_by({c}, {version_long}) AS {c}" for c in txn_col]
+        df = df.groupBy(*dims).agg(*[F.expr(a) for a in aggs])
     else:
         # Multiple value columns resolve through ONE struct payload:
         # per-column max_by would be faster (hash-aggregable) but
         # could stitch a row from DIFFERENT tied writes (same
         # (txn, seq), e.g. duplicate keys inside one
         # add_dataframe(dedup=False) call) — row atomicity wins.
-        payload = F.struct(*[F.col(v) for v in vals], F.col(TXN_COL))
-        winner = F.max_by(payload, version).alias("__w")
-        df = df.groupBy(*[F.col(d) for d in dims]).agg(winner)
-        cols = [F.col(d) for d in dims] + [F.col(f"__w.{v}").alias(v) for v in vals]
-        if include_txn:
-            cols.append(F.col(f"__w.{TXN_COL}").alias(TXN_COL))
-        df = df.select(*cols)
+        payload = ", ".join([f"`{v}`" for v in vals] + [TXN_COL])
+        df = df.groupBy(*dims).agg(F.expr(f"max_by(struct({payload}), {version}) AS __w"))
+        df = df.selectExpr(*cols[: len(dims)], *[f"__w.`{c}` AS `{c}`" for c in vals + txn_col])
 
     if drop_null_value_rows and vals:
         # Reference scans never emit unset cells (block.rs:277-279):
         # a row whose value cells are all absent does not exist.
-        cond = F.lit(False)
-        for v in vals:
-            cond = cond | F.col(v).isNotNull()
-        df = df.filter(cond)
+        df = df.filter(" OR ".join(f"`{v}` IS NOT NULL" for v in vals))
 
     if ordered:
         # O1 ordering contract (scan.rs:38-54): ascending lexicographic
         # key order. Range-partitioned sort; skipped when ordered=False.
-        df = df.orderBy(*[F.col(d).asc() for d in dims])
+        df = df.orderBy(*dims)
     return df
+
+
+def _where(df: DataFrame, conds: list[str], predicate: str | None) -> DataFrame:
+    """``df`` filtered by every condition, as ONE ``filter`` call."""
+    conds = conds + [f"({predicate})"] if predicate else conds
+    return df.filter(" AND ".join(conds)) if conds else df
 
 
 def iterate_rows(df: DataFrame) -> Iterator[Row]:

@@ -159,10 +159,11 @@ class Transaction:
     ) -> None:
         """Bulk upsert of a distributed DataFrame (the 100 TB path).
 
-        The frame must contain the schema's dimension and value columns.
-        All rows in one call share a write sequence: duplicate keys
-        *within* the call resolve arbitrarily (a distributed batch has
-        no insertion order); across calls, later calls win.
+        The frame must contain the schema's dimension and value columns,
+        which ONE projection stamps and casts (``_write_segment``). All
+        rows in one call share a write sequence: duplicate keys *within*
+        the call resolve arbitrarily (a distributed batch has no
+        insertion order); across calls, later calls win.
 
         ``cluster_by`` overrides the within-partition sort order of the
         written segment (layout only — scan semantics are unaffected):
@@ -213,28 +214,22 @@ class Transaction:
                 "write-sequence overflow: one transaction made 2^32"
                 " writes (see add_row)"
             )
-        cols = []
         present = set(df.columns)
         for name in self.schema.dim_names:
             if name not in present:
                 raise ValueError(f"missing dimension column {name!r}")
-            cols.append(F.col(name))
-        vtypes = {f.name: f.dataType for f in self.schema.spark_schema().fields}
         for name in self.schema.value_names:
-            if name in present:
-                cols.append(F.col(name))
-            elif partial:
-                cols.append(F.lit(None).cast(vtypes[name]).alias(name))
-            else:
+            if name not in present and not partial:
                 raise ValueError(
                     f"missing value column {name!r} (pass partial=True to "
                     "write a partial-column upsert)"
                 )
-        stamped = df.select(*cols, F.lit(self._seq).alias(SEQ_COL))
+        sources = {n: f"`{n}`" if n in present else "NULL" for n in self.schema.column_names}
+        sources[SEQ_COL] = str(self._seq)
         if dedup is True:
-            stamped = stamped.dropDuplicates(self.schema.dim_names)
+            df = df.dropDuplicates(self.schema.dim_names)
         first_write = self._unique_keys is None and not self._buffer
-        self._write_segment(stamped, cluster_by=cluster_by)
+        self._write_segment(df, sources, cluster_by=cluster_by)
         self._unique_keys = bool(dedup) and first_write
 
     def merge_dataframe(
@@ -297,10 +292,13 @@ class Transaction:
             self.txn_id = self.db.allocate_txn_id()
         return self.txn_id
 
-    def _write_segment(self, stamped: DataFrame, cluster_by: list | None = None) -> None:
+    def _write_segment(self, df: DataFrame, sources: dict | None = None, cluster_by=None) -> None:
         """Write one segment (reference: one file per flush,
-        segment.rs:30-46). Layout discipline = the engine's physical
-        strategy at scale:
+        segment.rs:30-46): each staging column is its ``sources`` SQL
+        expression (default: ``df``'s column) cast to its declared type,
+        with the chunk columns, in ONE ``selectExpr`` (``scan._chunked``;
+        SQL text, see ``scan._range_filters``). Layout discipline = the
+        engine's physical strategy at scale:
         - route rows by chunk columns (``partitionBy``) so the reader
           gets Hive partition pruning (reference chunk routing,
           schema.rs:28-38);
@@ -321,11 +319,11 @@ class Transaction:
         # Canonicalize column types so every segment file carries the
         # exact declared schema — mixed int/long inputs must not create
         # per-segment parquet schema drift (breaks multi-segment scans).
-        canon = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in schema.spark_schema().fields
-        ] + [F.col(SEQ_COL).cast("long").alias(SEQ_COL)]
-        out = _chunked(stamped.select(*canon), schema)
+        canon = {
+            f.name: f"CAST({(sources or {}).get(f.name, f'`{f.name}`')} AS {f.dataType.simpleString()})"
+            for f in schema.staging_schema().fields
+        }
+        out = _chunked(df, schema, canon)
         chunk_cols = schema.chunk_cols
         # cluster_by replaces the key sort (e.g. z-order interleave) —
         # a layout choice; chunk routing always stays outermost so
@@ -342,7 +340,6 @@ class Transaction:
             # repartition would scatter the key space across tasks and
             # cap locality at the file-interior level. (This is the
             # public OPTIMIZE ZORDER shape: range partition + sort.)
-            ncols = [F.col(c) if isinstance(c, str) else c for c in sort_cols]
             try:
                 # may be non-numeric on some platforms (e.g. "auto")
                 nparts = int(
@@ -350,9 +347,9 @@ class Transaction:
                 )
             except ValueError:
                 nparts = 200
-            out = out.repartitionByRange(nparts, *ncols)
+            out = out.repartitionByRange(nparts, *sort_cols)
         elif chunk_cols:
-            out = out.repartition(*[F.col(c) for c in chunk_cols])
+            out = out.repartition(*chunk_cols)
         out = out.sortWithinPartitions(*sort_cols)
         writer = out.write.mode("error")
         for d in schema.dimensions:

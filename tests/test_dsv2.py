@@ -590,3 +590,24 @@ def test_dsv2_decimal_chunked_dim_store(spark, tmp_path_factory):
     assert lib[5] == 555 and len(lib) == 40
     got2 = {int(r["k"]): r["v"] for r in spark.read.format("matdb").load(p).collect()}
     assert got2 == lib
+
+
+def test_dsv2_cdc_source_raises_on_vacuumed_window(spark, tmp_path_factory):
+    """A change-feed window whose commits were compacted and vacuumed
+    away is unreadable: the DSv2 source raises the error
+    ``Database.changes`` raises, instead of delivering an empty batch."""
+    from matdb_spark.sources.dsv2 import MatdbChangesStreamReader
+
+    p = str(tmp_path_factory.mktemp("dsv2cdcvac") / "db")
+    db = Database.create(spark, p, Schema(dimensions=[Dimension("k", 10)], values=[Value("v")]))
+    for i in range(2):
+        with db.begin() as t:
+            t.add_rows([(k, i) for k in range(5)])
+            t.commit()
+    assert db.compact() == 3
+    assert db.vacuum() == [1, 2]
+    with pytest.raises(ValueError, match=r"\(0, 3\] is unreadable") as lib:
+        db.changes(0, 3)
+    with pytest.raises(ValueError) as src:
+        MatdbChangesStreamReader(p, 0).partitions({"cursor": 0}, {"cursor": 3})
+    assert str(src.value) == str(lib.value)

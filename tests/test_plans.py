@@ -629,3 +629,73 @@ def test_corpus_report_scan_budget(spark):
     # the second scan is the pruned one: somewhere a documents scan
     # reads just source+lang (no text column)
     assert "ReadSchema" in plan
+
+
+def test_store_plans_build_in_few_py4j_round_trips(spark, tmp_path_factory, monkeypatch):
+    """With PySpark's origin capture on (its default), building a small
+    read or commit makes few py4j round trips: the store builds its
+    plans as SQL text, not Column by Column (each ``functions`` call or
+    Column method costs about 8 round trips for the capture). The
+    plans, pushed filters included, are the Column-built ones."""
+    import py4j.clientserver
+    from pyspark.sql import DataFrameWriter
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "true"
+    db = _twelve_txn_store(spark, str(tmp_path_factory.mktemp("buildcost")))
+    keys = [(i * 10 + i % 10, (5 * i) % 16) for i in (0, 1, 3, 4, 6, 8, 9, 11)]
+    frame = spark.range(160).selectExpr("120 + id % 10 AS t", "id div 10 AS s", "id AS v")
+
+    calls, at_write = [0], []
+    send, parquet = py4j.clientserver.ClientServerConnection.send_command, DataFrameWriter.parquet
+
+    def counting_send(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    def marking_parquet(self, *a, **kw):
+        at_write.append(calls[0])
+        return parquet(self, *a, **kw)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting_send)
+    monkeypatch.setattr(DataFrameWriter, "parquet", marking_parquet)
+
+    def build(fn):
+        """(result, round trips) of the cheaper of two builds."""
+        runs = []
+        for _ in range(2):
+            start = calls[0]
+            runs.append((fn(), calls[0] - start))
+        return min(runs, key=lambda r: r[1])
+
+    rng, n = build(lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}))
+    assert n <= 120, n
+    assert pushed_filters(rng) == [
+        "IsNotNull(t)", "IsNotNull(s)", "GreaterThanOrEqual(t,15)",
+        "LessThanOrEqual(t,34)", "GreaterThanOrEqual(s,4)", "LessThanOrEqual(s,7)",
+    ]
+    assert _node_names(rng) == [
+        "AdaptiveSparkPlan", "Sort", "Filter", "HashAggregate", "HashAggregate",
+        "Coalesce", "Project", "Filter", "FileScan",
+    ]
+    pts, n = build(lambda: db.begin().query_points(keys))
+    assert n <= 120, n
+    assert _node_names(pts) == _node_names(rng)
+    assert " ".join(pushed_filters(pts)).startswith(
+        "IsNotNull(t) IsNotNull(s) GreaterThanOrEqual(t,0) LessThanOrEqual(t,111) "
+        "GreaterThanOrEqual(s,0) LessThanOrEqual(s,15) Or(Or(Or(And(EqualTo(t,0) EqualTo(s,0))"
+    ), pushed_filters(pts)
+
+    def commit():
+        start = calls[0]
+        with db.begin() as t:
+            t.add_dataframe(frame)
+            t.commit()
+        return at_write[-1] - start
+
+    assert min(commit(), commit()) <= 120
+
+
+def _node_names(df) -> list[str]:
+    """Operator names of ``df``'s executed plan, top down."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [line.lstrip(" :+-*").split(" ")[0].split("(")[0] for line in plan.splitlines()]

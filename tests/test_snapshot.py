@@ -102,3 +102,26 @@ def test_resolve_matches_the_manifest_rules(store):
         assert {t: snap.rank(t) for t in snap.manifests} == {
             t: _raw_rank(db.path, t) for t in snap.manifests
         }
+
+
+def test_vacuum_is_idempotent(spark, tmp_db_path):
+    """A second ``vacuum()`` finds nothing left to remove: ids a
+    compaction replaces but that are already gone are not pruned again,
+    and no checkpoint is rewritten for them."""
+    import os
+
+    schema = Schema(dimensions=[Dimension("k", 10)], values=[Value("v")])
+    db = Database.create(spark, f"{tmp_db_path}/vac", schema)
+    for i in range(2):
+        with db.begin() as t:
+            t.add_rows([(k, i) for k in range(5)])
+            t.commit()
+    assert db.compact() == 3
+
+    def checkpoints():
+        return sorted(n for n in os.listdir(manifest.commits_dir(db.path)) if "_checkpoint." in n)
+
+    assert db.vacuum() == [1, 2]
+    before = checkpoints()
+    assert db.vacuum() == []
+    assert checkpoints() == before

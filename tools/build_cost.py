@@ -1,0 +1,94 @@
+"""Driver build cost of store reads and commits.
+
+On a 12-commit store (10 ticks x 16 sensors each), prints for a key
+range, an 8-key point get and a small commit (up to its write call) the
+median build milliseconds, py4j round trips and eagerly analysed
+Datasets (one per DataFrame op) over ``--repeat`` builds. Reads are
+built, never executed.
+
+    PYTHONPATH=. python tools/build_cost.py [--repeat 5]
+"""
+
+from __future__ import annotations
+
+import argparse
+import shutil
+import statistics
+import tempfile
+import time
+
+import py4j.clientserver
+from pyspark.sql import DataFrameWriter
+from pyspark.sql.classic.dataframe import DataFrame
+
+from matdb_spark import Database, Dimension, Schema, Value, get_spark
+
+COUNTS = {"py4j": 0, "datasets": 0}
+
+
+def _count(cls, name: str, key: str, again=lambda *a: False) -> None:
+    """Count calls of ``cls.name`` under ``key``, except repeats (``again``)."""
+    orig = getattr(cls, name)
+
+    def wrapped(*a, **kw):
+        COUNTS[key] += not again(*a)
+        return orig(*a, **kw)
+
+    setattr(cls, name, wrapped)
+
+
+class _WriteCall(Exception):
+    """Raised at the commit's write call: its build ends there."""
+
+
+def _stop_at_write(*a, **kw):
+    raise _WriteCall
+
+
+def _build(fn) -> tuple[float, int, int]:
+    """(ms, py4j round trips, Datasets) of one ``fn()`` call."""
+    before, t0 = dict(COUNTS), time.perf_counter()
+    try:
+        fn()
+    except _WriteCall:
+        pass
+    ms = (time.perf_counter() - t0) * 1e3
+    return ms, COUNTS["py4j"] - before["py4j"], COUNTS["datasets"] - before["datasets"]
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--repeat", type=int, default=5)
+    repeat = ap.parse_args().repeat
+    spark, tmp = get_spark(cpus=2), tempfile.mkdtemp(prefix="build_cost_")
+    db = Database.create(spark, f"{tmp}/db", Schema([Dimension("t", 4096), Dimension("s", 4)], [Value("v")]))
+
+    def commit(i=12):
+        with db.begin() as t:
+            t.add_dataframe(spark.range(160).selectExpr(f"{i * 10} + id % 10 AS t", "id div 10 AS s", "id AS v"))
+            t.commit()
+
+    try:
+        for i in range(12):
+            commit(i)
+        keys = [(i * 10 + i % 10, (5 * i) % 16) for i in (0, 1, 3, 4, 6, 8, 9, 11)]
+        _count(py4j.clientserver.ClientServerConnection, "send_command", "py4j")
+        # PySpark's DataFrame.__new__ runs __init__, then Python runs it again
+        _count(DataFrame, "__init__", "datasets", lambda df, *a: "_jdf" in vars(df))
+        DataFrameWriter.parquet = _stop_at_write
+        ops = {
+            "query_range": lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}),
+            "query_points": lambda: db.begin().query_points(keys),
+            "commit": commit,
+        }
+        print(f"{'op':<14}{'build_ms':>10}{'py4j':>8}{'datasets':>10}")
+        for name, fn in ops.items():
+            runs = [_build(fn) for _ in range(repeat + 1)][1:]  # the first warms up
+            ms, rt, ds = (statistics.median(r[i] for r in runs) for i in range(3))
+            print(f"{name:<14}{ms:>10.1f}{rt:>8.0f}{ds:>10.0f}")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    main()
