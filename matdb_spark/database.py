@@ -26,6 +26,17 @@ from matdb_spark.transaction import Transaction
 SCHEMA_FILENAME = "schema.json"  # reference: storage.rs:21
 
 
+def check_feed_columns(schema: Schema) -> None:
+    """Refuse a change feed over ``schema`` when its tag column would
+    collide with a store column — ``changes()`` would silently replace
+    the user's column, the DSv2 feed would declare it twice."""
+    if "change_type" in schema.column_names:
+        raise ValueError(
+            "changes() emits a 'change_type' column, which collides "
+            "with a schema column of that name; rename the column"
+        )
+
+
 class Database:
     def __init__(self, spark: SparkSession, path: str, schema: Schema):
         self.spark = spark
@@ -75,7 +86,7 @@ class Database:
         cannot express this (its visibility is always "now").
 
         One ``_commits`` listing resolves the snapshot
-        (``manifest.resolve``) and fixes the current horizon, which
+        (``manifest.resolve_as_of``) and fixes the current horizon, which
         covers every commit visible ON DISK right now, not just those
         this handle made. The reference's horizon is its in-memory
         next-id counter (database.rs:68-72) — correct for an embedded
@@ -83,26 +94,8 @@ class Database:
         sharing one path a handle-local counter goes stale and a
         'current' snapshot would silently miss foreign commits (found
         by the auto-compact concurrency soak)."""
-        snap = manifest.resolve(self.path, None if as_of is None else as_of + 1)
-        horizon = max(self.next_txn_id, max(snap.committed, default=0) + 1)
-        if as_of is None:
-            return Transaction(self, snap, horizon)
-        if as_of >= horizon:
-            raise ValueError(f"as_of={as_of} is in the future (next txn {horizon})")
-        # Fail LOUDLY when the historical snapshot is no longer
-        # complete: a compaction beyond the horizon replaced txns
-        # inside it and vacuum deleted their manifests — silently
-        # scanning the survivors would return partial data. The check
-        # walks replace-CHAINS via each rollup's covers_lo, so a
-        # vacuumed intermediate rollup cannot hide the loss.
-        gone = manifest.missing_history(self.path, as_of)
-        if gone:
-            raise ValueError(
-                f"time-travel snapshot as_of={as_of} is unreadable: txns "
-                f"{gone} were superseded by a later compaction and vacuumed "
-                f"away; historical reads are valid only until vacuum"
-            )
-        return Transaction(self, snap, as_of + 1, read_only=True)
+        snap, horizon = manifest.resolve_as_of(self.path, as_of, self.next_txn_id)
+        return Transaction(self, snap, horizon, read_only=as_of is not None)
 
     def allocate_txn_id(self) -> int:
         """Lazy txn-id allocation at first flush
@@ -705,13 +698,7 @@ class Database:
 
         if resolution not in ("row", "cell"):
             raise ValueError(f"resolution={resolution!r}; expected 'row' or 'cell'")
-        # the feed's tag column must not silently overwrite user data
-        # (withColumn REPLACES an existing column of the same name)
-        if "change_type" in self.schema.column_names:
-            raise ValueError(
-                "changes() emits a 'change_type' column, which collides "
-                "with a schema column of that name; rename the column"
-            )
+        check_feed_columns(self.schema)
 
         # Default head comes from the manifest LISTING (safe_feed_head),
         # not this handle's cached next_txn_id — another writer process

@@ -501,6 +501,35 @@ def resolve(db_path: str, horizon: int | None = None) -> Snapshot:
     return Snapshot(db_path, committed, txns, replaced, manifests)
 
 
+def resolve_as_of(db_path: str, as_of: int | None, next_id: int = 1) -> tuple[Snapshot, int]:
+    """``(snapshot, horizon)`` of a read at the head (``as_of=None``)
+    or of a TIME-TRAVEL read seeing exactly the commits with id <=
+    ``as_of`` — the one check ``Database.begin`` and the DSv2 reader
+    share. The head's horizon is one past the newest committed id, and
+    at least ``next_id`` (the caller's own next-id counter). Raises
+    when ``as_of`` is at or past the head's horizon, or when its
+    snapshot is no longer complete: a compaction beyond it replaced
+    txns inside it and vacuum deleted their manifests — silently
+    scanning the survivors would return partial data
+    (``missing_history``, which walks replace-CHAINS via each rollup's
+    covers_lo, so a vacuumed intermediate rollup cannot hide the
+    loss)."""
+    snap = resolve(db_path, None if as_of is None else as_of + 1)
+    head = max(next_id, max(snap.committed, default=0) + 1)
+    if as_of is None:
+        return snap, head
+    if as_of >= head:
+        raise ValueError(f"as_of={as_of} is in the future (next txn {head})")
+    gone = missing_history(db_path, as_of)
+    if gone:
+        raise ValueError(
+            f"time-travel snapshot as_of={as_of} is unreadable: txns "
+            f"{gone} were superseded by a later compaction and vacuumed "
+            f"away; historical reads are valid only until vacuum"
+        )
+    return snap, as_of + 1
+
+
 def visible_txn_ids(db_path: str, horizon: int) -> list[int]:
     """The visible txn ids below ``horizon`` (``resolve(...).txns``)."""
     return resolve(db_path, horizon).txns

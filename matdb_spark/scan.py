@@ -25,7 +25,11 @@ semantics (README.md:107-109) — the reference's code path is stubbed
 (scan.rs:162 tags every live source ``TransactionId::MAX``); see
 SURVEY §2.1 O2. Within-transaction duplicates resolve to the highest
 write sequence (last-write-wins, mirroring the in-place cell overwrite
-of block.rs:45-49).
+of block.rs:45-49). This module owns the rule for every read path:
+``resolve_arrow`` applies it to an Arrow table for the readers that
+resolve without Spark (the DSv2 snapshot and change-feed readers),
+with keys compared as Spark's grouping compares them (NaN equals NaN,
+−0.0 equals 0.0 and is emitted as 0.0).
 
 Scale: a full or key-range scan shuffles once for the dedup
 aggregation, partitioned by the full dimension tuple (maximum key
@@ -59,6 +63,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
 from matdb_spark.schema import Schema, SEQ_COL, TXN_COL, _dtype
+from matdb_spark.stats import spark_order, txn_intersects
 from matdb_spark import manifest
 
 
@@ -346,16 +351,16 @@ def _key_predicate(schema: Schema, keys: list[tuple]) -> str:
 
 def _envelope(boxes: list[dict[str, tuple]]) -> dict[str, tuple]:
     """One box covering every box: per dim, the least lo and greatest
-    hi (None — open — when any box leaves that side open, bounds it by
-    NaN or does not bound the dim at all)."""
+    hi in Spark's order, where NaN sorts above every other double (None
+    — open — when any box leaves that side open or does not bound the
+    dim at all)."""
     env = {}
     for name in dict.fromkeys(n for b in boxes for n in b):
         los = [b.get(name, (None, None))[0] for b in boxes]
         his = [b.get(name, (None, None))[1] for b in boxes]
-        # a NaN side (unordered for min/max; above +inf in Spark) stays open
         env[name] = (
-            None if any(v is None or v != v for v in los) else min(los),
-            None if any(v is None or v != v for v in his) else max(his),
+            None if None in los else min(los, key=spark_order),
+            None if None in his else max(his, key=spark_order),
         )
     return env
 
@@ -367,8 +372,6 @@ def plan_txns(
     rows inside ``boxes`` (none: all rows) — the one planning rule of
     ``scan_dataframe`` and the DSv2 reader. ``kept`` maps each txn the
     read must open to the indices of the boxes it may hold."""
-    from matdb_spark.stats import txn_intersects
-
     kept: dict[int, list[int]] = {}
     for t in snap.txns:
         # A txn that wrote no data file (an empty commit) adds no rows
@@ -632,6 +635,64 @@ def scan_dataframe(
         # key order. Range-partitioned sort; skipped when ordered=False.
         df = df.orderBy(*dims)
     return df
+
+
+def resolve_arrow(table, dims: list[str], versioned: bool = True, keep_tombstones: bool = False):
+    """``scan_dataframe``'s row-level rule over an Arrow table, for the
+    readers that resolve a chunk's rows without Spark (the DSv2
+    snapshot and change-feed readers): per key, the row with the newest
+    (``__txn``, ``__seq``) wins — one whole row, whichever of tied rows
+    the sort leaves last — and, unless ``keep_tombstones``, a winner
+    whose value cells are all null is dropped. ``versioned=False``
+    declares a table that already holds one version per key (a
+    ``unique_keys`` txn) and has no version columns: only the
+    tombstone rule applies, as in ``scan_dataframe``'s dedup-free plan.
+
+    Keys compare as Spark's grouping compares them: NaN equals NaN,
+    −0.0 equals 0.0 and comes out as 0.0, and every other value
+    (integers, decimals, strings, binary, dates, timestamps) compares
+    by value. Resolved winners come out in key order; every input
+    column is kept."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if versioned and len(table):
+        floats = [d for d in dims if pa.types.is_floating(table.schema.field(d).type)]
+        for d in floats:
+            # Spark normalizes float keys before grouping: −0.0 → 0.0
+            col = table[d]
+            zero = pa.scalar(0.0, col.type)
+            table = table.set_column(
+                table.schema.get_field_index(d), d, pc.if_else(pc.equal(col, zero), zero, col)
+            )
+        table = table.sort_by([(c, "ascending") for c in dims + [TXN_COL, SEQ_COL]])
+        # a row wins when the next row holds another key (or none)
+        differs = pa.repeat(False, len(table) - 1)
+        for d in dims:
+            a, b = table[d][:-1], table[d][1:]
+            ne = pc.not_equal(a, b)
+            if d in floats:  # NaN != NaN, yet all NaNs are one key
+                ne = pc.and_not(ne, pc.and_(pc.is_nan(a), pc.is_nan(b)))
+            differs = pc.or_(differs, ne)
+        table = table.filter(pa.chunked_array([*differs.chunks, pa.array([True])]))
+    if not keep_tombstones:
+        table = table.filter(_has_value(table, dims))
+    return table
+
+
+def _has_value(table, dims: list[str]):
+    """Arrow mask of ``table``'s rows that set at least one value cell
+    (every row of a key-only schema): the rows a scan emits — a row
+    whose value cells are all absent does not exist
+    (block.rs:277-279) — and the 'upsert's of a change feed."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vals = [c for c in table.column_names if c not in dims and c not in (TXN_COL, SEQ_COL)]
+    has = pa.repeat(not vals, len(table))
+    for v in vals:
+        has = pc.or_(has, pc.is_valid(table[v]))
+    return has
 
 
 def _where(df: DataFrame, conds: list[str], predicate: str | None) -> DataFrame:

@@ -33,6 +33,14 @@ invariant), so newest-(txn, seq)-wins resolution is chunk-local and
 the source needs NO shuffle at all — Spark receives already-resolved
 snapshot rows as Arrow record batches.
 
+Both readers, the snapshot and the change feed, read a chunk's files
+with one helper (``_read_files``) and resolve them with
+``scan.resolve_arrow`` — the library scan's rule, kept beside its
+``max_by`` plan in scan.py — so the two paths cannot drift. Keys
+compare as Spark's grouping compares them: NaN equals NaN, −0.0
+equals 0.0 and reads back as 0.0, and every other key type compares
+by value.
+
 Semantics and bounds, stated plainly:
 - Committed state only (a snapshot of the store as of the horizon) —
   read-your-own-writes overlays are a Transaction concept and stay on
@@ -82,26 +90,20 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from matdb_spark import manifest
-from matdb_spark.schema import SEQ_COL, Schema
-from matdb_spark.scan import _chunk_ranges, _select_manifest_files, plan_txns
+from matdb_spark.schema import SEQ_COL, TXN_COL, Schema
+from matdb_spark.stats import spark_order
+from matdb_spark.scan import (
+    _chunk_ranges,
+    _has_value,
+    _select_manifest_files,
+    plan_txns,
+    resolve_arrow,
+)
 
 SCHEMA_FILENAME = "schema.json"
-
-_ARROW_TYPES = {
-    "long": "int64",
-    "int": "int32",
-    "double": "float64",
-    "float": "float32",
-    "string": "string",
-    "timestamp": "timestamp[us, tz=UTC]",
-    "date": "date32[day]",
-    "boolean": "bool",
-    "binary": "binary",
-    "decimal(20,0)": "decimal128(20, 0)",
-}
-
 
 def _truthy(v) -> bool:
     return str(v).strip().lower() in ("true", "1", "yes")
@@ -257,22 +259,28 @@ def _apply_pending_evolution(db_path: str, pending: list) -> None:
             pass
 
 
-def _arrow_type(name: str):
+def _read_files(files: list, sch: Schema, versioned: bool):
+    """One partition's ``(path, effective txn)`` files as one Arrow
+    table of the store's columns — a value column a file predates reads
+    as typed nulls — plus, when ``versioned``, each row's write
+    sequence and effective txn (``__seq``, ``__txn``): the input of
+    ``scan.resolve_arrow``."""
     import pyarrow as pa
+    import pyarrow.dataset as ds
 
-    mapping = {
-        "long": pa.int64(),
-        "int": pa.int32(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "string": pa.string(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "date": pa.date32(),
-        "boolean": pa.bool_(),
-        "binary": pa.binary(),
-        "decimal(20,0)": pa.decimal128(20, 0),
-    }
-    return mapping[name]
+    file_schema = pa.schema(
+        [f.with_nullable(True) for f in to_arrow_schema(sch.staging_schema())]
+    )
+    cols = sch.column_names + ([SEQ_COL] if versioned else [])
+    tables = [
+        ds.dataset(path, schema=file_schema, format="parquet").to_table(columns=cols)
+        for path, _ in files
+    ]
+    t = pa.concat_tables(tables) if tables else file_schema.empty_table().select(cols)
+    if versioned:
+        txns = [pa.repeat(pa.scalar(eff, pa.int64()), len(f)) for (_, eff), f in zip(files, tables)]
+        t = t.append_column(TXN_COL, pa.chunked_array(txns, pa.int64()))
+    return t
 
 
 @dataclass
@@ -370,21 +378,10 @@ class MatdbDataSource(DataSource):
         return os.path.abspath(p)
 
     def schema(self):
-        from pyspark.sql import types as T
-
         sch = Schema.load(os.path.join(self._db_path(), SCHEMA_FILENAME))
-        base = sch.spark_schema()
         if self.options.get("feed") == "changes":
-            # CDC stream form: snapshot columns + the change tag and
-            # the writing commit (database.py changes())
-            return T.StructType(
-                list(base.fields)
-                + [
-                    T.StructField("change_type", T.StringType(), False),
-                    T.StructField("__txn", T.LongType(), False),
-                ]
-            )
-        return base
+            return _feed_schema(sch)
+        return sch.spark_schema()
 
     def reader(self, schema) -> "MatdbSnapshotReader":
         if self.options.get("feed") == "changes":
@@ -461,9 +458,9 @@ class MatdbSnapshotReader(DataSourceReader):
         def tighten(name: str, lo=None, hi=None) -> None:
             clo, chi = self.bounds.get(name, (None, None))
             if lo is not None:
-                clo = lo if clo is None else max(clo, lo)
+                clo = lo if clo is None else max(clo, lo, key=spark_order)
             if hi is not None:
-                chi = hi if chi is None else min(chi, hi)
+                chi = hi if chi is None else min(chi, hi, key=spark_order)
             self.bounds[name] = (clo, chi)
 
         for f in filters:
@@ -482,16 +479,20 @@ class MatdbSnapshotReader(DataSourceReader):
                 tighten(col, lo=f.value + 1)
             elif isinstance(f, LessThan) and integral:
                 tighten(col, hi=f.value - 1)
-            elif isinstance(f, In) and f.values:
+            elif isinstance(f, In) and f.value:
                 try:
-                    tighten(col, lo=min(f.values), hi=max(f.values))
+                    tighten(
+                        col,
+                        lo=min(f.value, key=spark_order),
+                        hi=max(f.value, key=spark_order),
+                    )
                 except TypeError:
                     pass
         return filters  # Spark re-applies everything (see docstring)
 
     # ---- driver-side planning ----------------------------------------
     def partitions(self):
-        snap = self._snapshot()
+        snap, _ = manifest.resolve_as_of(self.db_path, self.as_of)
         kept, dedup_free, rank = plan_txns(snap, [self.bounds] if self.bounds else [])
         cranges = _chunk_ranges(self.schema_obj, self.bounds)
         files = [  # (abs path, effective txn)
@@ -504,88 +505,15 @@ class MatdbSnapshotReader(DataSourceReader):
             return [ChunkPartition(files=[fe], dedup_free=True) for fe in files]
         return _chunk_partitions(files)
 
-    def _snapshot(self) -> manifest.Snapshot:
-        if self.as_of is None:
-            return manifest.resolve(self.db_path)
-        snap = manifest.resolve(self.db_path, self.as_of + 1)
-        current = max(snap.committed, default=0) + 1
-        if self.as_of >= current:
-            raise ValueError(
-                f"as_of={self.as_of} is in the future (next txn {current})"
-            )
-        gone = manifest.missing_history(self.db_path, self.as_of)
-        if gone:
-            raise ValueError(
-                f"time-travel snapshot as_of={self.as_of} is unreadable: "
-                f"txns {gone} were vacuumed after a later compaction"
-            )
-        return snap
-
     # ---- executor-side read ------------------------------------------
     def read(self, partition: ChunkPartition):
-        """One chunk's resolution as a pure-Arrow pipeline: read each
-        file (missing evolved value columns materialize as typed
-        nulls), stamp its effective txn, sort by (dims, txn, seq),
-        keep the LAST row per key (== max_by((txn, seq)) of the JVM
-        path), drop all-null-value rows (block.rs:277-279: unset cells
-        never appear), and emit batches."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
+        """One chunk's snapshot rows: its files resolved by
+        ``scan.resolve_arrow`` (newest (txn, seq) per key, all-null
+        rows dropped), in key order, as Arrow batches."""
         sch = self.schema_obj
-        dims, vals = sch.dim_names, sch.value_names
-        out_fields = [
-            pa.field(d.name, _arrow_type(d.type), nullable=False)
-            for d in sch.dimensions
-        ] + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-        out_schema = pa.schema(out_fields)
-        if not partition.files:
-            yield from pa.table(
-                {f.name: pa.array([], f.type) for f in out_fields}
-            ).to_batches()
-            return
-        file_schema = pa.schema(
-            [pa.field(d.name, _arrow_type(d.type)) for d in sch.dimensions]
-            + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-            + [pa.field(SEQ_COL, pa.int64())]
-        )
-        tables = []
-        for path, eff in partition.files:
-            t = ds.dataset(path, schema=file_schema, format="parquet").to_table(
-                columns=dims + vals + ([] if partition.dedup_free else [SEQ_COL])
-            )
-            if not partition.dedup_free:
-                t = t.append_column(
-                    "__txn", pa.array([eff] * len(t), pa.int64())
-                )
-            tables.append(t)
-        t = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-        if not partition.dedup_free and len(t):
-            t = t.sort_by(
-                [(d, "ascending") for d in dims]
-                + [("__txn", "ascending"), (SEQ_COL, "ascending")]
-            )
-            # winner = last row of each key group after the sort
-            if len(t) > 1:
-                neq = np.zeros(len(t) - 1, dtype=bool)
-                for d in dims:
-                    a = t[d].to_numpy(zero_copy_only=False)
-                    neq |= a[:-1] != a[1:]
-                mask = np.append(neq, True)
-            else:
-                mask = np.array([True])
-            t = t.filter(pa.array(mask)).select(dims + vals)
-        else:
-            t = t.select(dims + vals)
-        if vals and len(t):
-            import pyarrow.compute as pc
-
-            any_set = pc.is_valid(t[vals[0]])
-            for v in vals[1:]:
-                any_set = pc.or_(any_set, pc.is_valid(t[v]))
-            t = t.filter(any_set)
-        yield from t.cast(out_schema).to_batches()
+        versioned = not partition.dedup_free
+        t = resolve_arrow(_read_files(partition.files, sch, versioned), sch.dim_names, versioned)
+        yield from t.select(sch.column_names).cast(to_arrow_schema(sch.spark_schema())).to_batches()
 
 
 # ------------------------------------------------------------- writer
@@ -633,12 +561,7 @@ def _write_segment_files(iterator, schema_obj, base_dir, flush_rows=None):
     dims, vals = sch.dim_names, sch.value_names
     cols = dims + vals
     chunked = sch.chunked_dims
-    arrow_fields = [
-        pa.field(d.name, _arrow_type(d.type), nullable=False)
-        for d in sch.dimensions
-    ] + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-    arrow_fields.append(pa.field(SEQ_COL, pa.int64(), nullable=False))
-    out_schema = pa.schema(arrow_fields)
+    out_schema = to_arrow_schema(sch.staging_schema())  # dims, values, __seq
     stat_dims = [
         (i, d.name)
         for i, d in enumerate(sch.dimensions)
@@ -651,8 +574,8 @@ def _write_segment_files(iterator, schema_obj, base_dir, flush_rows=None):
         nonlocal total
         rows.sort(key=lambda r: tuple(r[: len(dims)]))
         arrays = [
-            pa.array([r[i] for r in rows], type=f.type)
-            for i, f in enumerate(arrow_fields[:-1])
+            pa.array([r[i] for r in rows], type=out_schema.field(i).type)
+            for i in range(len(cols))
         ]
         arrays.append(pa.array([1] * len(rows), type=pa.int64()))
         table = pa.Table.from_arrays(arrays, schema=out_schema)
@@ -933,6 +856,23 @@ class MatdbStreamWriter(DataSourceStreamWriter):
 
 
 # ------------------------------------------------------- CDC stream source
+def _feed_schema(sch: Schema):
+    """Row schema of the change feed (database.py ``changes``): the
+    snapshot columns plus the change tag and the writing commit."""
+    from pyspark.sql import types as T
+
+    from matdb_spark.database import check_feed_columns
+
+    check_feed_columns(sch)
+    return T.StructType(
+        sch.spark_schema().fields
+        + [
+            T.StructField("change_type", T.StringType(), False),
+            T.StructField(TXN_COL, T.LongType(), False),
+        ]
+    )
+
+
 class MatdbChangesStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("matdb").option("feed", "changes")
     .load(db)`` — the change feed (database.py changes/follow_changes)
@@ -986,68 +926,18 @@ class MatdbChangesStreamReader(DataSourceStreamReader):
 
     def read(self, partition: ChunkPartition):
         """Window-net-effect rows for one chunk: newest (txn, seq) per
-        key over the WINDOW segments only, tombstones kept and tagged
-        'delete' (a scan drops them; a feed must deliver them)."""
-        import numpy as np
-        import pyarrow as pa
+        key over the WINDOW segments only (``scan.resolve_arrow``),
+        tombstones kept and tagged 'delete' (a scan drops them; a feed
+        must deliver them)."""
         import pyarrow.compute as pc
-        import pyarrow.dataset as ds
 
         sch = self.schema_obj
-        dims, vals = sch.dim_names, sch.value_names
-        out_fields = (
-            [
-                pa.field(d.name, _arrow_type(d.type), nullable=False)
-                for d in sch.dimensions
-            ]
-            + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-            + [pa.field("change_type", pa.string(), nullable=False),
-               pa.field("__txn", pa.int64(), nullable=False)]
+        t = resolve_arrow(
+            _read_files(partition.files, sch, True), sch.dim_names, keep_tombstones=True
         )
-        out_schema = pa.schema(out_fields)
-        if not partition.files:
-            yield from pa.table(
-                {f.name: pa.array([], f.type) for f in out_fields}
-            ).to_batches()
-            return
-        file_schema = pa.schema(
-            [pa.field(d.name, _arrow_type(d.type)) for d in sch.dimensions]
-            + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-            + [pa.field(SEQ_COL, pa.int64())]
-        )
-        tables = []
-        for path, eff in partition.files:
-            t = ds.dataset(path, schema=file_schema, format="parquet").to_table(
-                columns=dims + vals + [SEQ_COL]
-            )
-            t = t.append_column("__txn", pa.array([eff] * len(t), pa.int64()))
-            tables.append(t)
-        t = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-        if len(t):
-            t = t.sort_by(
-                [(d, "ascending") for d in dims]
-                + [("__txn", "ascending"), (SEQ_COL, "ascending")]
-            )
-            if len(t) > 1:
-                neq = np.zeros(len(t) - 1, dtype=bool)
-                for d in dims:
-                    a = t[d].to_numpy(zero_copy_only=False)
-                    neq |= a[:-1] != a[1:]
-                mask = np.append(neq, True)
-            else:
-                mask = np.array([True])
-            t = t.filter(pa.array(mask))
-        t = t.select(dims + vals + ["__txn"])
-        if vals and len(t):
-            any_set = pc.is_valid(t[vals[0]])
-            for v in vals[1:]:
-                any_set = pc.or_(any_set, pc.is_valid(t[v]))
-            ctype = pc.if_else(any_set, pa.scalar("upsert"), pa.scalar("delete"))
-        else:
-            ctype = pa.array(["upsert"] * len(t), pa.string())
-        t = t.append_column("change_type", ctype)
-        t = t.select(dims + vals + ["change_type", "__txn"])
-        yield from t.cast(out_schema).to_batches()
+        change = pc.if_else(_has_value(t, sch.dim_names), "upsert", "delete")
+        t = t.append_column("change_type", change).select(sch.column_names + ["change_type", TXN_COL])
+        yield from t.cast(to_arrow_schema(_feed_schema(sch))).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # cursor durability is the checkpoint's job

@@ -93,13 +93,8 @@ def collect_segment_info(seg_dir: str, schema) -> tuple[dict | None, list[str]]:
                     if st is None or not st.has_min_max:
                         stats_ok = False
                         break
-                    mn, mx = st.min, st.max
                     cur = out.get(d)
-                    if cur is None:
-                        out[d] = [mn, mx]
-                    else:
-                        cur[0] = min(cur[0], mn)
-                        cur[1] = max(cur[1], mx)
+                    out[d] = [st.min, st.max] if cur is None else _hull(cur, [st.min, st.max])
                 if not stats_ok:
                     break
         except Exception:
@@ -116,11 +111,21 @@ def merge_stats(a: dict | None, b: dict | None) -> dict | None:
         return None
     dims: dict[str, list] = {}
     for d in set(a["dims"]) & set(b["dims"]):
-        dims[d] = [
-            min(a["dims"][d][0], b["dims"][d][0]),
-            max(a["dims"][d][1], b["dims"][d][1]),
-        ]
+        dims[d] = _hull(a["dims"][d], b["dims"][d])
     return {"rows": a["rows"] + b["rows"], "dims": dims}
+
+
+def spark_order(v):
+    """Sort key of a key bound in Spark's order, where NaN sorts above
+    every other double — Python's ``min``/``max`` leave NaN unordered,
+    so ``max(0.1, nan)`` is 0.1 and a merged bound would exclude the
+    file's NaN and everything above 0.1 with it."""
+    return (v != v, v)
+
+
+def _hull(a: list, b: list) -> list:
+    """The [min, max] range covering ranges ``a`` and ``b``."""
+    return [min(a[0], b[0], key=spark_order), max(a[1], b[1], key=spark_order)]
 
 
 def txn_intersects(stats: dict | None, bounds: dict[str, tuple]) -> bool:

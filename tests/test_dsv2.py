@@ -611,3 +611,80 @@ def test_dsv2_cdc_source_raises_on_vacuumed_window(spark, tmp_path_factory):
     with pytest.raises(ValueError) as src:
         MatdbChangesStreamReader(p, 0).partitions({"cursor": 0}, {"cursor": 3})
     assert str(src.value) == str(lib.value)
+
+
+def _feed(p, lo, hi):
+    """The DSv2 change feed over ``(lo, hi]``, read in-process."""
+    from matdb_spark.sources.dsv2 import MatdbChangesStreamReader
+
+    r = MatdbChangesStreamReader(p, lo)
+    return [
+        row
+        for part in r.partitions({"cursor": lo}, {"cursor": hi})
+        for batch in r.read(part)
+        for row in batch.to_pylist()
+    ]
+
+
+def test_dsv2_double_keys_group_like_spark(spark, tmp_path_factory):
+    """A ``double`` key compares as Spark's grouping compares it: NaN
+    written in two txns is ONE key (the newer wins), and 0.0 then -0.0
+    is one key emitted as 0.0 — in the snapshot reader and the change
+    feed alike, as in the library scan."""
+    import math
+
+    register_matdb_source(spark)
+    p = str(tmp_path_factory.mktemp("dsv2nan") / "db")
+    nan = float("nan")
+    db = Database.create(
+        spark, p, Schema(dimensions=[Dimension("k", 0, type="double")], values=[Value("v")])
+    )
+    with db.begin() as t:
+        t.add_rows([(nan, 1), (0.0, 1), (1.5, 1)])
+        t.commit()
+    with db.begin() as t:
+        t.add_rows([(nan, 2), (-0.0, 2)])
+        t.commit()
+
+    def rows(rs):  # repr keeps NaN comparable and -0.0 apart from 0.0
+        return sorted((repr(r["k"]), r["v"]) for r in rs)
+
+    lib = rows(db.begin().query().collect())
+    assert lib == [("0.0", 2), ("1.5", 1), ("nan", 2)]
+    assert rows(spark.read.format("matdb").load(p).collect()) == lib
+    feed = _feed(p, 0, 2)
+    lib_feed = db.changes(0, 2).collect()
+    assert sorted((repr(r["k"]), r["v"], r["change_type"], r["__txn"]) for r in feed) == sorted(
+        (repr(r["k"]), r["v"], r["change_type"], r["__txn"]) for r in lib_feed
+    )
+    assert len(feed) == 3 and not any(math.copysign(1, r["k"]) < 0 for r in feed)
+
+    # a pushed IN with NaN prunes in Spark's order (NaN above +inf):
+    # txn 3's stats [5.0, NaN] may hold NaN, so it is read
+    with db.begin() as t:
+        t.add_rows([(nan, 3), (5.0, 3)])
+        t.commit()
+    got = spark.read.format("matdb").load(p).filter(F.col("k").isin([1.5, nan]))
+    assert rows(got.collect()) == [("1.5", 1), ("nan", 3)]
+
+
+def test_dsv2_change_feed_rejects_change_type_column(spark, tmp_path_factory):
+    """A store with a ``change_type`` column cannot carry the feed's tag:
+    the DSv2 feed raises the library's error when the stream is
+    planned, instead of declaring the column twice."""
+    from matdb_spark.sources.dsv2 import MatdbDataSource
+
+    register_matdb_source(spark)
+    p = str(tmp_path_factory.mktemp("dsv2ctype") / "db")
+    db = Database.create(
+        spark, p, Schema(dimensions=[Dimension("k", 10)], values=[Value("change_type", "string")])
+    )
+    with pytest.raises(ValueError, match="collides") as lib:
+        db.changes(0)
+    with pytest.raises(ValueError) as src:
+        MatdbDataSource({"path": p, "feed": "changes"}).schema()
+    assert str(src.value) == str(lib.value)
+    with pytest.raises(Exception, match="collides"):
+        spark.readStream.format("matdb").option("feed", "changes").load(p)
+    # the snapshot read of the same store is unaffected
+    assert "change_type" in MatdbDataSource({"path": p}).schema().fieldNames()

@@ -11,11 +11,16 @@ visibility bugs that fixed fixtures miss.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
 import shutil
+import tempfile
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 from matdb_spark import Database, Dimension, Schema, Value
 
@@ -266,3 +271,295 @@ def test_incremental_maintenance_matches_recompute(spark, workload, cut):
         return sorted(tuple(r) for r in df.collect())
 
     assert norm(patched) == norm(recomputed)
+
+
+# ---------------------------------------------------------------------
+# Every read path against one model. A workload over a store whose
+# first dim is one of the dim types a store accepts (drawn from a pool
+# of six keys per type: extremes, zero, NaN and both zeros for
+# `double`) and whose second dim is a chunked long, so the DSv2 reader
+# plans several partitions. The model keeps, per key, the set of rows
+# its newest write may have left: one row, or every row of a key that
+# one add_dataframe call wrote more than once (those tie on (txn, seq)
+# and resolve arbitrarily — each path may pick any of them). Keys
+# compare as Spark groups them: NaN equals NaN, -0.0 equals 0.0 and
+# reads back as 0.0.
+_NAN = float("nan")
+_KEY_POOLS = {
+    "long": [-(2**62), -5, 0, 3, 4, 2**62],
+    "int": [-(2**31), -5, 0, 3, 4, 2**31 - 1],
+    "decimal(20,0)": [
+        decimal.Decimal(v) for v in (-(10**19), -5, 0, 3, 4, 10**19)
+    ],
+    "double": [_NAN, 0.0, -0.0, 1.5, -2.5, float("inf")],
+    "string": ["", "a", "ab", "b", "é", "zz"],
+    "date": [
+        datetime.date(1900, 1, 1), datetime.date(1969, 12, 31), datetime.date(1970, 1, 1),
+        datetime.date(2000, 2, 29), datetime.date(2024, 6, 30), datetime.date(2100, 12, 31),
+    ],
+    "timestamp": [
+        datetime.datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=datetime.timezone.utc),
+        datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc),
+        datetime.datetime(2000, 2, 29, 12, 0, 0, 500000, tzinfo=datetime.timezone.utc),
+        datetime.datetime(2024, 6, 30, tzinfo=datetime.timezone.utc),
+        datetime.datetime(2024, 6, 30, 0, 0, 0, 1, tzinfo=datetime.timezone.utc),
+        datetime.datetime(2100, 12, 31, tzinfo=datetime.timezone.utc),
+    ],
+}
+_TOMB = (None, None)  # (v, w) of a delete: every value cell null
+
+_key_idx = st.integers(0, 5)
+_b = st.integers(0, 3)
+_vw = st.tuples(st.one_of(st.none(), st.integers(-3, 9)), st.one_of(st.none(), st.integers(0, 3)))
+_call = st.one_of(
+    st.tuples(st.just("row"), _key_idx, _b, _vw),
+    st.tuples(st.just("del"), _key_idx, _b),
+    # one add_dataframe call; repeated keys in it tie, [] writes nothing
+    st.tuples(st.just("df"), st.lists(st.tuples(_key_idx, _b, _vw), max_size=6)),
+)
+_step = st.one_of(
+    st.tuples(st.just("txn"), st.lists(_call, max_size=4), st.booleans()),
+    st.tuples(st.just("minor"), st.integers(2, 4), st.sampled_from(["oldest", "newest"])),
+    st.tuples(st.just("major")),
+    st.tuples(st.just("vacuum")),
+)
+_reads = st.tuples(
+    st.tuples(_key_idx, _key_idx, _b, _b),  # a range: a in [lo, hi], b in [lo, hi]
+    st.lists(st.tuples(_key_idx, _b), min_size=1, max_size=4),  # point keys
+    st.integers(0, 20),  # as_of pick among the committed ids
+    st.integers(0, 20), st.integers(0, 20),  # change window picks
+)
+# txn 1 writes NaN, 0.0 and 1.5, txn 2 writes NaN and -0.0 (for `double`)
+_NAN_ZERO_WORKLOAD = [
+    ("txn", [("df", [(0, 0, (1, 1)), (1, 0, (1, 1)), (3, 0, (1, 1))])], True),
+    ("txn", [("df", [(0, 0, (2, 2)), (2, 0, (2, 2))])], True),
+]
+
+
+def _norm(x):
+    """A key as Spark's grouping emits it: -0.0 as 0.0."""
+    return 0.0 if isinstance(x, float) and x == 0 else x
+
+
+def _tok(x):
+    """A key value made comparable: floats by repr (NaN equals NaN,
+    -0.0 differs from 0.0), timestamps by their UTC microseconds."""
+    if isinstance(x, float):
+        return repr(x)
+    if isinstance(x, datetime.datetime):
+        return T.TimestampType().toInternal(x)
+    return x
+
+
+def _order(x):
+    """Spark's sort order of a key value: NaN above every double."""
+    if isinstance(x, float):
+        return (x != x, 0.0 if x != x else x)
+    if isinstance(x, datetime.datetime):
+        return T.TimestampType().toInternal(x)
+    return x
+
+
+def _check_rows(tag, rows, state, ordered=False):
+    """``rows`` (with a, b, v, w) are the snapshot ``state`` (key ->
+    allowed (v, w) rows): one row per key, each an allowed row, and a
+    key missing only where its newest write may be a delete."""
+    got = {}
+    for r in rows:
+        k = (_tok(r["a"]), r["b"])
+        assert k not in got, f"{tag}: key {k} returned twice"
+        got[k] = (r["v"], r["w"])
+    assert set(got) <= set(state), f"{tag}: keys {set(got) - set(state)} not in the model"
+    for k, allowed in state.items():
+        if k in got:
+            assert got[k] in allowed and got[k] != _TOMB, f"{tag}: {k} = {got[k]}, model {allowed}"
+        else:
+            assert _TOMB in allowed, f"{tag}: {k} missing, model {allowed}"
+    if ordered:
+        keys = [(_order(r["a"]), r["b"]) for r in rows]
+        assert keys == sorted(keys), f"{tag}: not in key order"
+
+
+def _check_feed(tag, rows, feed):
+    """``rows`` are the change feed ``feed`` (key -> (allowed rows,
+    txn)): every key written in the window once, deletes tagged."""
+    got = {}
+    for r in rows:
+        k = (_tok(r["a"]), r["b"])
+        assert k not in got, f"{tag}: key {k} returned twice"
+        got[k] = ((r["v"], r["w"]), r["change_type"], r["__txn"])
+    assert set(got) == set(feed), f"{tag}: keys {set(got) ^ set(feed)}"
+    for k, (vw, change, txn) in got.items():
+        allowed, want_txn = feed[k]
+        assert vw in allowed and txn == want_txn, f"{tag}: {k} = {got[k]}, model {feed[k]}"
+        assert change == ("delete" if vw == _TOMB else "upsert"), f"{tag}: {k} = {got[k]}"
+
+
+def _raises_alike(tag, lib_call, other_call):
+    """Both calls answer, or both refuse a read that vacuum made
+    unreadable, for the same reason; returns the two answers (None
+    where refused)."""
+    outs, errs = [], []
+    for call in (lib_call, other_call):
+        try:
+            outs.append(call())
+            errs.append(None)
+        except Exception as e:  # the DSv2 error arrives wrapped by Spark
+            outs.append(None)
+            errs.append(str(e))
+    if errs[0] is None:
+        assert errs[1] is None, f"{tag}: only the second path raised: {errs[1]}"
+    else:
+        reason = errs[0].split(":")[0]
+        assert "unreadable" in reason and errs[1] is not None and reason in errs[1], f"{tag}: {errs}"
+    return outs
+
+
+@pytest.mark.parametrize("dim_type", list(_KEY_POOLS))
+@settings(
+    max_examples=2,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(workload=st.lists(_step, min_size=1, max_size=6), reads=_reads)
+@example(workload=_NAN_ZERO_WORKLOAD, reads=((0, 5, 0, 3), [(0, 0), (2, 0)], 1, 0, 2))
+def test_every_read_path_matches_model(spark, dim_type, workload, reads):
+    from matdb_spark.sources.dsv2 import register_matdb_source
+
+    register_matdb_source(spark)
+    pool = _KEY_POOLS[dim_type]
+    # a new path per store: the DSv2 planner runs in a reused Python
+    # worker whose manifest cache a re-created store would leave stale
+    os.makedirs(SCRATCH, exist_ok=True)
+    path = tempfile.mkdtemp(prefix="prop_reads_", dir=SCRATCH)
+    try:
+        _read_every_way(spark, dim_type, pool, path, workload, reads)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _read_every_way(spark, dim_type, pool, path, workload, reads):
+    from pyspark.sql import functions as F
+
+    from matdb_spark.sources.dsv2 import MatdbChangesStreamReader
+
+    chunk = 4 if dim_type in ("long", "int", "decimal(20,0)") else 0
+    schema = Schema(
+        dimensions=[Dimension("a", chunk, type=dim_type), Dimension("b", 2)],
+        values=[Value("v"), Value("w")],
+    )
+    db = Database.create(spark, path, schema)
+
+    def key(ai, b):
+        return (_tok(_norm(pool[ai])), b)
+
+    writes: dict[int, dict] = {}  # committed user txn -> key -> allowed rows
+    committed = []  # every committed id, compactions included
+    for step in workload:
+        if step[0] == "txn":
+            txn = db.begin()
+            net: dict = {}
+            for call in step[1]:
+                if call[0] == "row":
+                    _, ai, b, vw = call
+                    txn.add_row([pool[ai], b, *vw])
+                    net[key(ai, b)] = {vw}
+                elif call[0] == "del":
+                    _, ai, b = call
+                    txn.delete_row([pool[ai], b])
+                    net[key(ai, b)] = {_TOMB}
+                else:
+                    rows = [(pool[ai], b, *vw) for ai, b, vw in call[1]]
+                    txn.add_dataframe(spark.createDataFrame(rows, schema.spark_schema()))
+                    tied: dict = {}
+                    for ai, b, vw in call[1]:
+                        tied.setdefault(key(ai, b), set()).add(vw)
+                    net.update(tied)
+            if step[2]:
+                txn.commit()
+                if txn.txn_id is not None:
+                    writes[txn.txn_id] = net
+                    committed.append(txn.txn_id)
+            else:
+                txn.rollback()
+        elif step[0] == "minor":
+            t = db.compact(max_txns=step[1], fold=step[2])
+            committed += [t] if t is not None else []
+        elif step[0] == "major":
+            t = db.compact()
+            committed += [t] if t is not None else []
+        else:
+            db.vacuum()
+
+    def state(upto=None):
+        out: dict = {}
+        for t in sorted(writes):
+            if upto is None or t <= upto:
+                out.update(writes[t])
+        return out
+
+    def in_box(k, lo, hi, blo, bhi):
+        a = _order(pool[lo]), _order(pool[hi])
+        return a[0] <= _order(k[0]) <= a[1] and blo <= k[1] <= bhi
+
+    head = state()
+    lo, hi, blo, bhi = reads[0]
+    blo, bhi = min(blo, bhi), max(blo, bhi)
+    # the box's state: keys are tokens, so compare through the pool
+    inv = {key(i, 0)[0]: pool[i] for i in range(len(pool))}
+    box = {k: r for k, r in head.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
+    points = {key(ai, b) for ai, b in reads[1]}
+
+    # the library's reads
+    _check_rows("query", db.begin().query().collect(), head, ordered=True)
+    rng = db.begin().query_range({"a": (pool[lo], pool[hi]), "b": (blo, bhi)}).collect()
+    _check_rows("query_range", rng, box, ordered=True)
+    pts = db.begin().query_points([(pool[ai], b) for ai, b in reads[1]]).collect()
+    _check_rows("query_points", pts, {k: r for k, r in head.items() if k in points}, ordered=True)
+
+    # the DSv2 snapshot reader, whole and with pushed dim filters
+    def dsv2(as_of=None, filtered=False):
+        r = spark.read.format("matdb")
+        df = (r if as_of is None else r.option("as_of", as_of)).load(path)
+        if filtered:
+            df = df.filter(
+                (F.col("a") >= F.lit(pool[lo])) & (F.col("a") <= F.lit(pool[hi]))
+                & (F.col("b") >= blo) & (F.col("b") <= bhi)
+            )
+        return df.collect()
+
+    _check_rows("dsv2", dsv2(), head)
+    _check_rows("dsv2 filtered", dsv2(filtered=True), box)
+
+    # time travel: the library and DSv2 agree, or both refuse alike
+    ids = committed or [0]
+    as_of = ids[reads[2] % len(ids)]
+    past = state(as_of)
+    lib, got = _raises_alike(
+        f"as_of={as_of}", lambda: db.begin(as_of=as_of).query().collect(), lambda: dsv2(as_of)
+    )
+    if lib is not None:
+        _check_rows(f"query as_of={as_of}", lib, past, ordered=True)
+        _check_rows(f"dsv2 as_of={as_of}", got, past)
+        past_box = {k: r for k, r in past.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
+        _check_rows(f"dsv2 filtered as_of={as_of}", dsv2(as_of, True), past_box)
+
+    # the change feed over (since, until]: the library and DSv2 alike
+    cursors = [0] + committed
+    since, until = sorted(cursors[i % len(cursors)] for i in reads[3:5])
+    feed: dict = {}
+    for t in sorted(writes):
+        if since < t <= until:
+            feed.update({k: (r, t) for k, r in writes[t].items()})
+
+    def dsv2_feed():
+        src = MatdbChangesStreamReader(path, since)
+        parts = src.partitions({"cursor": since}, {"cursor": until})
+        return [row for p in parts for batch in src.read(p) for row in batch.to_pylist()]
+
+    lib, got = _raises_alike(
+        f"changes({since}, {until})", lambda: db.changes(since, until).collect(), dsv2_feed
+    )
+    if lib is not None:
+        _check_feed(f"changes({since}, {until})", lib, feed)
+        _check_feed(f"dsv2 feed ({since}, {until}]", got, feed)

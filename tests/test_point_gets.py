@@ -179,8 +179,8 @@ def test_txn_without_stats_or_files(spark, tmp_db_path, field):
 
 def test_decimal_and_string_dims(spark, tmp_db_path):
     """A chunked decimal(20,0) dim (keys past 2^63, negatives and chunk
-    boundaries) and an unchunked string dim keep the Column-built key
-    predicate and still prune correctly."""
+    boundaries) and an unchunked string dim get exact SQL-text key
+    predicates (``scan._key_predicate``) and still prune correctly."""
     schema = Schema(
         dimensions=[
             Dimension("id", 1000, type="decimal(20,0)"),

@@ -72,7 +72,8 @@ def test_other_dim_type_literals_round_trip(spark):
 
 def test_double_dim_range_and_point_reads(spark, tmp_db_path):
     """A double dim (NaN and infinities included) reads back the
-    model's rows through a range read and a point get."""
+    model's rows through range reads (NaN bounds included) and a
+    point get."""
     db = Database.create(
         spark,
         os.path.join(tmp_db_path, "dbl"),
@@ -91,6 +92,17 @@ def test_double_dim_range_and_point_reads(spark, tmp_db_path):
     got = db.begin().query_range({"x": (-0.5, hi)}).collect()
     want = sorted((x, v) for x, v in model.items() if x != "nan" and -0.5 <= x <= hi)
     assert [(r.x, r.v) for r in got] == want
+    # a NaN bound is a bound (NaN sorts above +inf, as in Spark's
+    # filter), and a file's NaN does not hide its other keys from the
+    # txn stats that prune reads
+    def xs_in(lo, hi):
+        rows = db.begin().query_range({"x": (lo, hi)}).collect()
+        return [("nan" if math.isnan(r.x) else r.x) for r in rows]
+
+    assert xs_in(2.5, 2.5) == [2.5]
+    assert xs_in(math.nan, math.nan) == ["nan"]
+    assert xs_in(2.5, math.nan) == [2.5, math.inf, "nan"]
+    assert xs_in(math.nan, math.inf) == []
     keys = [(0.1,), (math.inf,), (math.nan,), (7.0,)]
     got = db.begin().query_points(keys).collect()
     assert [("nan" if math.isnan(r.x) else r.x, r.v) for r in got] == [
