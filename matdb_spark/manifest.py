@@ -62,6 +62,27 @@ DEFAULT_CHECKPOINT_INTERVAL = 64
 #: listing call.
 _CK_HINT: dict[str, tuple[int, int] | None] = {}
 
+#: Incarnation of each store path seen by this process's listings:
+#: ``(st_ino, st_mtime_ns)`` of its ``schema.json`` (None without one).
+_INCARNATION: dict[str, tuple[int, int] | None] = {}
+
+
+def _check_incarnation(db_path: str) -> None:
+    """Drop the manifest caches when the store at ``db_path`` is not the
+    one this process last listed there — deleted and re-created, or its
+    schema evolved. The caches are keyed by path, and a reused Python
+    worker planning DSv2 reads would otherwise serve a re-created
+    store's txn ids from the old store's manifests."""
+    try:
+        st = os.stat(os.path.join(db_path, "schema.json"))
+        inc = (st.st_ino, st.st_mtime_ns)
+    except OSError:
+        inc = None
+    if _INCARNATION.setdefault(db_path, inc) != inc:
+        _INCARNATION[db_path] = inc
+        read_manifest_cached.cache_clear()
+        _read_checkpoint_cached.cache_clear()
+
 
 def commits_dir(db_path: str) -> str:
     return os.path.join(db_path, _COMMITS_DIR)
@@ -82,11 +103,8 @@ def manifest_path(db_path: str, txn_id: int) -> str:
 def init_layout(db_path: str) -> None:
     os.makedirs(commits_dir(db_path), exist_ok=True)
     os.makedirs(data_dir(db_path), exist_ok=True)
-    # A store may be deleted and re-created at the same path within one
-    # driver process; cached manifests keyed (path, txn_id) would then
-    # describe the OLD store and mis-prune scans of the new one.
-    read_manifest_cached.cache_clear()
-    _read_checkpoint_cached.cache_clear()
+    # the checkpoint hint of a store deleted and re-created at this path
+    # names the old store's checkpoint until the next listing
     _CK_HINT.pop(db_path, None)
 
 
@@ -113,6 +131,7 @@ def committed_txn_ids(db_path: str) -> list[int]:
         if c:
             key = (int(c.group(1)), int(c.group(2) or 0))
             ck = key if ck is None else max(ck, key)
+    _check_incarnation(db_path)
     _CK_HINT[db_path] = ck
     if ck is not None:
         _map, pruned = _read_checkpoint_cached(db_path, ck)

@@ -136,6 +136,33 @@ def _floor_div(x, size: int):
     return x // size
 
 
+def _arrow_chunks(table, schema: Schema) -> list:
+    """``_chunked``'s chunk columns over an Arrow table: one array per
+    chunked dim, ``floor(dim / chunk_size)`` with the same result for
+    every key, so a segment an Arrow writer routes is pruned like one
+    Spark routed. ``divide`` truncates integers toward zero: inexact
+    negative quotients step down by one (``q * s`` never overflows, as
+    ``|q * s| <= |x|``). A decimal quotient keeps
+    ``len(str(size)) + 1`` fraction digits, enough to show any nonzero
+    remainder, so its floor is exact; decimal256 leaves room for that
+    scale at any chunk size."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = []
+    for d in schema.chunked_dims:
+        x, s = table[d.name], int(d.chunk_size)
+        if d.type.startswith("decimal"):
+            q = pc.divide(x.cast(pa.decimal256(20, 0)), pa.scalar(decimal.Decimal(s), pa.decimal256(len(str(s)), 0)))
+            out.append(pc.floor(q).cast(pa.decimal128(20, 0)))
+        else:
+            x = x.cast(pa.int64())
+            q = pc.divide(x, s)
+            inexact = pc.and_(pc.less(x, 0), pc.not_equal(pc.multiply(q, s), x))
+            out.append(pc.subtract(q, inexact.cast(pa.int64())))
+    return out
+
+
 def _chunk_ranges(schema: Schema, bounds: dict[str, tuple]) -> dict[str, tuple]:
     """chunk_col -> (chunk_lo|None, chunk_hi|None) for every bounded,
     chunked dim — the Python twin of the chunk predicates in

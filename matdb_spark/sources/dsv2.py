@@ -41,6 +41,17 @@ compare as Spark's grouping compares them: NaN equals NaN, −0.0
 equals 0.0 and reads back as 0.0, and every other key type compares
 by value.
 
+Both sinks, the batch and the stream writer, write the Arrow batches
+Spark hands a task with one function (``_write_segment_files``): cast
+to the staging schema, routed by ``scan._arrow_chunks`` (the library
+writer's floor arithmetic), split by chunk with one sort, key-sorted
+per file. pyarrow leaves NaN out of a float column's min/max, and
+stats that hide NaN would prune NaN keys away, so a file writes no
+min/max for a float column holding NaN, and the manifest keeps none
+for float dims. Both commit through ``_publish``: the manifest lists
+exactly the files the successful tasks reported, with txn stats read
+from their footers for integral dims only.
+
 Semantics and bounds, stated plainly:
 - Committed state only (a snapshot of the store as of the horizon) —
   read-your-own-writes overlays are a Transaction concept and stay on
@@ -77,10 +88,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
@@ -93,8 +104,8 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from matdb_spark import manifest
-from matdb_spark.schema import SEQ_COL, TXN_COL, Schema
-from matdb_spark.stats import spark_order
+from matdb_spark.schema import _TYPE_MAP, SEQ_COL, TXN_COL, Schema
+from matdb_spark.stats import footer_stats, spark_order
 from matdb_spark.scan import (
     _chunk_ranges,
     _has_value,
@@ -110,28 +121,12 @@ def _truthy(v) -> bool:
 
 
 def _matdb_type_of(dt) -> str:
-    """Spark DataType → the engine's type-name vocabulary (the reverse
-    of schema._TYPE_MAP), for additive write-side evolution."""
-    from pyspark.sql import types as T
-
-    table = {
-        T.LongType(): "long",
-        T.IntegerType(): "int",
-        T.DoubleType(): "double",
-        T.FloatType(): "float",
-        T.StringType(): "string",
-        T.TimestampType(): "timestamp",
-        T.DateType(): "date",
-        T.BooleanType(): "boolean",
-        T.BinaryType(): "binary",
-        T.DecimalType(20, 0): "decimal(20,0)",
-    }
+    """Spark DataType → the engine's type name (the inverse of
+    schema._TYPE_MAP), for additive write-side evolution."""
     try:
-        return table[dt]
+        return {t: name for name, t in _TYPE_MAP.items()}[dt]
     except KeyError:
-        raise ValueError(
-            f"cannot evolve store with a column of Spark type {dt}"
-        )
+        raise ValueError(f"cannot evolve store with a column of Spark type {dt}")
 
 
 def _check_write_schema(db_path: str, schema, evolve: bool) -> list:
@@ -412,13 +407,7 @@ class MatdbDataSource(DataSource):
         pending = _check_write_schema(
             db_path, schema, evolve=_truthy(self.options.get("evolve"))
         )
-        fr = self.options.get("flush_rows")
-        return MatdbBatchWriter(
-            db_path,
-            overwrite,
-            flush_rows=int(fr) if fr is not None else None,
-            pending_evolution=pending,
-        )
+        return MatdbBatchWriter(db_path, overwrite, pending_evolution=pending)
 
     def streamWriter(self, schema, overwrite: bool) -> "MatdbStreamWriter":
         if overwrite:
@@ -429,11 +418,9 @@ class MatdbDataSource(DataSource):
         pending = _check_write_schema(
             db_path, schema, evolve=_truthy(self.options.get("evolve"))
         )
-        fr = self.options.get("flush_rows")
         return MatdbStreamWriter(
             db_path,
             self.options.get("source") or "matdb-dsv2-stream",
-            flush_rows=int(fr) if fr is not None else None,
             pending_evolution=pending,
         )
 
@@ -517,157 +504,139 @@ class MatdbSnapshotReader(DataSourceReader):
 
 
 # ------------------------------------------------------------- writer
-class _MatdbCommitMessage(WriterCommitMessage):
-    """Per-task result: files this attempt wrote (relative to the txn
-    data dir — or to ``base`` when staged), row count, and
-    per-integral-dim [min, max]."""
+@dataclass
+class _Written(WriterCommitMessage):
+    """Per-task result: the files this attempt wrote, relative to the
+    txn data dir — or to ``base`` when staged (stream writer)."""
 
-    def __init__(self, files, rows, dims_minmax, base=None):
-        self.files = files
-        self.rows = rows
-        self.dims_minmax = dims_minmax
-        self.base = base  # staging root (stream writer); None = in-place
+    files: list
+    base: str | None = None
 
 
-#: Per-chunk buffer bound of the task-side writer: a chunk's buffered
-#: rows flush to their own parquet file at this size, so a task's
-#: Python-object footprint stays O(flush_rows × touched chunks) no
-#: matter how large its input partition is (at 100 TB, input splits
-#: are maxPartitionBytes-sized — buffering a whole split as Python
-#: tuples would be several GB). Each flushed file is individually
-#: key-sorted, which is all the row-group-stats contract needs; the
-#: library writer also emits several files per chunk.
-DEFAULT_FLUSH_ROWS = 262_144
+#: Rows of one chunk a write task holds before writing them as one
+#: key-sorted file (a constant; no write option sets it): a task's
+#: footprint stays O(bound × touched chunks) plus the Arrow batches
+#: those rows slice, however large its input partition (at 100 TB,
+#: input splits are maxPartitionBytes-sized). A chunk may thus get
+#: several files, as the library writer also emits.
+_FLUSH_ROWS = 262_144
 
 
-def _write_segment_files(iterator, schema_obj, base_dir, flush_rows=None):
-    """Task-side segment write shared by the batch and stream writers:
-    route rows to chunks (the exact _chunked floor arithmetic), sort by
-    key within each file, stamp the shared write sequence, write zstd
-    parquet with CANONICAL column types under
-    ``base_dir/seg=0/__chunk_*/part-<uuid>.parquet``. Per-chunk buffers
-    flush incrementally at ``flush_rows`` (memory bound). Returns
-    (relative files, row count, per-integral-dim [min, max])."""
+def _write_segment_files(batches, sch: Schema, base_dir: str) -> list[str]:
+    """Task-side segment write shared by the batch and stream writers,
+    over the Arrow batches Spark hands the task: each batch is cast to
+    the staging schema with the shared write sequence, checked for
+    null dims, routed by ``scan._arrow_chunks`` (``_chunked``'s floor
+    arithmetic) and split by chunk with one sort; each chunk's rows
+    are key-sorted and written as zstd parquet under
+    ``base_dir/seg=0/__chunk_*/part-<uuid>.parquet`` once
+    ``_FLUSH_ROWS`` of them are pending, and at the end, without
+    min/max for a float column holding NaN. Returns the files
+    written, relative to ``base_dir``."""
     import uuid
 
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from matdb_spark.scan import _floor_div
+    from matdb_spark.scan import _arrow_chunks
 
-    if flush_rows is None:
-        flush_rows = DEFAULT_FLUSH_ROWS
-    sch = schema_obj
-    dims, vals = sch.dim_names, sch.value_names
-    cols = dims + vals
-    chunked = sch.chunked_dims
     out_schema = to_arrow_schema(sch.staging_schema())  # dims, values, __seq
-    stat_dims = [
-        (i, d.name)
-        for i, d in enumerate(sch.dimensions)
-        if d.type in ("long", "int")
-    ]
-    files, mm = [], {}
-    total = 0
+    floats = [f.name for f in out_schema if pa.types.is_floating(f.type)]
+    chunk_cols = sch.chunk_cols
+    pending: dict[tuple, list] = {}
+    files: list[str] = []
 
-    def flush(key: tuple, rows: list) -> None:
-        nonlocal total
-        rows.sort(key=lambda r: tuple(r[: len(dims)]))
-        arrays = [
-            pa.array([r[i] for r in rows], type=out_schema.field(i).type)
-            for i in range(len(cols))
-        ]
-        arrays.append(pa.array([1] * len(rows), type=pa.int64()))
-        table = pa.Table.from_arrays(arrays, schema=out_schema)
-        rel_dir = "/".join(["seg=0"] + [f"{c}={int(v)}" for c, v in key])
+    def flush(key: tuple) -> None:
+        t = pa.concat_tables(pending.pop(key)).sort_by([(d, "ascending") for d in sch.dim_names])
+        rel_dir = "/".join(["seg=0"] + [f"{c}={v}" for c, v in zip(chunk_cols, key)])
         os.makedirs(os.path.join(base_dir, rel_dir), exist_ok=True)
         rel = f"{rel_dir}/part-{uuid.uuid4().hex}.parquet"
-        pq.write_table(table, os.path.join(base_dir, rel), compression="zstd")
+        # Spark's parquet reader skips row groups by min/max, which
+        # pyarrow takes without NaN: a range read up to NaN would lose
+        # the file's NaN rows
+        nan = {c for c in floats if pc.any(pc.is_nan(t[c])).as_py()}
+        stats = [c for c in out_schema.names if c not in nan]
+        pq.write_table(t, os.path.join(base_dir, rel), compression="zstd", write_statistics=stats)
         files.append(rel)
-        total += len(rows)
-        for i, name in stat_dims:
-            vsd = [r[i] for r in rows]
-            lo, hi = min(vsd), max(vsd)
-            cur = mm.get(name)
-            mm[name] = (
-                [lo, hi] if cur is None else [min(cur[0], lo), max(cur[1], hi)]
-            )
 
-    by_chunk: dict[tuple, list] = {}
-    for row in iterator:
-        parts = []
-        for d in chunked:
-            v = row[d.name]
-            if v is None:
-                raise ValueError(
-                    f"null dimension {d.name!r}: dimension values are "
-                    f"the key and must be non-null"
-                )
-            parts.append((d.chunk_col, _floor_div(v, d.chunk_size)))
-        for d in sch.dimensions:
-            if not d.chunk_size and row[d.name] is None:
-                raise ValueError(f"null dimension {d.name!r}")
-        key = tuple(parts)
-        bucket = by_chunk.setdefault(key, [])
-        bucket.append(tuple(row[c] for c in cols))
-        if len(bucket) >= flush_rows:
-            flush(key, bucket)
-            by_chunk[key] = []
-    for key, rows in by_chunk.items():
-        if rows:
-            flush(key, rows)
-    return files, total, mm
-
-
-def _merge_messages(messages, schema_obj):
-    """(sorted rel files or (base, rel) pairs, stats-or-None) from the
-    successful tasks' commit messages — the library's stats rule:
-    attach stats only when every stat-typed dim saw rows (partial
-    stats must read as 'cannot prune')."""
-    files = []
-    rows = 0
-    dims_mm: dict[str, list] = {}
-    stat_names = {
-        d.name for d in schema_obj.dimensions if d.type in ("long", "int")
-    }
-    for m in messages:
-        if m is None:
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
             continue
-        if m.base is None:
-            files.extend(m.files)
-        else:
-            files.extend((m.base, f) for f in m.files)
-        rows += m.rows
-        for name, (lo, hi) in m.dims_minmax.items():
-            cur = dims_mm.get(name)
-            dims_mm[name] = (
-                [lo, hi] if cur is None else [min(cur[0], lo), max(cur[1], hi)]
-            )
-    stats = (
-        {"rows": rows, "dims": dims_mm}
-        if rows and set(dims_mm) == stat_names
-        else None
-    )
-    return files, stats
+        t = pa.Table.from_batches([batch]).select(sch.column_names)
+        for d in sch.dim_names:
+            if t[d].null_count:
+                raise ValueError(f"null dimension {d!r}: dimension values are the key and must be non-null")
+        t = t.append_column(SEQ_COL, pa.repeat(pa.scalar(1, pa.int64()), n)).cast(out_schema)
+        starts = [0]
+        if chunk_cols:
+            for c, chunk in zip(chunk_cols, _arrow_chunks(t, sch)):
+                t = t.append_column(c, chunk)
+            t = t.sort_by([(c, "ascending") for c in chunk_cols])
+            ends = pa.repeat(False, n - 1)
+            for c in chunk_cols:
+                # plain arrays: indices_nonzero of a chunked array with
+                # no chunks (a one-row batch) crashes pyarrow 16.1
+                col = t[c].combine_chunks()
+                ends = pc.or_(ends, pc.not_equal(col[:-1], col[1:]))
+            starts += [i + 1 for i in pc.indices_nonzero(ends).to_pylist()]
+        for lo, hi in zip(starts, starts[1:] + [n]):
+            part = t.slice(lo, hi - lo)
+            key = tuple(int(part[c][0].as_py()) for c in chunk_cols)
+            pending.setdefault(key, []).append(part.select(out_schema.names))
+            if sum(map(len, pending[key])) >= _FLUSH_ROWS:
+                flush(key)
+    for key in list(pending):
+        flush(key)
+    return files
 
 
-class MatdbBatchWriter(DataSourceWriter):
+def _publish(
+    db_path: str, sch: Schema, txn: int, files: list[str], pending: list, replaces=None, **extra
+) -> None:
+    """A sink's commit of the files its successful tasks reported, as
+    txn ``txn``: the manifest lists exactly those files, with stats
+    from their footers — integral dims only, because pyarrow leaves
+    NaN out of a float column's min/max and such stats would prune NaN
+    keys away — then the pending schema evolution, the publish, the
+    reservation release and a checkpoint fold. A fold failure only
+    warns: it comes after the publish, and failing the commit then
+    would make Spark abort a committed txn."""
+    payload: dict = {"files": sorted(files), **extra}
+    tdir = manifest.txn_data_dir(db_path, txn)
+    integral = [d.name for d in sch.dimensions if d.type in ("long", "int")]
+    stats = footer_stats([os.path.join(tdir, f) for f in files], integral) if files else None
+    if stats is not None:
+        payload["stats"] = stats
+    _apply_pending_evolution(db_path, pending)
+    manifest.publish(db_path, txn, segment_count=1, replaces=replaces, extra=payload)
+    manifest.release_txn_reservation(db_path, txn)
+    try:
+        manifest.maybe_checkpoint(db_path)
+    except Exception as e:  # pragma: no cover - env-dependent
+        warnings.warn(f"post-commit checkpoint fold failed: {e}")
+
+
+class MatdbBatchWriter(DataSourceArrowWriter):
     """``df.write.format("matdb").mode("append"|"overwrite").save(db)``
     — one atomic MVCC transaction per save.
 
     The txn id is reserved on the DRIVER (O_CREAT|O_EXCL — the same
     claim the library's allocate_txn_id makes, so a concurrent library
-    writer can never collide with a DSv2 writer). Each task writes
-    its rows as parquet under ``data/txn=<t>/seg=0/__chunk_*/`` with
-    uuid file names — chunk routing, within-file key sort, canonical
-    column types, and the shared write sequence all exactly as
-    transaction.py's _write_segment lays them down. ``commit``
-    publishes ONE manifest whose file list comes from the successful
-    task attempts' commit messages — a speculative or retried task's
-    orphan files are never listed, hence never visible (the
-    manifest-resolved read path ignores them; a later compaction's
-    vacuum removes the directory wholesale). ``abort`` discards the
-    staged directory and the reservation.
+    writer can never collide with a DSv2 writer). Each task writes the
+    Arrow batches Spark hands it (``_write_segment_files``) as parquet
+    under ``data/txn=<t>/seg=0/__chunk_*/`` with uuid file names —
+    chunk routing, within-file key sort, canonical column types, and
+    the shared write sequence all as transaction.py's _write_segment
+    lays them down; Arrow carries timestamps as instants, so no worker
+    time zone enters. ``commit`` publishes ONE manifest whose file
+    list comes from the successful task attempts' commit messages —
+    a speculative or retried task's orphan files are never listed,
+    hence never visible (the manifest-resolved read path ignores them;
+    a later compaction's vacuum removes the directory wholesale) — and
+    whose stats come from those files' footers (``_publish``).
+    ``abort`` discards the staged directory and the reservation.
 
     ``mode("overwrite")`` publishes with ``replaces`` = every txn
     committed when the writer was created — the table atomically
@@ -681,13 +650,7 @@ class MatdbBatchWriter(DataSourceWriter):
     key cannot be chunk-routed and the engine's key contract is
     non-null dims."""
 
-    def __init__(
-        self,
-        db_path: str,
-        overwrite: bool,
-        flush_rows: int | None = None,
-        pending_evolution: list | None = None,
-    ):
+    def __init__(self, db_path: str, overwrite: bool, pending_evolution: list | None = None):
         self.db_path = db_path
         # pending evolved columns are part of the write's schema view
         # so tasks lay files down with them; schema.json grows them
@@ -697,43 +660,18 @@ class MatdbBatchWriter(DataSourceWriter):
             Schema.load(os.path.join(db_path, SCHEMA_FILENAME)),
             self.pending_evolution,
         )
-        self.overwrite = overwrite
-        # carried as writer state so it survives the pickle to workers
-        self.flush_rows = flush_rows
         self.txn_id = manifest.reserve_txn_id(db_path, start=1)
-        self.replaces = (
-            manifest.committed_txn_ids(db_path) if overwrite else None
-        )
+        self.replaces = manifest.committed_txn_ids(db_path) if overwrite else None
 
     def write(self, iterator):
         tdir = manifest.txn_data_dir(self.db_path, self.txn_id)
-        files, rows, mm = _write_segment_files(
-            iterator, self.schema_obj, tdir, flush_rows=self.flush_rows
-        )
-        return _MatdbCommitMessage(files, rows, mm)
+        return _Written(_write_segment_files(iterator, self.schema_obj, tdir))
 
     def commit(self, messages):
-        files, stats = _merge_messages(messages, self.schema_obj)
-        payload: dict = {"files": sorted(files)}
-        if stats is not None:
-            payload["stats"] = stats
-        # schema evolution commits WITH the transaction: persisted only
-        # now that every task succeeded, immediately before publish
-        _apply_pending_evolution(self.db_path, self.pending_evolution)
-        manifest.publish(
-            self.db_path,
-            self.txn_id,
-            segment_count=1,
-            replaces=self.replaces or None,
-            extra=payload,
+        files = [f for m in messages for f in m.files]
+        _publish(
+            self.db_path, self.schema_obj, self.txn_id, files, self.pending_evolution, replaces=self.replaces
         )
-        manifest.release_txn_reservation(self.db_path, self.txn_id)
-        # accelerator only: a fold failure after publish must never
-        # fail the commit (Spark would call abort() on a committed txn)
-        try:
-            manifest.maybe_checkpoint(self.db_path)
-        except Exception as e:  # pragma: no cover - env-dependent
-            warnings.warn(f"post-commit checkpoint fold failed: {e}")
 
     def abort(self, messages):
         # discard_txn_data refuses once a manifest exists for the txn
@@ -747,20 +685,21 @@ class MatdbBatchWriter(DataSourceWriter):
 STREAM_STAGING_DIR = "_stream_staging"
 
 
-class MatdbStreamWriter(DataSourceStreamWriter):
+class MatdbStreamWriter(DataSourceStreamArrowWriter):
     """``df.writeStream.format("matdb").option("checkpointLocation",
     ...).start(db)`` — one MVCC transaction per micro-batch,
     exactly-once end-to-end.
 
     Tasks don't know the batch's txn id (the Python stream-writer API
     creates one writer for the query's lifetime), so they STAGE their
-    chunk-routed parquet under ``data/_stream_staging/<task-uuid>/``
-    and the driver's per-batch ``commit`` reserves a txn id, MOVES the
-    staged files into ``data/txn=<t>/`` (same-FS renames; on an object
-    store these are copies, still safe — visibility comes only from
-    the manifest), and publishes stamped with ``(stream_source,
-    batch_id)``. A replayed batch (crash between manifest publish and
-    checkpoint advance) is recognized exactly as the library sink does
+    chunk-routed parquet (``_write_segment_files``, as the batch sink)
+    under ``data/_stream_staging/<task-uuid>/`` and the driver's
+    per-batch ``commit`` reserves a txn id, MOVES the staged files into
+    ``data/txn=<t>/`` (same-FS renames; on an object store these are
+    copies, still safe — visibility comes only from the manifest), and
+    publishes stamped with ``(stream_source, batch_id)``. A replayed
+    batch (crash between manifest publish and checkpoint advance) is
+    recognized exactly as the library sink does
     (manifest.max_committed_batch_id — stamps survive compaction via
     the carried ``stream_batch_ids``) and commits nothing. Crash
     debris in the staging area is invisible to every reader and swept
@@ -773,13 +712,7 @@ class MatdbStreamWriter(DataSourceStreamWriter):
     path — this surface is the format-string form of the same
     protocol."""
 
-    def __init__(
-        self,
-        db_path: str,
-        source: str,
-        flush_rows: int | None = None,
-        pending_evolution: list | None = None,
-    ):
+    def __init__(self, db_path: str, source: str, pending_evolution: list | None = None):
         self.db_path = db_path
         self.pending_evolution = pending_evolution or []
         self.schema_obj = _schema_with_pending(
@@ -787,7 +720,6 @@ class MatdbStreamWriter(DataSourceStreamWriter):
             self.pending_evolution,
         )
         self.source = source
-        self.flush_rows = flush_rows
         self._last_committed: int | None = None
 
     def write(self, iterator):
@@ -796,10 +728,7 @@ class MatdbStreamWriter(DataSourceStreamWriter):
         base = os.path.join(
             manifest.data_dir(self.db_path), STREAM_STAGING_DIR, uuid.uuid4().hex
         )
-        files, rows, mm = _write_segment_files(
-            iterator, self.schema_obj, base, flush_rows=self.flush_rows
-        )
-        return _MatdbCommitMessage(files, rows, mm, base=base)
+        return _Written(_write_segment_files(iterator, self.schema_obj, base), base)
 
     def _staging_roots(self, messages):
         return {m.base for m in messages if m is not None and m.base}
@@ -814,37 +743,24 @@ class MatdbStreamWriter(DataSourceStreamWriter):
             for root in self._staging_roots(messages):
                 _sh.rmtree(root, ignore_errors=True)
             return  # replayed batch: already committed, a no-op
-        files, stats = _merge_messages(messages, self.schema_obj)
         txn = manifest.reserve_txn_id(self.db_path, start=1)
         tdir = manifest.txn_data_dir(self.db_path, txn)
         rels = []
-        for base, rel in files:
-            dst = os.path.join(tdir, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(os.path.join(base, rel), dst)
-            rels.append(rel)
-        payload: dict = {
-            "files": sorted(rels),
-            "stream_source": self.source,
-            "batch_id": int(batchId),
-        }
-        if stats is not None:
-            payload["stats"] = stats
+        for m in messages:
+            for rel in m.files:
+                dst = os.path.join(tdir, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(os.path.join(m.base, rel), dst)
+                rels.append(rel)
         # evolution commits with the first non-replayed batch (a crash
-        # between this and publish leaves an additive all-null column;
-        # the replayed batch re-runs this idempotently)
-        _apply_pending_evolution(self.db_path, self.pending_evolution)
+        # between it and publish leaves an additive all-null column;
+        # the replayed batch re-runs it idempotently)
+        _publish(
+            self.db_path, self.schema_obj, txn, rels, self.pending_evolution,
+            stream_source=self.source, batch_id=int(batchId),
+        )
         self.pending_evolution = []
-        manifest.publish(self.db_path, txn, segment_count=1, extra=payload)
-        manifest.release_txn_reservation(self.db_path, txn)
         self._last_committed = int(batchId)
-        # streaming commit rates are exactly what makes an unfolded
-        # manifest log O(#batches) to plan against — fold periodically.
-        # Accelerator only: never let a fold failure fail the batch.
-        try:
-            manifest.maybe_checkpoint(self.db_path)
-        except Exception as e:  # pragma: no cover - env-dependent
-            warnings.warn(f"post-commit checkpoint fold failed: {e}")
         for root in self._staging_roots(messages):
             _sh.rmtree(root, ignore_errors=True)
 

@@ -58,49 +58,44 @@ def collect_segment_info(seg_dir: str, schema) -> tuple[dict | None, list[str]]:
     drop rows from every scan of this txn. On such deployments record
     file sets from the writer's commit protocol instead (or disable
     the list and fall back to listing-based scans)."""
-    dims = [d.name for d in schema.dimensions if d.type in _STAT_TYPES]
-    out: dict[str, list] = {}
-    rows = 0
-    files: list[str] = []
     n = len(seg_dir.rstrip(os.sep)) + 1
+    paths = list(_iter_parquet_files(seg_dir))
+    stats = footer_stats(paths, [d.name for d in schema.dimensions if d.type in _STAT_TYPES])
+    return stats, sorted(p[n:].replace(os.sep, "/") for p in paths)
+
+
+def footer_stats(paths: list[str], dims: list[str]) -> dict | None:
+    """Row count and per-dim [min, max] of the parquet files ``paths``
+    from their footers alone, or None when pyarrow is unavailable or
+    any row group lacks min/max for one of ``dims`` (absent stats only
+    loosen pruning, never correctness)."""
     try:
         import pyarrow.parquet as pq
-
-        stats_ok = True
     except Exception:
-        pq = None
-        stats_ok = False
-    for path in _iter_parquet_files(seg_dir):
-        files.append(path[n:].replace(os.sep, "/"))
-        if not stats_ok:
-            continue
-        try:
+        return None
+    out: dict[str, list] = {}
+    rows = 0
+    try:
+        for path in paths:
             md = pq.ParquetFile(path).metadata
             rows += md.num_rows
             names = {md.schema.column(i).name: i for i in range(md.num_columns)}
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
                 for d in dims:
-                    if d not in names:
-                        # dimension columns are always written into the
-                        # data files (segments partitionBy only the
-                        # derived __chunk_* columns) — a missing dim
-                        # means an unexpected layout: disable pruning
-                        # rather than emit wrong bounds
-                        stats_ok = False
-                        break
-                    st = g.column(names[d]).statistics
+                    # dimension columns are always written into the
+                    # data files (segments partitionBy only the derived
+                    # __chunk_* columns) — a missing dim means an
+                    # unexpected layout: disable pruning rather than
+                    # emit wrong bounds
+                    st = g.column(names[d]).statistics if d in names else None
                     if st is None or not st.has_min_max:
-                        stats_ok = False
-                        break
+                        return None
                     cur = out.get(d)
                     out[d] = [st.min, st.max] if cur is None else _hull(cur, [st.min, st.max])
-                if not stats_ok:
-                    break
-        except Exception:
-            stats_ok = False
-    stats = {"rows": rows, "dims": out} if stats_ok else None
-    return stats, sorted(files)
+    except Exception:
+        return None
+    return {"rows": rows, "dims": out}
 
 
 def merge_stats(a: dict | None, b: dict | None) -> dict | None:

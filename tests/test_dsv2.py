@@ -510,35 +510,153 @@ def test_dsv2_cdc_store_replication(spark, tmp_path_factory):
 
 
 def test_dsv2_writer_incremental_flush(spark, tmp_path_factory):
-    """The task-side writer's per-chunk buffer bound: with a tiny
-    flush_rows the same write lands as MULTIPLE key-sorted files per
-    chunk, and the scan result is identical to the unbounded form."""
+    """The task-side writer's per-chunk bound: one task writing more
+    than ``_FLUSH_ROWS`` plus one Arrow batch (about 10k rows) into one
+    chunk lands them as several key-sorted files of that chunk, and
+    the scan result is the library's."""
+    from matdb_spark.sources.dsv2 import _FLUSH_ROWS
+
     register_matdb_source(spark)
     p = str(tmp_path_factory.mktemp("dsv2flush") / "db")
+    n = _FLUSH_ROWS + 20_000
     schema = Schema(
-        dimensions=[Dimension("k", 1000)], values=[Value("v", type="double")]
+        dimensions=[Dimension("k", 1_000_000)], values=[Value("v", type="double")]
     )
     Database.create(spark, p, schema)
-    df = spark.range(1000).coalesce(1).select(
+    df = spark.range(n).coalesce(1).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
-    df.write.format("matdb").mode("append").option("flush_rows", 64).save(p)
-    from matdb_spark import manifest
+    df.write.format("matdb").mode("append").save(p)
 
     t = manifest.committed_txn_ids(p)[-1]
     m = manifest.read_manifest(p, t)
-    assert len(m["files"]) >= 1000 // 64  # many flushed files, one chunk set
-    assert m["stats"]["rows"] == 1000 and m["stats"]["dims"]["k"] == [0, 999]
-    got = _key(spark.read.format("matdb").load(p))
-    lib = _key(Database.open(spark, p).begin().query(ordered=False))
-    assert got == lib and len(got) == 1000
+    assert len(m["files"]) >= 2  # flushed before the task's input ended
+    assert {f.rsplit("/", 1)[0] for f in m["files"]} == {"seg=0/__chunk_k=0"}
+    assert m["stats"]["rows"] == n and m["stats"]["dims"]["k"] == [0, n - 1]
+    got = spark.read.format("matdb").load(p)
+    lib = Database.open(spark, p).begin().query(ordered=False)
+    assert got.count() == n and got.exceptAll(lib).count() == 0
     # each flushed file is key-sorted within itself
     import pyarrow.parquet as pq_
 
     tdir = manifest.txn_data_dir(p, t)
-    for rel in m["files"][:3]:
+    for rel in m["files"]:
         ks = pq_.read_table(os.path.join(tdir, rel), columns=["k"])["k"].to_pylist()
         assert ks == sorted(ks)
+
+
+def test_dsv2_write_routes_like_add_dataframe(spark, tmp_path_factory):
+    """The format writer routes keys to chunks as ``add_dataframe``
+    does, at the edges of the integral types (floor division of
+    negatives, the type minimum and maximum, decimal(20,0)'s +-(10^20 -
+    1)): the same rows land in the same chunk directories with equal
+    integral-dim stats, and read back equal."""
+    import decimal
+
+    register_matdb_source(spark)
+    s = 10
+    longs = [-(2**63), -s - 1, -1, 0, s - 1, s, 2**63 - 1]
+    ints = [-(2**31), -s - 1, -1, 0, s - 1, s, 2**31 - 1]
+    decs = [decimal.Decimal(v) for v in (-(10**20 - 1), -s - 1, -1, 0, s - 1, -s, 10**20 - 1)]
+    schema = Schema(
+        dimensions=[
+            Dimension("l", s),
+            Dimension("i", s, type="int"),
+            Dimension("d", s, type="decimal(20,0)"),
+        ],
+        values=[Value("v")],
+    )
+    rows = [(l, i, d, n) for n, (l, i, d) in enumerate(zip(longs, ints, decs))]
+    df = spark.createDataFrame(rows, schema.spark_schema())
+    base = tmp_path_factory.mktemp("dsv2route")
+    lib_p, fmt_p = str(base / "lib"), str(base / "fmt")
+    with Database.create(spark, lib_p, schema).begin() as t:
+        t.add_dataframe(df)
+        t.commit()
+    Database.create(spark, fmt_p, schema)
+    df.write.format("matdb").mode("append").save(fmt_p)
+
+    lib_m, fmt_m = (manifest.read_manifest(q, manifest.committed_txn_ids(q)[-1]) for q in (lib_p, fmt_p))
+
+    def dirs(m):
+        return sorted({f.rsplit("/", 1)[0] for f in m["files"]})
+
+    want = {f"seg=0/__chunk_l={l // s}/__chunk_i={i // s}/__chunk_d={int(d) // s}" for l, i, d, _ in rows}
+    assert dirs(fmt_m) == dirs(lib_m) == sorted(want)
+    assert fmt_m["stats"]["rows"] == lib_m["stats"]["rows"] == len(rows)
+    assert fmt_m["stats"]["dims"] == {d: lib_m["stats"]["dims"][d] for d in ("l", "i")}
+    lib, fmt = (Database.open(spark, q).begin() for q in (lib_p, fmt_p))
+    assert _key(fmt.query()) == _key(lib.query()) == sorted(rows)
+    box = {"l": (-s - 1, s), "i": (-s - 1, s), "d": (decimal.Decimal(-s - 1), decimal.Decimal(s))}
+    assert _key(fmt.query_range(box)) == _key(lib.query_range(box)) == sorted(rows[1:6])
+
+
+def test_dsv2_read_after_store_recreated_at_same_path(spark, tmp_path_factory):
+    """A store deleted and re-created at the same path reads as the new
+    store through ``format("matdb")``: the reused Python worker that
+    plans the read must not serve the old store's cached manifests."""
+    import shutil
+
+    register_matdb_source(spark)
+    p = str(tmp_path_factory.mktemp("dsv2recreate") / "db")
+    schema = Schema(dimensions=[Dimension("k", 10)], values=[Value("v")])
+    for rows in ([(1, 1), (2, 2)], [(30, 3)], [(40, 4), (55, 5)]):
+        shutil.rmtree(p, ignore_errors=True)
+        db = Database.create(spark, p, schema)
+        with db.begin() as t:
+            t.add_rows(rows)
+            t.commit()
+        assert _key(db.begin().query()) == rows
+        assert _key(spark.read.format("matdb").load(p)) == rows
+
+
+_TZ_SCRIPT = r"""
+import datetime, json, os, sys
+from matdb_spark import Database, Dimension, Schema, Value
+from matdb_spark.session import get_spark
+from matdb_spark.sources.dsv2 import register_matdb_source
+
+spark = get_spark(
+    cpus=2, extra_conf={"spark.sql.session.timeZone": "America/Los_Angeles", "spark.matdb.catalog": "off"}
+)
+register_matdb_source(spark)
+base = sys.argv[1]
+p = os.path.join(base, "db")
+schema = Schema(dimensions=[Dimension("t", 0, type="timestamp")], values=[Value("at", "timestamp")])
+Database.create(spark, p, schema)
+utc = datetime.timezone.utc
+batch = [(datetime.datetime(2024, 1, 15, 12, 0, tzinfo=utc), datetime.datetime(2024, 1, 15, 23, 30, tzinfo=utc))]
+stream = [(datetime.datetime(2024, 7, 1, 0, 0, 0, 5, tzinfo=utc), datetime.datetime(1969, 12, 31, 23, 0, tzinfo=utc))]
+spark.createDataFrame(batch, schema.spark_schema()).write.format("matdb").mode("append").save(p)
+src = os.path.join(base, "src")
+spark.createDataFrame(stream, schema.spark_schema()).write.parquet(src)
+q = (
+    spark.readStream.schema(schema.spark_schema()).parquet(src).writeStream.format("matdb")
+    .option("checkpointLocation", os.path.join(base, "ck")).trigger(availableNow=True).start(p)
+)
+q.awaitTermination(300)
+got = Database.open(spark, p).begin().query().selectExpr("unix_micros(t)", "unix_micros(at)").collect()
+want = [(int(a.timestamp() * 1e6), int(b.timestamp() * 1e6)) for a, b in batch + stream]
+print("RESULT" + json.dumps({"got": [list(r) for r in got], "want": sorted(want)}))
+"""
+
+
+def test_dsv2_writes_timestamps_at_their_instant(tmp_path):
+    """Timestamps written through the batch and the stream sink read
+    back through ``query()`` at the instants written, with the worker
+    in one time zone (``TZ``) and the session in another."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, TZ="America/New_York", SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _TZ_SCRIPT, str(tmp_path)], capture_output=True, text=True, env=env, timeout=600
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads([l for l in r.stdout.splitlines() if l.startswith("RESULT")][-1][len("RESULT"):])
+    assert out["got"] == out["want"]
 
 
 def test_dsv2_string_dim_store(spark, tmp_path_factory):
