@@ -27,9 +27,9 @@ SURVEY §2.1 O2. Within-transaction duplicates resolve to the highest
 write sequence (last-write-wins, mirroring the in-place cell overwrite
 of block.rs:45-49). This module owns the rule for every read path:
 ``resolve_arrow`` applies it to an Arrow table for the readers that
-resolve without Spark (the DSv2 snapshot and change-feed readers),
-with keys compared as Spark's grouping compares them (NaN equals NaN,
-−0.0 equals 0.0 and is emitted as 0.0).
+resolve without Spark (the driver read below and the DSv2 snapshot and
+change-feed readers), with keys compared as Spark's grouping compares
+them (NaN equals NaN, −0.0 equals 0.0 and is emitted as 0.0).
 
 Scale: a full or key-range scan shuffles once for the dedup
 aggregation, partitioned by the full dimension tuple (maximum key
@@ -38,11 +38,16 @@ covers), plus the range shuffle of the ordering sort; ``ordered=False``
 skips the latter. A point get prunes per key instead of by the key
 set's envelope: a transaction is read only if its manifest stats may
 hold one of the keys, and of its files only the chunk directories of
-THOSE keys. When a bounded read (point get or key range) is left with
-at most ``_SINGLE_TASK_MAX_FILES`` files of at most
-``_SINGLE_TASK_MAX_BYTES`` in all, the sources are coalesced to one
-partition before version resolution, so the read plans no exchange at
-all and runs as one Spark job.
+THOSE keys (``read_plan``).
+
+Small reads run on the driver. When a bounded read (point get or key
+range) is left with at most ``_SINGLE_TASK_MAX_FILES`` committed files
+of at most ``_SINGLE_TASK_MAX_BYTES`` on disk and decoded, no Spark
+plan is built: pyarrow reads the files with the boxes as its dataset
+filter, ``resolve_arrow`` resolves versions, and the result is handed
+back as a local DataFrame (``_driver_read``). Such a read runs when it
+is built; every other read is a lazy Spark plan that runs when an
+action is called. The two agree row for row and in schema.
 
 Plans are built as SQL text (``_sql_literal``, ``_range_filters``,
 ``_key_predicate``, one ``filter`` and one ``selectExpr`` per source),
@@ -55,6 +60,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import math
 import numbers
 import os
 from dataclasses import dataclass, field
@@ -63,8 +69,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
 from matdb_spark.schema import Schema, SEQ_COL, TXN_COL, _dtype
-from matdb_spark.stats import spark_order, txn_intersects
-from matdb_spark import manifest
+from matdb_spark.stats import spark_order
+from matdb_spark import manifest, stats
 
 
 @dataclass
@@ -127,12 +133,13 @@ def _floor_div(x, size: int):
     ``x // size`` is wrong for Decimal — decimal floor-division
     truncates toward zero (Decimal(-5) // 10 == -0), which would build
     an over-tight chunk predicate that prunes away the partition the
-    write side routed a negative key to."""
-    import decimal
-    import math
-
+    write side routed a negative key to. An infinite bound stays
+    infinite: Python's ``-inf // size`` is NaN, which as a lower chunk
+    bound kept no chunk at all."""
     if isinstance(x, decimal.Decimal):
         return math.floor(x / decimal.Decimal(size))
+    if isinstance(x, float) and math.isinf(x):
+        return x
     return x // size
 
 
@@ -237,21 +244,25 @@ def _select_manifest_files(files: list[str], chunk_ranges) -> list[str]:
 _MAX_EXPLICIT_PATHS = 50_000
 
 #: a bounded read (point get or key range) whose pruned file set is at
-#: most this many explicit files, of at most ``_SINGLE_TASK_MAX_BYTES``
-#: in all, resolves versions in ONE task: the sources are coalesced to
-#: one partition, so neither the dedup aggregation nor the ordering
-#: sort plans an exchange. 8 is the largest set measured faster this
-#: way (storebench ``lookup``: 8 keys in 8 small files); larger sets
-#: keep the parallel plan
+#: most this many explicit committed files, of at most
+#: ``_SINGLE_TASK_MAX_BYTES`` on disk and decoded, is served on the
+#: driver (``_driver_read``): pyarrow reads the files, ``resolve_arrow``
+#: resolves versions, and the result comes back as a local DataFrame,
+#: so no Spark plan runs and the read happens when it is built. 8 is
+#: the storebench ``lookup`` point get (8 keys in 8 small files);
+#: larger sets take the parallel Spark plan
 _SINGLE_TASK_MAX_FILES = 8
 
-#: byte cap of the single-task rule, for reads and writes: Spark's
+#: byte cap of the small-input rule, for reads and writes: Spark's
 #: default ``spark.sql.files.openCostInBytes``, the bytes its planner
 #: reckons one more file open costs — an input no larger cannot repay
-#: the shuffle stages that spreading it over cores adds. Reads sum the
-#: pruned files' sizes (``_small_input``); a commit uses Spark's size
-#: estimate of its generated input (``transaction._small_write``) and
-#: then writes its segment in one task without the chunk exchange.
+#: the stages that spreading it over cores adds. A read tests the
+#: pruned files' on-disk sizes (``_small_input``) and then the
+#: uncompressed sizes of their row groups from the footers it opens
+#: (``_read_files``), so a highly compressible file set cannot decode
+#: to far more on the driver; a commit uses Spark's size estimate of
+#: its generated input (``transaction._small_write``) and then writes
+#: its segment in one task without the chunk exchange.
 #: Median of 10 commits of storebench ``ingest``-shaped steps (slab +
 #: 10 % upsert), forced to one task vs the exchange, on a shared
 #: 4-vCPU host: 72k rows (3.5 MiB estimated) 506 vs 654 ms, 144k
@@ -261,8 +272,8 @@ _SINGLE_TASK_MAX_BYTES = 4 * 1024 * 1024
 
 
 def _small_input(paths: list[str]) -> bool:
-    """Are ``paths`` (explicit data files) few and small enough for the
-    single-task rule? A file that cannot be sized counts as large."""
+    """Are ``paths`` (explicit data files) few and small enough on disk
+    for a driver read? A file that cannot be sized counts as large."""
     if len(paths) > _SINGLE_TASK_MAX_FILES:
         return False
     try:
@@ -332,6 +343,14 @@ def _sql_literal(value, dim_type: str) -> str:
     raise TypeError(f"no SQL literal for {type(value).__name__} {value!r}")
 
 
+#: Spark compares −0.0 equal to 0.0, but the parquet reader's pushed
+#: filters compare float statistics and dictionaries bit-wise, so a
+#: pushed ``x = -0.0`` drops a row group whose dictionary holds 0.0; a
+#: zero bound or key on these dims is pushed as the range
+#: [−0.0, 0.0], which holds both zeros in either order
+_FLOAT_TYPES = ("double", "float")
+
+
 def _range_filters(
     schema: Schema, bounds: dict[str, tuple], with_chunks: bool
 ) -> list[str]:
@@ -353,6 +372,8 @@ def _range_filters(
     types = {n: d.type for d in schema.dimensions for n in (d.name, d.chunk_col)}
     conds = []
     for name, (lo, hi) in ranges.items():
+        if types[name] in _FLOAT_TYPES:  # cover both zeros (see _FLOAT_TYPES)
+            lo, hi = (-0.0 if lo == 0 else lo), (0.0 if hi == 0 else hi)
         if lo is not None:
             conds.append(f"`{name}` >= {_sql_literal(lo, types[name])}")
         if hi is not None:
@@ -367,13 +388,41 @@ def _key_predicate(schema: Schema, keys: list[tuple]) -> str:
     ``_range_filters``). Both forms push down to the parquet scan
     (In / Or(And(EqualTo)))."""
     dims = schema.dimensions
-    if len(dims) == 1:
+
+    def zero(d, v) -> bool:  # a float zero key matches both zeros
+        return d.type in _FLOAT_TYPES and v == 0
+
+    def eq(d, v) -> str:
+        if zero(d, v):
+            return " AND ".join(_range_filters(Schema([d]), {d.name: (v, v)}, False))
+        return f"`{d.name}` = {_sql_literal(v, d.type)}"
+
+    if len(dims) == 1 and not any(zero(dims[0], k[0]) for k in keys):
         lits = ", ".join(_sql_literal(k[0], dims[0].type) for k in keys)
         return f"`{dims[0].name}` IN ({lits})"
-    return " OR ".join(
-        "(" + " AND ".join(f"`{d.name}` = {_sql_literal(v, d.type)}" for d, v in zip(dims, k)) + ")"
-        for k in keys
-    )
+    return " OR ".join("(" + " AND ".join(eq(d, v) for d, v in zip(dims, k)) + ")" for k in keys)
+
+
+def _is_point(lo, hi) -> bool:
+    """Does the bound pair ``(lo, hi)`` pin one key (NaN pins NaN)?"""
+    return lo is not None and (lo == hi or (lo != lo and hi != hi))
+
+
+def _union_predicate(schema: Schema, boxes: list[dict[str, tuple]]) -> str | None:
+    """SQL text: the row lies in one of ``boxes`` — None for a single
+    box, which the envelope already is. Boxes that each pin every dim
+    (a point get's keys) become ``_key_predicate``'s key set, which
+    pushes down as ``In``/``EqualTo``; other boxes an OR of their
+    range conditions."""
+    if len(boxes) < 2:
+        return None
+    dims = schema.dim_names
+    if all(set(b) == set(dims) and all(_is_point(*b[d]) for d in dims) for b in boxes):
+        return _key_predicate(schema, [tuple(b[d][0] for d in dims) for b in boxes])
+    conds = [_range_filters(schema, b, False) for b in boxes]
+    if not all(conds):  # an unbounded box holds every row
+        return None
+    return " OR ".join("(" + " AND ".join(c) + ")" for c in conds)
 
 
 def _envelope(boxes: list[dict[str, tuple]]) -> dict[str, tuple]:
@@ -410,8 +459,9 @@ def plan_txns(
         # before any file listing or Spark job. Every (txn, box) pair
         # is checked, since file pruning needs each txn's own boxes.
         # Missing stats keep the txn for every box (correctness never
-        # depends on stats).
-        hits = [i for i, b in enumerate(boxes) if txn_intersects(snap.stats(t), b)]
+        # depends on stats). Looked up on the module at call time, so a
+        # wrapper installed on ``stats.txn_intersects`` sees each check.
+        hits = [i for i, b in enumerate(boxes) if stats.txn_intersects(snap.stats(t), b)]
         if hits or not boxes:
             kept[t] = hits
     # Dedup-free: a read that provably holds ONE version per key needs
@@ -435,30 +485,137 @@ def plan_txns(
     return kept, dedup_free, ranks
 
 
+def _boxes(bounds) -> list[dict[str, tuple]]:
+    """``scan_dataframe``'s ``bounds`` — one box, a list of boxes or
+    None — as a list of boxes (none: every row)."""
+    return bounds if isinstance(bounds, list) else [bounds] if bounds else []
+
+
+@dataclass
+class ReadPlan:
+    """What a read of a ``ScanSource`` opens, from ``read_plan``."""
+
+    #: ``(path, effective txn)`` per input: explicit data files, or txn
+    #: directories where a file list is missing or too long, plus the
+    #: transaction's own staged directory
+    files: list[tuple[str, int]]
+    #: every input is a committed data file its manifest names
+    explicit: bool
+    #: committed txn -> effective version where a minor compaction
+    #: overrides it
+    ranks: dict[int, int]
+    #: one version per key: the Spark plan skips version resolution
+    dedup_free: bool
+    #: no two versions of a key can tie: the Spark plan may resolve
+    #: multi-value rows column by column
+    tie_free: bool
+
+    @property
+    def paths(self) -> list[str]:
+        return [p for p, _ in self.files]
+
+
+def read_plan(source: ScanSource, bounds=None) -> ReadPlan:
+    """The files a read of ``source``'s rows inside ``bounds`` (a box,
+    a list of boxes, or None for all rows) opens — the one planning
+    rule of the driver read and the Spark plan.
+
+    File sets resolve from manifests when every committed txn recorded
+    one: no filesystem LISTING job at read time (at scale, listing
+    thousands of chunk dirs costs more than the pruned read itself),
+    and bounded reads chunk-prune each txn's list driver-side, against
+    the boxes that txn may hold. Own staged segments have no manifest
+    yet — their txn dir is read as a directory (small listing). Any
+    committed txn without a file list (legacy store, capped txn) turns
+    every committed input into its directory."""
+    schema, snap = source.schema, source.snapshot
+    boxes = _boxes(bounds)
+    staged = source.own_txn is not None and source.own_staged_segments > 0
+    overlay = staged or bool(source.buffered_rows)
+    txn_boxes, dedup_free, ranks = plan_txns(snap, boxes)
+    committed = list(txn_boxes)
+    # Tie-free: version TIES (identical (txn, seq) on one key) can only
+    # arise from duplicate keys inside a single write call; when EVERY
+    # visible txn is stamped unique_keys (dedup'ed bulk loads,
+    # compactions) and there is no RYOW overlay, versions per key are
+    # provably distinct.
+    tie_free = not overlay and bool(committed) and all(snap.unique_keys(t) for t in committed)
+    files: list[tuple[str, int]] = []
+    explicit = True
+    box_cranges = [_chunk_ranges(schema, b) for b in boxes]
+    for t in committed:
+        fl = snap.files(t)
+        if fl is None:
+            explicit = False
+            break
+        if boxes:
+            fl = _select_manifest_files(fl, [box_cranges[i] for i in txn_boxes[t]])
+        tdir = manifest.txn_data_dir(snap.db_path, t)
+        files.extend((f"{tdir}/{rel}", ranks.get(t, t)) for rel in fl)
+        if len(files) > _MAX_EXPLICIT_PATHS:
+            # bail BEFORE materializing millions of path strings —
+            # past this size the directory reader wins anyway
+            explicit = False
+            break
+    if not explicit:
+        files = [(manifest.txn_data_dir(snap.db_path, t), ranks.get(t, t)) for t in committed]
+    if staged:
+        files.append((manifest.txn_data_dir(snap.db_path, source.own_txn), source.own_txn))
+    return ReadPlan(
+        files=files,
+        explicit=explicit and not staged,
+        ranks=ranks,
+        # a read-your-own-writes overlay may add a version of any key
+        dedup_free=dedup_free and not overlay,
+        tie_free=tie_free,
+    )
+
+
+def _output_schema(schema: Schema, include_txn: bool, nullable_dims: bool) -> T.StructType:
+    """The row schema of a read: dims, values and, with ``include_txn``,
+    ``__txn`` — nullable as the Spark plan derives them (dims read from
+    parquet are nullable; buffered rows alone keep them non-null)."""
+    fields = [
+        T.StructField(f.name, f.dataType, f.nullable or nullable_dims)
+        for f in schema.spark_schema()
+    ]
+    if include_txn:
+        fields.append(T.StructField(TXN_COL, T.LongType(), True))
+    return T.StructType(fields)
+
+
 def scan_dataframe(
     spark: SparkSession,
     source: ScanSource,
     ordered: bool = True,
     include_txn: bool = False,
     drop_null_value_rows: bool = True,
-    bounds: dict[str, tuple] | None = None,
-    predicate: str | None = None,
+    bounds: dict[str, tuple] | list[dict[str, tuple]] | None = None,
     cell_merge: bool = False,
 ) -> DataFrame:
-    """Build the snapshot-scan DataFrame for a pinned source set.
+    """The snapshot-scan DataFrame for a pinned source set: the rows
+    inside ``bounds``, one version per key, newest wins.
 
     ``bounds`` is a box — dim name → (lo, hi) inclusive key bounds,
     either side None for open — or a list of boxes, read as their
-    union (a point get passes one box per key). Pruning is per box:
-    a transaction is read only if its manifest stats may hold some
-    box, and of its files only those whose chunk directories match
-    the boxes THAT transaction may hold. The envelope of the boxes is
-    applied at the scan relation itself so both partition pruning and
-    parquet stats pruning engage before any shuffle. ``predicate`` is
-    optional extra SQL text over DIM columns only, also applied at the
-    scan relation (point lookups push exact key sets down this way);
-    dim-only predicates commute with the version-dedup aggregation, so
-    applying them pre-shuffle is semantics-preserving.
+    union (a point get passes one box per key). Pruning is per box
+    (``read_plan``): a transaction is read only if its manifest stats
+    may hold some box, and of its files only those whose chunk
+    directories match the boxes THAT transaction may hold.
+
+    A bounded read whose pruned inputs are at most
+    ``_SINGLE_TASK_MAX_FILES`` committed files of at most
+    ``_SINGLE_TASK_MAX_BYTES`` on disk and decoded, with no staged
+    segment of its own, is served on the driver (``_driver_read``): it
+    is read and resolved HERE, and the DataFrame returned is a local
+    relation holding the result, so collecting it runs no Spark job.
+    Every other read returns a lazy Spark plan, run when an action is:
+
+    - the envelope of the boxes, their key set or union, and the chunk
+      ranges filter the parquet relation, so partition and parquet
+      stats pruning engage before any shuffle;
+    - version resolution is a ``max_by`` aggregation, then all-null
+      rows are dropped and rows sorted by dims.
 
     The plan is built from SQL text — one ``filter`` for the envelope,
     chunk and key conditions, one ``selectExpr`` per source, a
@@ -466,125 +623,57 @@ def scan_dataframe(
     Column calls: each ``pyspark.sql.functions`` call or Column method
     costs about 8 py4j round trips for PySpark's origin capture, and
     each Dataset op an eager analysis. The plans Spark derives are the
-    same.
-
-    When ``bounds`` is given and the pruned sources are at most
-    ``_SINGLE_TASK_MAX_FILES`` explicit files of at most
-    ``_SINGLE_TASK_MAX_BYTES`` in all, version resolution runs in one
-    task with no exchange (see ``_SINGLE_TASK_MAX_FILES``)."""
+    same."""
     schema = source.schema
     dims = schema.dim_names
     vals = schema.value_names
     cols = [f"`{c}`" for c in dims + vals]
 
-    parts: list[DataFrame] = []
+    boxes = _boxes(bounds)
+    plan = read_plan(source, boxes)
+    if not plan.files and not source.buffered_rows:
+        empty = spark.createDataFrame([], schema.spark_schema())
+        txn = [f"CAST(NULL AS BIGINT) AS {TXN_COL}"] if include_txn else []
+        return empty.selectExpr(*cols, *txn)
+    if boxes and plan.explicit and _small_input(plan.paths):
+        df = _driver_read(spark, source, boxes, plan, include_txn, drop_null_value_rows, cell_merge)
+        if df is not None:
+            return df
 
-    boxes = bounds if isinstance(bounds, list) else [bounds] if bounds else []
     env = _envelope(boxes) if boxes else {}
-    snap = source.snapshot
-    staged = source.own_txn is not None and source.own_staged_segments > 0
-    overlay = staged or bool(source.buffered_rows)
-    txn_boxes, dedup_free, rank_overrides = plan_txns(snap, boxes)
-    read_txns = list(txn_boxes)
-    # a read-your-own-writes overlay may add a version of any key
-    dedup_free = dedup_free and not overlay
-    # Tie-free: version TIES (identical (txn, seq) on one key) can only
-    # arise from duplicate keys inside a single write call; when EVERY
-    # visible txn is stamped unique_keys (dedup'ed bulk loads,
-    # compactions) and there is no RYOW overlay, versions per key are
-    # provably distinct. Multi-value row-level resolution can then use
-    # per-column max_by over the packed-long version — hash-aggregable
-    # — without risking a row stitched from different tied writes.
-    tie_free = (
-        not overlay and bool(read_txns) and all(snap.unique_keys(t) for t in read_txns)
-    )
-    single_task = False
-    if staged:
-        read_txns.append(source.own_txn)
-    if read_txns:
-        # Resolve the file set from manifests when every committed txn
-        # recorded one: no filesystem LISTING job at read time (at
-        # scale, listing thousands of chunk dirs costs more than the
-        # pruned read itself), and bounded scans chunk-prune the list
-        # driver-side before the reader sees a single path. Own staged
-        # segments have no manifest yet — their txn dir is passed as a
-        # directory (small listing). Any committed txn without a file
-        # list (legacy store, capped txn) falls back to directories.
-        paths: list[str] = []
-        explicit_ok = True
-        box_cranges = [_chunk_ranges(schema, b) for b in boxes]
-        for t in read_txns:
-            tdir = manifest.txn_data_dir(snap.db_path, t)
-            if t == source.own_txn:
-                paths.append(tdir)
-                continue
-            fl = snap.files(t)
-            if fl is None:
-                explicit_ok = False
-                break
-            if boxes:
-                fl = _select_manifest_files(fl, [box_cranges[i] for i in txn_boxes[t]])
-            paths.extend(f"{tdir}/{rel}" for rel in fl)
-            if len(paths) > _MAX_EXPLICIT_PATHS:
-                # bail BEFORE materializing millions of path strings —
-                # past this size the directory reader wins anyway
-                explicit_ok = False
-                break
-        if not explicit_ok:
-            paths = [manifest.txn_data_dir(snap.db_path, t) for t in read_txns]
-        single_task = (
-            bool(boxes)
-            and explicit_ok
-            and source.own_txn not in read_txns
-            and _small_input(paths)
+    predicate = _union_predicate(schema, boxes)
+    parts: list[DataFrame] = []
+    if plan.files:
+        # Catalog-schema read: no footer inference, no mergeSchema
+        # job (see _read_schema). Files predating an evolved value
+        # column read it as typed null.
+        df = (
+            spark.read.option("basePath", manifest.data_dir(source.snapshot.db_path))
+            .schema(_read_schema(schema))
+            .parquet(*plan.paths)
         )
-        if paths:  # empty = every committed file chunk-pruned away
-            # Catalog-schema read: no footer inference, no mergeSchema
-            # job (see _read_schema). Files predating an evolved value
-            # column read it as typed null.
-            df = (
-                spark.read.option("basePath", manifest.data_dir(snap.db_path))
-                .schema(_read_schema(schema))
-                .parquet(*paths)
-            )
-            # Prune BEFORE projecting away the __chunk_* partition columns.
-            df = _where(df, _range_filters(schema, env, True), predicate)
-            # Partition dirs contribute txn=<t>, seg=<s>, __chunk_* columns;
-            # the explicit catalog read schema guarantees every value
-            # column exists (typed null where a file predates it).
-            txn_expr = "txn"
-            if rank_overrides:
-                whens = " ".join(f"WHEN {t} THEN {r}" for t, r in sorted(rank_overrides.items()))
-                txn_expr = f"CAST(CASE txn {whens} ELSE txn END AS BIGINT)"
-            parts.append(df.selectExpr(f"{txn_expr} AS {TXN_COL}", SEQ_COL, *cols))
+        # Prune BEFORE projecting away the __chunk_* partition columns.
+        df = _where(df, _range_filters(schema, env, True), predicate)
+        # Partition dirs contribute txn=<t>, seg=<s>, __chunk_* columns;
+        # the explicit catalog read schema guarantees every value
+        # column exists (typed null where a file predates it).
+        txn_expr = "txn"
+        if plan.ranks:
+            whens = " ".join(f"WHEN {t} THEN {r}" for t, r in sorted(plan.ranks.items()))
+            txn_expr = f"CAST(CASE txn {whens} ELSE txn END AS BIGINT)"
+        parts.append(df.selectExpr(f"{txn_expr} AS {TXN_COL}", SEQ_COL, *cols))
 
     if source.buffered_rows:
         # Read-your-own-writes overlay for unflushed rows
         # (reference: transaction.rs:80-83). Driver-side by nature:
         # these are rows the application just add_row()ed.
-        # The sentinel must outrank every committed txn AND survive the
-        # packed (txn·2³² + seq) version key without overflow: 2³¹−1 is
-        # the top of the txn-id space (manifest.publish reserves it —
-        # committed ids stay strictly below), and (2³¹−1)·2³² + seq
-        # tops out at 2⁶³−1, the last representable long.
-        own = source.own_txn if source.own_txn is not None else (1 << 31) - 1
         buf = spark.createDataFrame(source.buffered_rows, schema.staging_schema())
         buf = _where(buf, _range_filters(schema, env, False), predicate)
-        parts.append(buf.selectExpr(f"CAST({own} AS BIGINT) AS {TXN_COL}", SEQ_COL, *cols))
-
-    if not parts:
-        empty = spark.createDataFrame([], schema.spark_schema())
-        txn = [f"CAST(NULL AS BIGINT) AS {TXN_COL}"] if include_txn else []
-        return empty.selectExpr(*cols, *txn)
+        parts.append(buf.selectExpr(f"CAST({_overlay_txn(source)} AS BIGINT) AS {TXN_COL}", SEQ_COL, *cols))
 
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    if single_task:
-        # A bounded read of a few small files: one partition satisfies
-        # both the dedup's clustering and the sort's ordering, so the
-        # plan below gets neither exchange and the whole read is one job.
-        df = df.coalesce(1)
 
     # O2: newest-(txn, seq) wins per key. max_by keeps map-side partial
     # aggregation (one shuffle) — cheaper at scale than a row_number
@@ -606,7 +695,7 @@ def scan_dataframe(
     version = f"struct({TXN_COL}, {SEQ_COL})"
     version_long = f"{TXN_COL} * {1 << 32} + {SEQ_COL}"
     txn_col = [TXN_COL] if include_txn else []
-    if dedup_free:
+    if plan.dedup_free:
         # One version per key already (single compacted txn): project
         # away the bookkeeping columns and skip the aggregation. Under
         # one version per key, row-level and cell-level resolution
@@ -614,7 +703,7 @@ def scan_dataframe(
         df = df.selectExpr(*cols, *txn_col)
     elif not vals and not include_txn:  # key-only schema: plain distinct on dims
         df = df.selectExpr(*cols).distinct()
-    elif cell_merge or len(vals) == 1 or tie_free:
+    elif cell_merge or len(vals) == 1 or plan.tie_free:
         # CELL-level resolution (``cell_merge``) — the reference's
         # actual write model: add_row overwrites individual value cells
         # in place (block.rs:45-49), so each value column's newest
@@ -664,22 +753,198 @@ def scan_dataframe(
     return df
 
 
-def resolve_arrow(table, dims: list[str], versioned: bool = True, keep_tombstones: bool = False):
-    """``scan_dataframe``'s row-level rule over an Arrow table, for the
-    readers that resolve a chunk's rows without Spark (the DSv2
-    snapshot and change-feed readers): per key, the row with the newest
-    (``__txn``, ``__seq``) wins — one whole row, whichever of tied rows
-    the sort leaves last — and, unless ``keep_tombstones``, a winner
-    whose value cells are all null is dropped. ``versioned=False``
-    declares a table that already holds one version per key (a
-    ``unique_keys`` txn) and has no version columns: only the
-    tombstone rule applies, as in ``scan_dataframe``'s dedup-free plan.
+def _overlay_txn(source: ScanSource) -> int:
+    """The version of the buffered rows: the transaction's own id, or
+    a sentinel that outranks every committed txn AND survives the
+    packed (txn·2³² + seq) version key without overflow — 2³¹−1 is the
+    top of the txn-id space (manifest.publish reserves it; committed
+    ids stay strictly below), and (2³¹−1)·2³² + seq tops out at
+    2⁶³−1, the last representable long."""
+    return source.own_txn if source.own_txn is not None else (1 << 31) - 1
+
+
+def _driver_read(
+    spark: SparkSession,
+    source: ScanSource,
+    boxes: list[dict[str, tuple]],
+    plan: ReadPlan,
+    include_txn: bool,
+    drop_null_value_rows: bool,
+    cell_merge: bool,
+) -> DataFrame | None:
+    """A small bounded read served on the driver, or None when its
+    files decode to more than ``_SINGLE_TASK_MAX_BYTES``: the plan's
+    files read with pyarrow, with the union of ``boxes`` (and their
+    envelope, for row-group stats) as the dataset filter; the buffered
+    rows appended at their overlay version; versions resolved by
+    ``resolve_arrow``; all-null rows dropped unless
+    ``drop_null_value_rows`` is off. The result, in key order, becomes
+    a local relation with the Spark plan's schema — Spark keeps an
+    Arrow input below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MiB) on the driver, so no Spark job reads it back."""
+    import pyarrow as pa
+
+    schema = source.schema
+    where = _arrow_boxes(schema, boxes)
+    table = _read_files(plan.files, schema, True, where, max_bytes=_SINGLE_TASK_MAX_BYTES)
+    if table is None:
+        return None
+    if source.buffered_rows:
+        buf = _overlay_table(source.buffered_rows, schema, table.schema, _overlay_txn(source))
+        table = pa.concat_tables([table, buf.filter(where)])
+    table = resolve_arrow(
+        table, schema.dim_names, keep_tombstones=not drop_null_value_rows, cell_merge=cell_merge
+    )
+    out = _output_schema(schema, include_txn, nullable_dims=bool(plan.files))
+    return spark.createDataFrame(table.select(out.names), out)
+
+
+def _read_files(files: list, sch: Schema, versioned: bool, where=None, max_bytes: int | None = None):
+    """``(path, effective txn)`` data files as one Arrow table of the
+    store's columns — a value column a file predates reads as typed
+    nulls — plus, when ``versioned``, each row's write sequence and
+    effective txn (``__seq``, ``__txn``): the input of
+    ``resolve_arrow``. The one file reader of the driver read and the
+    DSv2 readers: one single-threaded scan over every file.
+
+    ``where`` is a pyarrow dataset filter: it skips row groups by their
+    stats and filters rows. With ``max_bytes``, a file set whose row
+    groups (uncompressed, as the footers size them) exceed it is not
+    read: the result is None."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyarrow.fs import LocalFileSystem
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    file_schema = pa.schema([f.with_nullable(True) for f in to_arrow_schema(sch.staging_schema())])
+    cols = sch.column_names + ([SEQ_COL] if versioned else [])
+    fmt, fs = ds.ParquetFileFormat(), LocalFileSystem()
+    frags = [fmt.make_fragment(path, fs) for path, _ in files]
+    if max_bytes is not None:
+        raw = 0
+        for f in frags:  # the footers the scan below reuses
+            md = f.metadata
+            raw += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+        if raw > max_bytes:
+            return None
+    scanner = ds.FileSystemDataset(frags, file_schema, fmt, fs).scanner(
+        columns=cols, filter=where, use_threads=False
+    )
+    eff = {f.path: t for f, (_, t) in zip(frags, files)}
+    batches, txns = [], []
+    for tagged in scanner.scan_batches():
+        batches.append(tagged.record_batch)
+        txns.append(pa.repeat(pa.scalar(eff[tagged.fragment.path], pa.int64()), tagged.record_batch.num_rows))
+    t = pa.Table.from_batches(batches, scanner.projected_schema)
+    if versioned:
+        t = t.append_column(TXN_COL, pa.chunked_array(txns, pa.int64()))
+    return t
+
+
+def _overlay_table(rows: list[tuple], sch: Schema, arrow_schema, txn: int):
+    """Buffered rows (staging-schema tuples) as an Arrow table of
+    ``arrow_schema`` at version ``txn``, each value converted as
+    ``createDataFrame`` converts it: a naive datetime is local time."""
+    import pyarrow as pa
+
+    arrays = []
+    for i, f in enumerate(sch.staging_schema().fields):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, (T.TimestampType, T.DateType)):
+            counts = pa.int32() if isinstance(f.dataType, T.DateType) else pa.int64()
+            internal = pa.array([f.dataType.toInternal(v) for v in vals], counts)
+            arrays.append(internal.cast(arrow_schema.field(f.name).type))
+        else:
+            arrays.append(pa.array(vals, arrow_schema.field(f.name).type))
+    arrays.append(pa.repeat(pa.scalar(txn, pa.int64()), len(rows)))
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def _arrow_bound(value, dim_type: str, upper: bool):
+    """A key bound as the pyarrow scalar ``_sql_literal``'s text parses
+    to. A decimal(20,0) dim holds integers of at most 20 digits, so a
+    fractional bound rounds inward and an infinite one clamps just past
+    that range (both exact); dates and timestamps take the day and
+    microsecond counts ``createDataFrame`` stores for them."""
+    import pyarrow as pa
+
+    if isinstance(value, bool):
+        return pa.scalar(value)
+    if dim_type.startswith("decimal") and isinstance(value, (numbers.Real, decimal.Decimal)):
+        value = min(max(value, -(10**20)), 10**20)
+        return pa.scalar(decimal.Decimal(math.floor(value) if upper else math.ceil(value)))
+    if isinstance(value, numbers.Integral):
+        return pa.scalar(int(value))
+    if isinstance(value, numbers.Real):
+        return pa.scalar(float(value), pa.float64())
+    if isinstance(value, datetime.datetime):
+        return pa.scalar(T.TimestampType().toInternal(value), pa.int64()).cast(pa.timestamp("us", "UTC"))
+    if isinstance(value, datetime.date):
+        return pa.scalar(T.DateType().toInternal(value), pa.int32()).cast(pa.date32())
+    return pa.scalar(value)
+
+
+def _arrow_box(schema: Schema, box: dict[str, tuple]):
+    """pyarrow expression: the row lies in ``box``, compared in Spark's
+    order — NaN sorts above every other double and equals NaN, −0.0
+    equals 0.0."""
+    import pyarrow.compute as pc
+
+    types = {d.name: d.type for d in schema.dimensions}
+    expr = pc.scalar(True)
+    for name, (lo, hi) in box.items():
+        x = pc.field(name)
+        fl = types[name] in ("double", "float")
+        if lo is not None:
+            if isinstance(lo, float) and lo != lo:  # only NaN is >= NaN
+                expr &= pc.is_nan(x) if fl else pc.scalar(False)
+            else:
+                ge = x >= _arrow_bound(lo, types[name], False)
+                expr &= (pc.is_nan(x) | ge) if fl else ge
+        if hi is not None and not (isinstance(hi, float) and hi != hi):  # all is <= NaN
+            le = x <= _arrow_bound(hi, types[name], True)
+            expr &= (~pc.is_nan(x) & le) if fl else le
+    return expr
+
+
+def _arrow_boxes(schema: Schema, boxes: list[dict[str, tuple]]):
+    """pyarrow expression: the row lies in one of ``boxes`` — their
+    envelope AND'ed with their union, so row-group stats prune by the
+    envelope whatever the union's shape."""
+    env = _arrow_box(schema, _envelope(boxes))
+    if len(boxes) < 2:
+        return env
+    union = _arrow_box(schema, boxes[0])
+    for b in boxes[1:]:
+        union |= _arrow_box(schema, b)
+    return env & union
+
+
+def resolve_arrow(
+    table,
+    dims: list[str],
+    versioned: bool = True,
+    keep_tombstones: bool = False,
+    cell_merge: bool = False,
+):
+    """``scan_dataframe``'s version resolution over an Arrow table, for
+    the readers that resolve without Spark (the driver read and the
+    DSv2 snapshot and change-feed readers): per key, the row with the
+    newest (``__txn``, ``__seq``) wins — one whole row, whichever of
+    tied rows the sort leaves last, its ``__txn`` the effective version
+    read — and, unless ``keep_tombstones``, a winner whose value cells
+    are all null is dropped. ``cell_merge`` resolves each value column
+    on its own instead: the newest non-null cell wins, and the key's
+    ``__txn`` stays its newest version's. ``versioned=False`` declares
+    a table that already holds one version per key (a ``unique_keys``
+    txn) and has no version columns: only the tombstone rule applies,
+    as in ``scan_dataframe``'s dedup-free plan.
 
     Keys compare as Spark's grouping compares them: NaN equals NaN,
     −0.0 equals 0.0 and comes out as 0.0, and every other value
     (integers, decimals, strings, binary, dates, timestamps) compares
-    by value. Resolved winners come out in key order; every input
-    column is kept."""
+    by value. Resolved winners come out in key order, which is Spark's
+    (NaN above every other double); every input column is kept."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -701,10 +966,37 @@ def resolve_arrow(table, dims: list[str], versioned: bool = True, keep_tombstone
             if d in floats:  # NaN != NaN, yet all NaNs are one key
                 ne = pc.and_not(ne, pc.and_(pc.is_nan(a), pc.is_nan(b)))
             differs = pc.or_(differs, ne)
-        table = table.filter(pa.chunked_array([*differs.chunks, pa.array([True])]))
+        last = pa.chunked_array([*differs.chunks, pa.array([True])])
+        table = _merge_cells(table, dims, last) if cell_merge else table.filter(last)
     if not keep_tombstones:
         table = table.filter(_has_value(table, dims))
     return table
+
+
+def _merge_cells(table, dims: list[str], last):
+    """One row per key of a table sorted by (dims, version), where
+    ``last`` marks each key's newest row: that row, with each value
+    cell replaced by the key's newest non-null cell of its column (null
+    when the key wrote none)."""
+    import numpy as np
+    import pyarrow as pa
+
+    last = last.to_numpy(zero_copy_only=False)
+    ends = np.flatnonzero(last)
+    key = np.concatenate([[0], np.cumsum(last[:-1])])  # each row's key index
+    out = table.take(ends)
+    for v in table.column_names:
+        if v in dims or v in (TXN_COL, SEQ_COL):
+            continue
+        written = np.flatnonzero(table[v].is_valid().to_numpy(zero_copy_only=False))
+        # the newest written cell at or before each key's newest row...
+        j = np.searchsorted(written, ends, side="right") - 1
+        pick = written[np.maximum(j, 0)] if len(written) else np.zeros(len(ends), np.int64)
+        # ...counts only if it belongs to that key
+        found = (j >= 0) & (key[pick] == np.arange(len(ends)))
+        cells = table[v].take(pa.array(pick, mask=~found))
+        out = out.set_column(out.schema.get_field_index(v), v, cells)
+    return out
 
 
 def _has_value(table, dims: list[str]):

@@ -34,9 +34,10 @@ the source needs NO shuffle at all — Spark receives already-resolved
 snapshot rows as Arrow record batches.
 
 Both readers, the snapshot and the change feed, read a chunk's files
-with one helper (``_read_files``) and resolve them with
+with the library's file reader (``scan._read_files``, which also
+serves small reads on the driver) and resolve them with
 ``scan.resolve_arrow`` — the library scan's rule, kept beside its
-``max_by`` plan in scan.py — so the two paths cannot drift. Keys
+``max_by`` plan in scan.py — so the paths cannot drift. Keys
 compare as Spark's grouping compares them: NaN equals NaN, −0.0
 equals 0.0 and reads back as 0.0, and every other key type compares
 by value.
@@ -109,6 +110,7 @@ from matdb_spark.stats import footer_stats, spark_order
 from matdb_spark.scan import (
     _chunk_ranges,
     _has_value,
+    _read_files,
     _select_manifest_files,
     plan_txns,
     resolve_arrow,
@@ -252,30 +254,6 @@ def _apply_pending_evolution(db_path: str, pending: list) -> None:
             os.unlink(lock)
         except FileNotFoundError:
             pass
-
-
-def _read_files(files: list, sch: Schema, versioned: bool):
-    """One partition's ``(path, effective txn)`` files as one Arrow
-    table of the store's columns — a value column a file predates reads
-    as typed nulls — plus, when ``versioned``, each row's write
-    sequence and effective txn (``__seq``, ``__txn``): the input of
-    ``scan.resolve_arrow``."""
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-
-    file_schema = pa.schema(
-        [f.with_nullable(True) for f in to_arrow_schema(sch.staging_schema())]
-    )
-    cols = sch.column_names + ([SEQ_COL] if versioned else [])
-    tables = [
-        ds.dataset(path, schema=file_schema, format="parquet").to_table(columns=cols)
-        for path, _ in files
-    ]
-    t = pa.concat_tables(tables) if tables else file_schema.empty_table().select(cols)
-    if versioned:
-        txns = [pa.repeat(pa.scalar(eff, pa.int64()), len(f)) for (_, eff), f in zip(files, tables)]
-        t = t.append_column(TXN_COL, pa.chunked_array(txns, pa.int64()))
-    return t
 
 
 @dataclass

@@ -36,7 +36,6 @@ from matdb_spark import manifest, scan
 from matdb_spark.scan import (
     ScanSource,
     _chunked,
-    _key_predicate,
     iterate_rows,
     scan_dataframe,
 )
@@ -449,7 +448,15 @@ class Transaction:
         Bounds may name DIMENSIONS only: a pre-dedup filter on a value
         column would drop old versions row-by-row and CHANGE version
         resolution (filter value columns on the returned DataFrame
-        instead — that commutes)."""
+        instead — that commutes).
+
+        When the pruned file set is small (at most
+        ``scan._SINGLE_TASK_MAX_FILES`` committed files of at most
+        ``scan._SINGLE_TASK_MAX_BYTES`` on disk and decoded, no flushed
+        segment of this transaction), the read is served on the driver
+        and runs HERE, when the DataFrame is built: the DataFrame holds
+        the result as a local relation, and collecting it runs no Spark
+        job. Otherwise it is a lazy Spark plan, run by an action."""
         self._check_open()
         dims = set(self.schema.dim_names)
         bad = sorted(set(bounds or {}) - dims)
@@ -478,15 +485,20 @@ class Transaction:
         read only if its manifest stats may hold one of the keys, and of
         its files only those in the chunk directories of the keys it
         may hold — so 8 keys read about 8 files, not every file under
-        the key set's min..max envelope. The exact key-set predicate
-        (one SQL string for integral dims: ``IN`` for one dim, an OR of
-        ANDs otherwise) reaches the parquet scan, where row-group stats
-        and, where enabled, parquet bloom filters on dims skip what the
-        sort order can't. It references dim columns only, so it
-        commutes with version dedup. When the pruned file set is small
-        (``scan._SINGLE_TASK_MAX_FILES`` files, ``_SINGLE_TASK_MAX_BYTES``
-        bytes), versions resolve in one task: no exchange, one Spark
-        job."""
+        the key set's min..max envelope.
+
+        When those files are few and small (as for ``query_range``), the
+        read is served on the driver and runs HERE, when the DataFrame
+        is built: pyarrow reads the files with the key set and its
+        envelope as the dataset filter (row-group stats skip what they
+        can), and the DataFrame holds the result as a local relation,
+        so collecting it runs no Spark job. Otherwise it is a lazy Spark
+        plan, run by an action, whose exact key-set predicate (``IN``
+        for one dim, an OR of ANDs otherwise) reaches the parquet scan,
+        where row-group stats and, where enabled, parquet bloom filters
+        on dims skip what the sort order can't. The predicate
+        references dim columns only, so it commutes with version
+        dedup."""
         self._check_open()
         dims = self.schema.dim_names
         # accept mappings keyed by dim name as well as positional
@@ -518,7 +530,6 @@ class Transaction:
             ordered=ordered,
             include_txn=include_txn,
             bounds=[{d: (v, v) for d, v in zip(dims, p)} for p in pts],
-            predicate=_key_predicate(self.schema, pts),
         )
 
     def query_rows(self) -> Iterator[Row]:

@@ -78,7 +78,12 @@ def test_query_points(spark, tmp_db_path):
     ]
 
 
-def test_query_points_single_dim_uses_in_pushdown(spark, tmp_db_path):
+def test_query_points_single_dim_uses_in_pushdown(spark, tmp_db_path, monkeypatch):
+    from matdb_spark import scan
+
+    # the Spark plan's pushdown: a read this small is otherwise served
+    # on the driver, with no parquet scan to inspect
+    monkeypatch.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
     schema = Schema(dimensions=[Dimension("k", chunk_size=100)], values=[Value("v")])
     db = Database.create(spark, os.path.join(tmp_db_path, "pin"), schema)
     with db.begin() as txn:

@@ -22,7 +22,7 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from matdb_spark import Database, Dimension, Schema, Value, manifest
+from matdb_spark import Database, Dimension, Schema, Value, manifest, scan
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
@@ -326,6 +326,11 @@ _step = st.one_of(
     st.tuples(st.just("major")),
     st.tuples(st.just("vacuum")),
 )
+# buffered writes of a transaction that reads before it commits
+_overlay = st.lists(
+    st.one_of(st.tuples(st.just("row"), _key_idx, _b, _vw), st.tuples(st.just("del"), _key_idx, _b)),
+    max_size=3,
+)
 _reads = st.tuples(
     st.tuples(_key_idx, _key_idx, _b, _b),  # a range: a in [lo, hi], b in [lo, hi]
     st.lists(st.tuples(_key_idx, _b), min_size=1, max_size=4),  # point keys
@@ -428,9 +433,13 @@ def _raises_alike(tag, lib_call, other_call):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@given(workload=st.lists(_step, min_size=1, max_size=6), reads=_reads)
-@example(workload=_NAN_ZERO_WORKLOAD, reads=((3, 0, 0, 3), [(0, 0), (2, 0)], 1, 0, 2))
-def test_every_read_path_matches_model(spark, dim_type, workload, reads):
+@given(workload=st.lists(_step, min_size=1, max_size=6), reads=_reads, overlay=_overlay)
+@example(
+    workload=_NAN_ZERO_WORKLOAD,
+    reads=((3, 0, 0, 3), [(0, 0), (2, 0)], 1, 0, 2),
+    overlay=[("row", 0, 0, (7, None)), ("del", 2, 0), ("row", 4, 1, (None, 3))],
+)
+def test_every_read_path_matches_model(spark, dim_type, workload, reads, overlay):
     from matdb_spark.sources.dsv2 import register_matdb_source
 
     register_matdb_source(spark)
@@ -438,12 +447,38 @@ def test_every_read_path_matches_model(spark, dim_type, workload, reads):
     os.makedirs(SCRATCH, exist_ok=True)
     path = tempfile.mkdtemp(prefix="prop_reads_", dir=SCRATCH)
     try:
-        _read_every_way(spark, dim_type, pool, path, workload, reads)
+        _read_every_way(spark, dim_type, pool, path, workload, reads, overlay)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def _read_every_way(spark, dim_type, pool, path, workload, reads):
+def _both_ways(read):
+    """The rows of ``read()`` as built — served on the driver when its
+    files are few and small — and forced onto the Spark plan (a byte
+    cap of 0), after checking that both have one schema."""
+    built = read()
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+        on_spark = read()
+    assert built.schema == on_spark.schema, (built.schema, on_spark.schema)
+    return built.collect(), on_spark.collect()
+
+
+def _agree(tag, got, want, tied):
+    """Two reads return the same keys, and the same row for every key
+    outside ``tied`` (keys some write call wrote twice: those rows tie
+    on (txn, seq) and each read may pick any)."""
+
+    def by_key(rows):
+        return {(_tok(r["a"]), r["b"]): tuple(_tok(x) for x in r) for r in rows}
+
+    g, w = by_key(got), by_key(want)
+    assert set(g) == set(w), f"{tag}: keys {set(g) ^ set(w)}"
+    for k in set(g) - tied:
+        assert g[k] == w[k], f"{tag}: {k} = {g[k]} on the driver, {w[k]} on Spark"
+
+
+def _read_every_way(spark, dim_type, pool, path, workload, reads, overlay):
     from pyspark.sql import functions as F
 
     from matdb_spark.sources.dsv2 import MatdbChangesStreamReader
@@ -461,10 +496,13 @@ def _read_every_way(spark, dim_type, pool, path, workload, reads):
     def frame(rows):
         return spark.createDataFrame([(pool[ai], b, *vw) for ai, b, vw in rows], schema.spark_schema())
 
+    ever_tied: set = set()  # keys some write call wrote twice, differently
+
     def tied(rows):  # key -> every row written for it: they tie
         out: dict = {}
         for ai, b, vw in rows:
             out.setdefault(key(ai, b), set()).add(vw)
+        ever_tied.update(k for k, r in out.items() if len(r) > 1)
         return out
 
     writes: dict[int, dict] = {}  # committed user txn -> key -> allowed rows
@@ -526,12 +564,28 @@ def _read_every_way(spark, dim_type, pool, path, workload, reads):
     box = {k: r for k, r in head.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
     points = {key(ai, b) for ai, b in reads[1]}
 
-    # the library's reads
+    # the library's reads; each bounded one served on the driver where
+    # its files are few and small, and on the Spark plan
     _check_rows("query", db.begin().query().collect(), head, ordered=True)
-    rng = db.begin().query_range({"a": (pool[lo], pool[hi]), "b": (blo, bhi)}).collect()
-    _check_rows("query_range", rng, box, ordered=True)
-    pts = db.begin().query_points([(pool[ai], b) for ai, b in reads[1]]).collect()
-    _check_rows("query_points", pts, {k: r for k, r in head.items() if k in points}, ordered=True)
+    bounds = {"a": (pool[lo], pool[hi]), "b": (blo, bhi)}
+    keys = [(pool[ai], b) for ai, b in reads[1]]
+    for way, rows in zip(("driver", "spark"), _both_ways(lambda: db.begin().query_range(bounds))):
+        _check_rows(f"query_range ({way})", rows, box, ordered=True)
+    for way, rows in zip(("driver", "spark"), _both_ways(lambda: db.begin().query_points(keys))):
+        _check_rows(f"query_points ({way})", rows, {k: r for k, r in head.items() if k in points}, ordered=True)
+    flagged = {
+        "query_range include_txn": lambda: db.begin().query_range(bounds, include_txn=True),
+        "query_points include_txn": lambda: db.begin().query_points(keys, include_txn=True),
+        "query_range cell_merge": lambda: db.begin().query_range(bounds, include_txn=True, cell_merge=True),
+        "tombstones kept": lambda: scan.scan_dataframe(
+            spark, db.begin()._source(), include_txn=True, drop_null_value_rows=False, bounds=bounds
+        ),
+    }
+    for tag, read in flagged.items():
+        got, want = _both_ways(read)
+        _agree(tag, got, want, ever_tied)
+        if tag == "query_range include_txn":
+            _check_rows(tag, got, box, ordered=True)
 
     # the DSv2 snapshot reader, whole and with pushed dim filters
     def dsv2(as_of=None, filtered=False):
@@ -579,3 +633,25 @@ def _read_every_way(spark, dim_type, pool, path, workload, reads):
     if lib is not None:
         _check_feed(f"changes({since}, {until})", lib, feed)
         _check_feed(f"dsv2 feed ({since}, {until}]", got, feed)
+
+    # a transaction's buffered writes overlay the snapshot it reads
+    txn = db.begin()
+    net: dict = {}
+    for call in overlay:
+        if call[0] == "row":
+            _, ai, b, vw = call
+            txn.add_row([pool[ai], b, *vw])
+            net[key(ai, b)] = {vw}
+        else:
+            _, ai, b = call
+            txn.delete_row([pool[ai], b])
+            net[key(ai, b)] = {_TOMB}
+    mine = {**head, **net}
+    mine_box = {k: r for k, r in mine.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
+    for way, rows in zip(("driver", "spark"), _both_ways(lambda: txn.query_range(bounds))):
+        _check_rows(f"overlay query_range ({way})", rows, mine_box, ordered=True)
+    for way, rows in zip(("driver", "spark"), _both_ways(lambda: txn.query_points(keys))):
+        _check_rows(f"overlay query_points ({way})", rows, {k: r for k, r in mine.items() if k in points}, ordered=True)
+    got, want = _both_ways(lambda: txn.query_range(bounds, include_txn=True, cell_merge=True))
+    _agree("overlay cell_merge", got, want, ever_tied)
+    txn.rollback()

@@ -55,7 +55,24 @@ def _grid_db(spark, name: str) -> Database:
     return db
 
 
-def test_query_range_prunes_partitions(spark):
+def _on_spark(monkeypatch):
+    """Force bounded reads onto the Spark plan: with a byte cap of 0 no
+    file set is small enough to be served on the driver."""
+    from matdb_spark import scan
+
+    monkeypatch.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+
+
+def _files(txn, bounds):
+    """The data files a read of ``txn`` inside ``bounds`` opens, on the
+    driver or in the Spark plan alike (``scan.read_plan``)."""
+    from matdb_spark import scan
+
+    return scan.read_plan(txn._source(), bounds).paths
+
+
+def test_query_range_prunes_partitions(spark, monkeypatch):
+    _on_spark(monkeypatch)
     db = _grid_db(spark, "plans_range_db")
     txn = db.begin()
     narrow = txn.query_range({"t": (250, 349)}, ordered=False)
@@ -83,7 +100,7 @@ def test_snapshot_scan_shuffle_budget(spark):
     assert exchange_count(ordered) == 2
 
 
-def test_compacted_scan_is_dedup_free(spark):
+def test_compacted_scan_is_dedup_free(spark, monkeypatch):
     """A snapshot that is exactly one compacted txn carries a
     ``unique_keys`` manifest stamp, and its scans skip the version
     dedup entirely — zero shuffles unordered, one (the sort) ordered.
@@ -109,8 +126,11 @@ def test_compacted_scan_is_dedup_free(spark):
     with_txn = db.begin().query(ordered=False, include_txn=True)
     assert exchange_count(with_txn) == 0
     assert with_txn.select("__txn").distinct().collect() == [(2,)]
-    # bounded scans ride the fast path with pruning intact
-    rng = db.begin().query_range({"t": (100, 199)}, ordered=False)
+    # bounded scans ride the fast path with pruning intact (on the
+    # Spark plan: a read this small is otherwise served on the driver)
+    with monkeypatch.context() as m:
+        _on_spark(m)
+        rng = db.begin().query_range({"t": (100, 199)}, ordered=False)
     assert exchange_count(rng) == 0
     assert "__chunk_t" in " ".join(partition_filters(rng))
     assert rng.count() == 100 * 5
@@ -223,9 +243,10 @@ def test_stats_pruning_skips_txn_dirs(spark, tmp_path_factory):
                 spark.createDataFrame([(lo + i, i) for i in range(500)], "k long, v long")
             )
             t.commit()
-    df = db.begin().query_range({"k": (10_100, 10_200)}, ordered=False)
-    files = df.inputFiles()
+    files = _files(db.begin(), {"k": (10_100, 10_200)})
     assert files and all("txn=2" in f for f in files), files
+    # ...and of that txn's files only the chunks the bounds touch
+    assert {f.split("__chunk_k=")[1].split("/")[0] for f in files} == {"101", "102"}, files
 
 
 def test_adapted_tpch_plans(spark):
@@ -244,8 +265,10 @@ def test_adapted_tpch_plans(spark):
     assert broadcast_join_count(q20) >= 3  # part, supplier, nation, per-part totals
 
 
-def test_point_lookup_pushdown(spark, tmp_path_factory):
-    """query_points' key-set predicate must reach the parquet scan."""
+def test_point_lookup_pushdown(spark, tmp_path_factory, monkeypatch):
+    """query_points' key-set predicate must reach the parquet scan of
+    the Spark plan."""
+    _on_spark(monkeypatch)
     base = str(tmp_path_factory.mktemp("ptplan"))
     db = Database.create(
         spark, os.path.join(base, "db"),
@@ -306,31 +329,36 @@ def _one_group(spark, group, build):
     return df, rows, jobs
 
 
-def test_point_get_is_one_job_without_exchange(spark, tmp_path_factory):
+def test_point_get_runs_no_spark_job(spark, tmp_path_factory, monkeypatch):
     """An 8-key point get on a 12-txn store prunes per key (one file per
-    key, not every file under the key set's envelope) and resolves
-    versions in one task: no exchange, one Spark job, build included."""
+    key, not every file under the key set's envelope) and is served on
+    the driver: building and collecting it runs no Spark job, on a
+    local table scan. Past the byte cap the same read keeps the
+    parallel plan and the same rows."""
     db = _twelve_txn_store(spark, str(tmp_path_factory.mktemp("ptjob")))
     keys = [(i * 10 + i % 10, (5 * i) % 16) for i in (0, 1, 3, 4, 6, 8, 9, 11)]
+    want = [(t, s, t % 10 + 10 * s) for t, s in sorted(keys)]
 
     df, rows, jobs = _one_group(
         spark, "point-get-plan", lambda: db.begin().query_points(keys)
     )
 
-    assert [(r.t, r.s) for r in rows] == sorted(keys)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert len(jobs) == 1, jobs
-    assert len(df.inputFiles()) <= 8
+    assert [(r.t, r.s, r.v) for r in rows] == want
+    assert len(jobs) == 0, jobs
+    assert _node_names(df) == ["LocalTableScan"], _node_names(df)
+    assert len(_files(db.begin(), [{"t": (t, t), "s": (s, s)} for t, s in keys])) == 8
+
+    _on_spark(monkeypatch)
+    wide = db.begin().query_points(keys)
+    assert [(r.t, r.s, r.v) for r in wide.collect()] == want
+    assert "Exchange" in wide._jdf.queryExecution().executedPlan().toString()
 
 
-def test_small_range_read_is_one_job_without_exchange(spark, tmp_path_factory, monkeypatch):
-    """A key range over a few small files takes the point get's
-    single-task plan: newest versions win, rows come back in key order,
-    no exchange, one Spark job. Past the byte cap the same read keeps
-    the parallel plan and the same rows."""
-    from matdb_spark import scan
-
+def test_small_range_read_runs_no_spark_job(spark, tmp_path_factory, monkeypatch):
+    """A key range over a few small files is served on the driver like
+    the point get: newest versions win, rows come back in key order,
+    and building and collecting it runs no Spark job. Past the byte
+    cap the same read keeps the parallel plan and the same rows."""
     db = _twelve_txn_store(spark, str(tmp_path_factory.mktemp("rgjob")), rewrite=True)
     # t 15..34 lies in txns 1-3 (txn 4 starts at its rewrite of t = 39);
     # s 4..7 is one s chunk, so one file per txn
@@ -345,12 +373,11 @@ def test_small_range_read_is_one_job_without_exchange(spark, tmp_path_factory, m
         spark, "range-read-plan", lambda: db.begin().query_range(bounds)
     )
     assert [(r.t, r.s, r.v) for r in rows] == want
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert len(jobs) == 1, jobs
-    assert len(df.inputFiles()) == 3
+    assert len(jobs) == 0, jobs
+    assert _node_names(df) == ["LocalTableScan"], _node_names(df)
+    assert len(_files(db.begin(), bounds)) == 3
 
-    monkeypatch.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+    _on_spark(monkeypatch)
     wide = db.begin().query_range(bounds)
     assert [(r.t, r.s, r.v) for r in wide.collect()] == want
     assert "Exchange" in wide._jdf.queryExecution().executedPlan().toString()
@@ -632,13 +659,17 @@ def test_corpus_report_scan_budget(spark):
 
 
 def test_store_plans_build_in_few_py4j_round_trips(spark, tmp_path_factory, monkeypatch):
-    """With PySpark's origin capture on (its default), building a small
-    read or commit makes few py4j round trips: the store builds its
-    plans as SQL text, not Column by Column (each ``functions`` call or
-    Column method costs about 8 round trips for the capture). The
-    plans, pushed filters included, are the Column-built ones."""
+    """With PySpark's origin capture on (its default), a small read
+    served on the driver (built and collected), the Spark plan of the
+    same read, and a commit each make few py4j round trips: the store
+    builds its plans as SQL text, not Column by Column (each
+    ``functions`` call or Column method costs about 8 round trips for
+    the capture). The plans, pushed filters included, are the
+    Column-built ones."""
     import py4j.clientserver
     from pyspark.sql import DataFrameWriter
+
+    from matdb_spark import scan
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "true"
     db = _twelve_txn_store(spark, str(tmp_path_factory.mktemp("buildcost")))
@@ -667,23 +698,33 @@ def test_store_plans_build_in_few_py4j_round_trips(spark, tmp_path_factory, monk
             runs.append((fn(), calls[0] - start))
         return min(runs, key=lambda r: r[1])
 
-    rng, n = build(lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}))
-    assert n <= 120, n
-    assert pushed_filters(rng) == [
-        "IsNotNull(t)", "IsNotNull(s)", "GreaterThanOrEqual(t,15)",
-        "LessThanOrEqual(t,34)", "GreaterThanOrEqual(s,4)", "LessThanOrEqual(s,7)",
-    ]
-    assert _node_names(rng) == [
-        "AdaptiveSparkPlan", "Sort", "Filter", "HashAggregate", "HashAggregate",
-        "Coalesce", "Project", "Filter", "FileScan",
-    ]
-    pts, n = build(lambda: db.begin().query_points(keys))
-    assert n <= 120, n
-    assert _node_names(pts) == _node_names(rng)
-    assert " ".join(pushed_filters(pts)).startswith(
-        "IsNotNull(t) IsNotNull(s) GreaterThanOrEqual(t,0) LessThanOrEqual(t,111) "
-        "GreaterThanOrEqual(s,0) LessThanOrEqual(s,15) Or(Or(Or(And(EqualTo(t,0) EqualTo(s,0))"
-    ), pushed_filters(pts)
+    # a small read is served on the driver: it runs when it is built,
+    # so its build and collect are counted together
+    rng, n = build(lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}).collect())
+    assert len(rng) == 80 and n <= 120, n
+    pts, n = build(lambda: db.begin().query_points(keys).collect())
+    assert len(pts) == 8 and n <= 120, n
+
+    # the Spark plan of the same reads, forced past the byte cap
+    with monkeypatch.context() as m:
+        m.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+        rng, n = build(lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}))
+        assert n <= 120, n
+        assert pushed_filters(rng) == [
+            "IsNotNull(t)", "IsNotNull(s)", "GreaterThanOrEqual(t,15)",
+            "LessThanOrEqual(t,34)", "GreaterThanOrEqual(s,4)", "LessThanOrEqual(s,7)",
+        ]
+        assert _node_names(rng) == [
+            "AdaptiveSparkPlan", "Sort", "Exchange", "Filter", "HashAggregate", "Exchange",
+            "HashAggregate", "Project", "Filter", "FileScan",
+        ]
+        pts, n = build(lambda: db.begin().query_points(keys))
+        assert n <= 120, n
+        assert _node_names(pts) == _node_names(rng)
+        assert " ".join(pushed_filters(pts)).startswith(
+            "IsNotNull(t) IsNotNull(s) GreaterThanOrEqual(t,0) LessThanOrEqual(t,111) "
+            "GreaterThanOrEqual(s,0) LessThanOrEqual(s,15) Or(Or(Or(And(EqualTo(t,0) EqualTo(s,0))"
+        ), pushed_filters(pts)
 
     def commit():
         start = calls[0]

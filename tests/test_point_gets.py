@@ -3,9 +3,9 @@ plain-Python expectations.
 
 Point gets prune per key (a transaction is read only if its stats may
 hold one of the keys, and of its files only the chunk directories of
-those keys) and, over a small file set, resolve versions in one task.
-Each case below targets one way that pruning or the single-task plan
-could drop, resurrect or mis-order a row.
+those keys) and, over a small file set, are served on the driver.
+Each case below targets one way that pruning, the driver read or the
+Spark plan could drop, resurrect or mis-order a row.
 """
 
 from __future__ import annotations
@@ -16,8 +16,8 @@ from decimal import Decimal
 
 import pytest
 
-from matdb_spark import Database, Dimension, Schema, Value, manifest
-from matdb_spark.scan import _SINGLE_TASK_MAX_FILES
+from matdb_spark import Database, Dimension, Schema, Value, manifest, scan
+from matdb_spark.scan import _SINGLE_TASK_MAX_FILES, read_plan
 
 
 def _schema() -> Schema:
@@ -47,16 +47,19 @@ def _apply(model: dict, rows=(), deletes=()) -> dict:
 
 def _check(txn, keys, model, ordered=True):
     """query_points(keys) returns exactly the keys ``model`` holds, in
-    key order when ``ordered``."""
-    df = txn.query_points(keys, ordered=ordered)
+    key order when ``ordered`` — as built (served on the driver when
+    its files are few and small) and on the Spark plan, past the byte
+    cap. Returns the DataFrame as built."""
     dims, (val,) = txn.schema.dim_names, txn.schema.value_names
-    got = [(tuple(r[d] for d in dims), r[val]) for r in df.collect()]
     asked = {tuple(k[d] for d in dims) if isinstance(k, dict) else tuple(k) for k in keys}
     want = sorted((k, model[k]) for k in asked if k in model)
-    if ordered:
-        assert got == want
-    else:
-        assert sorted(got) == want
+    df = txn.query_points(keys, ordered=ordered)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+        on_spark = txn.query_points(keys, ordered=ordered)
+    for frame in (df, on_spark):
+        got = [(tuple(r[d] for d in dims), r[val]) for r in frame.collect()]
+        assert (got if ordered else sorted(got)) == want
     return df
 
 
@@ -100,8 +103,8 @@ def test_keys_across_txns_compaction_and_time_travel(spark, tmp_db_path):
     # only absent keys
     assert db.begin().query_points([(30, 0), (-16, 0)]).count() == 0
     # every key that lives in one txn reads only that txn's chunk dir
-    df = db.begin().query_points([(-1, 7)])
-    assert [f.split("/data/")[1].split("/")[0] for f in df.inputFiles()] == ["txn=4"]
+    files = read_plan(db.begin()._source(), [{"t": (-1, -1), "s": (7, 7)}]).paths
+    assert [f.split("/data/")[1].split("/")[0] for f in files] == ["txn=4"]
 
     # time travel: each historical snapshot sees its own versions
     for txn_id, snap in enumerate(history, start=1):
@@ -118,13 +121,17 @@ def test_keys_across_txns_compaction_and_time_travel(spark, tmp_db_path):
     _check(db.begin(), KEYS, _apply(model, **w))
 
 
-def test_single_unique_keys_txn_is_dedup_free(spark, tmp_db_path):
+def test_single_unique_keys_txn_is_dedup_free(spark, tmp_db_path, monkeypatch):
     db = Database.create(spark, os.path.join(tmp_db_path, "uk"), _schema())
     rows = _grid(0, 29, 0, 7)
     with db.begin() as tx:
         tx.add_dataframe(spark.createDataFrame(rows, "t long, s long, v long"), dedup=True)
         tx.commit()
     model = _apply({}, rows=rows)
+    _check(db.begin(), KEYS, model)
+    # the Spark plan skips version resolution (past the byte cap: a read
+    # this small is otherwise served on the driver)
+    monkeypatch.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
     df = _check(db.begin(), KEYS, model)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Aggregate" not in plan, plan
@@ -217,13 +224,18 @@ def test_key_set_past_single_task_limit(spark, tmp_db_path):
     # one key per t chunk: each key lives in its own file
     keys = [(t, t % 4) for t in range(0, 300, 10)] + [(999, 0)]
     df = _check(db.begin(), keys, model)
-    assert len(df.inputFiles()) > _SINGLE_TASK_MAX_FILES
+    assert len(_point_files(db, keys)) > _SINGLE_TASK_MAX_FILES
     assert "Exchange" in df._jdf.queryExecution().executedPlan().toString()
-    # the same pruning on a single-task-sized subset
+    # the same pruning on a subset small enough to be served on the driver
     small = _check(db.begin(), keys[:5], model)
-    assert len(small.inputFiles()) == 5
+    assert len(_point_files(db, keys[:5])) == 5
     plan = small._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
+    assert plan.startswith("LocalTableScan"), plan
+
+
+def _point_files(db, keys):
+    """The data files a point get of ``keys`` opens (``scan.read_plan``)."""
+    return read_plan(db.begin()._source(), [{"t": (t, t), "s": (s, s)} for t, s in keys]).paths
 
 
 def test_point_boxes_select_the_same_files_as_box_by_box():

@@ -11,7 +11,8 @@ and missing stats disable pruning without affecting correctness.
 import os
 
 from matdb_spark import Database, Dimension, Schema, Value
-from matdb_spark import manifest
+from matdb_spark import manifest, stats
+from matdb_spark.scan import plan_txns, read_plan
 from matdb_spark.stats import txn_intersects
 
 
@@ -44,10 +45,11 @@ def test_range_scan_prunes_whole_txns(spark, tmp_db_path):
     t2 = _write_range(db, 5000, 6000)
     txn = db.begin()
     df = txn.query_range({"k": (5100, 5200)}, ordered=False)
-    files = df.inputFiles()
+    files = read_plan(txn._source(), {"k": (5100, 5200)}).paths
     assert files, "expected a non-empty file set"
     assert all(f"txn={t2}" in f for f in files), files
     assert not any(f"txn={t1}" in f for f in files), files
+    assert {f.split("__chunk_k=")[1].split("/")[0] for f in files} == {"51", "52"}, files
     assert df.count() == 101
     # bounds spanning both txns read both and return the union
     df2 = txn.query_range({"k": (900, 5100)}, ordered=False)
@@ -73,3 +75,23 @@ def test_txn_intersects_missing_stats_keeps_txn():
     assert txn_intersects(s, {"k": (150, None)})
     assert txn_intersects(s, {"k": (None, 100)})
     assert txn_intersects(s, {"other": (0, 1)})
+
+
+def test_plan_txns_checks_through_the_stats_module(spark, tmp_db_path, monkeypatch):
+    """``plan_txns`` looks ``txn_intersects`` up on ``matdb_spark.stats``
+    at call time, so a wrapper installed there (storebench's traced run
+    counts kept and pruned checks this way) sees every (txn, box) check."""
+    db = Database.create(spark, os.path.join(tmp_db_path, "w"), _schema())
+    _write_range(db, 0, 100)
+    _write_range(db, 5000, 5100)
+    seen = []
+
+    def counting(s, box):
+        seen.append(box)
+        return txn_intersects(s, box)
+
+    monkeypatch.setattr(stats, "txn_intersects", counting)
+    boxes = [{"k": (5, 5)}, {"k": (5050, 5050)}]
+    kept, _, _ = plan_txns(db.begin().snapshot, boxes)
+    assert kept == {1: [0], 2: [1]}
+    assert len(seen) == 4

@@ -1,10 +1,12 @@
-"""Driver build cost of store reads and commits.
+"""Driver cost of store reads and commits.
 
 On a 12-commit store (10 ticks x 16 sensors each), prints for a key
 range, an 8-key point get and a small commit (up to its write call) the
-median build milliseconds, py4j round trips and eagerly analysed
-Datasets (one per DataFrame op) over ``--repeat`` builds. Reads are
-built, never executed.
+median milliseconds of the build and of the build plus ``collect``,
+and over both the py4j round trips, eagerly analysed Datasets (one per
+DataFrame op) and Spark jobs, over ``--repeat`` runs. A small read
+served on the driver runs inside its build, so its build alone is not
+its cost; a commit is measured up to its write call.
 
     PYTHONPATH=. python tools/build_cost.py [--repeat 5]
 """
@@ -45,15 +47,24 @@ def _stop_at_write(*a, **kw):
     raise _WriteCall
 
 
-def _build(fn) -> tuple[float, int, int]:
-    """(ms, py4j round trips, Datasets) of one ``fn()`` call."""
+def _run(spark, build, finish) -> tuple[float, float, int, int, int]:
+    """(build ms, build + ``finish`` ms, py4j round trips, Datasets,
+    Spark jobs) of one ``finish(build())``."""
+    sc, group = spark.sparkContext, f"build_cost-{time.perf_counter_ns()}"
+    sc.setJobGroup(group, group)
     before, t0 = dict(COUNTS), time.perf_counter()
     try:
-        fn()
+        out = build()
+        t1 = time.perf_counter()
+        finish(out)
     except _WriteCall:
-        pass
-    ms = (time.perf_counter() - t0) * 1e3
-    return ms, COUNTS["py4j"] - before["py4j"], COUNTS["datasets"] - before["datasets"]
+        t1 = time.perf_counter()
+    t2 = time.perf_counter()
+    rt, ds = COUNTS["py4j"] - before["py4j"], COUNTS["datasets"] - before["datasets"]
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return (t1 - t0) * 1e3, (t2 - t0) * 1e3, rt, ds, jobs
 
 
 def main() -> None:
@@ -76,16 +87,17 @@ def main() -> None:
         # PySpark's DataFrame.__new__ runs __init__, then Python runs it again
         _count(DataFrame, "__init__", "datasets", lambda df, *a: "_jdf" in vars(df))
         DataFrameWriter.parquet = _stop_at_write
+        collect = lambda df: df.collect()  # noqa: E731
         ops = {
-            "query_range": lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}),
-            "query_points": lambda: db.begin().query_points(keys),
-            "commit": commit,
+            "query_range": (lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}), collect),
+            "query_points": (lambda: db.begin().query_points(keys), collect),
+            "commit": (commit, lambda _: None),
         }
-        print(f"{'op':<14}{'build_ms':>10}{'py4j':>8}{'datasets':>10}")
-        for name, fn in ops.items():
-            runs = [_build(fn) for _ in range(repeat + 1)][1:]  # the first warms up
-            ms, rt, ds = (statistics.median(r[i] for r in runs) for i in range(3))
-            print(f"{name:<14}{ms:>10.1f}{rt:>8.0f}{ds:>10.0f}")
+        print(f"{'op':<14}{'build_ms':>10}{'total_ms':>10}{'py4j':>8}{'datasets':>10}{'jobs':>6}")
+        for name, (build, finish) in ops.items():
+            runs = [_run(spark, build, finish) for _ in range(repeat + 1)][1:]  # the first warms up
+            b, t, rt, ds, jobs = (statistics.median(r[i] for r in runs) for i in range(5))
+            print(f"{name:<14}{b:>10.1f}{t:>10.1f}{rt:>8.0f}{ds:>10.0f}{jobs:>6.0f}")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
