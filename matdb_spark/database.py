@@ -19,11 +19,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from matdb_spark import manifest
-from matdb_spark.schema import Schema
+from matdb_spark import manifest, schema as _schema
+from matdb_spark.schema import SCHEMA_FILENAME, Schema
+from matdb_spark.stats import _hull
 from matdb_spark.transaction import Transaction
-
-SCHEMA_FILENAME = "schema.json"  # reference: storage.rs:21
 
 
 def check_feed_columns(schema: Schema) -> None:
@@ -108,13 +107,6 @@ class Database:
         self.next_txn_id = txn_id + 1
         return txn_id
 
-    def note_committed(self, txn_id: int) -> None:
-        """Post-publish hook: drop the id reservation (the manifest now
-        holds the id) and keep the horizon past externally-allocated
-        ids from concurrent writers."""
-        manifest.release_txn_reservation(self.path, txn_id)
-        self.next_txn_id = max(self.next_txn_id, txn_id + 1)
-
     # ---- automatic compaction ---------------------------------------
     def enable_auto_compact(
         self,
@@ -179,31 +171,10 @@ class Database:
         # re-ingest an already-landed batch. Folds are idempotent
         # opportunities: a skipped one is absorbed by the next tier.
         try:
-            did = False
-            span, size = ac["every"], ac["every"]
-            while ac["n"] % span == 0:
-                did = (
-                    self.compact(
-                        max_txns=size,
-                        fold="newest",
-                        cluster=ac["cluster"],
-                        resolution=ac["resolution"],
-                    )
-                    is not None
-                ) or did
-                span *= ac["major"]
-                size = ac["major"]
-            if did and ac["vacuum"]:
-                # NOT min_age_seconds=0: a vacuum snapshot taken before
-                # a concurrent compaction stamps its reservation intent
-                # (but after this fold published) could otherwise
-                # reclaim window files the in-flight rewrite is still
-                # scanning — the intent-hold only protects intents
-                # visible at vacuum's read time. The recovery grace
-                # bounds any rewrite's stamp-to-publish window, so
-                # auto-vacuum retains that long; immediate reclamation
-                # stays available via an explicit user vacuum().
-                self.vacuum(min_age_seconds=manifest.DEFAULT_RECOVERY_GRACE)
+            self._fold_levels(
+                ac["n"], ac["every"], ac["major"], ac["vacuum"],
+                cluster=ac["cluster"], resolution=ac["resolution"],
+            )
         except Exception:
             import warnings
 
@@ -212,6 +183,34 @@ class Database:
                 "commit; the fold will be retried by a later tier",
                 stacklevel=3,
             )
+
+    def _fold_levels(self, n: int, every: int, major: int, vacuum: bool, **compact_kw) -> None:
+        """Leveled folding, LSM-style, after the ``n``-th (>= 1) commit
+        of a schedule — the one rule of auto-compaction (``_after_commit``)
+        and the streaming sink (streaming/ingest.py): tier 1 folds each
+        ``every``-commit window; tier k (span every·major^(k-1)) folds
+        the ``major`` tier-(k-1) rollups that accumulated since its last
+        firing. All folds are newest-contiguous, so a refused fold's raw
+        txns are absorbed by the next level up; each row is rewritten
+        O(log commits) times and the visible txn count stays
+        O(every + major·log commits).
+
+        ``vacuum`` then reclaims folded data older than the recovery
+        grace, NOT at min_age_seconds=0: a vacuum snapshot taken before
+        a concurrent compaction stamps its reservation intent (but after
+        this fold published) could otherwise reclaim window files the
+        in-flight rewrite is still scanning — the intent-hold only
+        protects intents visible at vacuum's read time, and the grace
+        bounds any rewrite's stamp-to-publish window. Immediate
+        reclamation stays available via an explicit user vacuum()."""
+        did = False
+        span, size = every, every
+        while n % span == 0:
+            did = (self.compact(max_txns=size, fold="newest", **compact_kw) is not None) or did
+            span *= major
+            size = major
+        if did and vacuum:
+            self.vacuum(min_age_seconds=manifest.DEFAULT_RECOVERY_GRACE)
 
     # ---- schema evolution ------------------------------------------
     def add_value_column(self, name: str, type: str = "long") -> None:
@@ -226,18 +225,14 @@ class Database:
         New transactions must supply the column (``add_dataframe``
         selects the full schema); a compaction after evolution rewrites
         everything to the current schema.
-        """
-        from matdb_spark.schema import Schema as _S, Value as _V
 
-        if name in self.schema.column_names:
-            raise ValueError(f"column {name!r} already exists")
-        new = _S(
-            dimensions=list(self.schema.dimensions),
-            values=list(self.schema.values) + [_V(name, type)],
-            epoch=self.schema.epoch + 1,
-        )
-        new.save(os.path.join(self.path, SCHEMA_FILENAME))
-        self.schema = new
+        The column is added to ``schema.json`` as it is on disk, re-read
+        under the schema lock (``schema.evolve``, which the DSv2 sinks'
+        ``evolve`` writes commit through too), not to this handle's
+        copy: a stale handle keeps every column other handles and
+        writers added. A column the file already has is an error.
+        """
+        self.schema = _schema.evolve(self.path, [(name, type)], exist_ok=False)
 
     # ---- maintenance ------------------------------------------------
     def compact(
@@ -487,8 +482,8 @@ class Database:
 
     def _stats_bounds(self, snap: "manifest.Snapshot") -> dict[str, tuple] | None:
         """Merge the manifest stats of ``snap``'s txns into {dim: (lo,
-        hi)} covering every dimension, or None if any txn/dim lacks
-        stats."""
+        hi)} covering every dimension, in Spark's order, or None if any
+        txn/dim lacks stats."""
         bounds: dict[str, tuple] = {}
         for t in snap.txns:
             stats = snap.stats(t) or {}
@@ -497,8 +492,8 @@ class Database:
                 rng = dims.get(d.name)
                 if rng is None:
                     return None
-                lo, hi = bounds.get(d.name, (rng[0], rng[1]))
-                bounds[d.name] = (min(lo, rng[0]), max(hi, rng[1]))
+                # Spark's order: NaN above every double (stats._hull)
+                bounds[d.name] = tuple(_hull(bounds.get(d.name, rng), rng))
         return bounds or None
 
     def vacuum(self, min_age_seconds: float = 0.0) -> list[int]:

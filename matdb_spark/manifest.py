@@ -35,6 +35,9 @@ import os
 import re
 import shutil
 import time
+import warnings
+
+from matdb_spark import schema as _schema, stats
 
 _COMMITS_DIR = "_commits"
 _DATA_DIR = "data"
@@ -48,13 +51,17 @@ _CHECKPOINT_RE = re.compile(r"^_checkpoint\.(\d{8,})(?:\.(\d+))?\.json$")
 TXN_DIR_RE = re.compile(r"^txn=(\d+)$")
 
 #: Auto-fold the committed manifest set into a checkpoint file every
-#: this-many commits (Transaction.commit / the DSv2 writers call
+#: this-many commits (``commit``, every writer's commit routine, calls
 #: ``maybe_checkpoint`` after publish). Snapshot resolution then costs
 #: ONE checkpoint read plus one JSON per post-checkpoint commit instead
 #: of one JSON per commit ever made — O(1)-ish planning for a
 #: long-lived store with streaming commit rates (the Delta-checkpoint
 #: idea applied to this manifest log).
 DEFAULT_CHECKPOINT_INTERVAL = 64
+
+#: manifests stay small: a txn with more data files than this records
+#: no file list and its scans fall back to filesystem listing
+_MANIFEST_FILES_CAP = 20_000
 
 #: Newest checkpoint (top_txn_id, generation) seen per store path,
 #: refreshed by every ``_commits`` listing (committed_txn_ids) — so the
@@ -74,7 +81,7 @@ def _check_incarnation(db_path: str) -> None:
     worker planning DSv2 reads would otherwise serve a re-created
     store's txn ids from the old store's manifests."""
     try:
-        st = os.stat(os.path.join(db_path, "schema.json"))
+        st = os.stat(os.path.join(db_path, _schema.SCHEMA_FILENAME))
         inc = (st.st_ino, st.st_mtime_ns)
     except OSError:
         inc = None
@@ -602,6 +609,55 @@ def publish(
         os.fsync(f.fileno())
     os.replace(tmp, path)
     _fsync_dir(os.path.dirname(path))
+
+
+def commit(
+    db_path: str,
+    txn_id: int,
+    schema,
+    files: list[str],
+    segments: int,
+    replaces: list[int] | None = None,
+    extra: dict | None = None,
+    new_values=(),
+) -> None:
+    """Commit txn ``txn_id`` whose data files are ``files`` (relative
+    to its txn dir): the one commit routine of every writer — the
+    library's ``Transaction.commit`` (plain, streaming, compaction and
+    DDL commits) and both DSv2 sinks — as the reference has one
+    (transaction.rs:60-65, :121-136). In order, it:
+
+    1. reads the txn stats from the footers of ``files``
+       (``stats.footer_stats``, for the ``stats._STAT_TYPES`` dims of
+       ``schema``, less any dim a footer has no min/max for);
+    2. records ``files`` in the manifest, unless there are more than
+       ``_MANIFEST_FILES_CAP`` of them (scans then list the txn dir);
+    3. adds the value columns ``new_values`` to ``schema.json`` under
+       the schema lock (``schema.evolve``) — the schema change commits
+       with the txn; a crash between the two leaves an additive,
+       all-null column, harmless and retry-safe;
+    4. publishes the manifest, releases the txn's reservation and
+       folds a checkpoint. A fold failure only warns: the txn is
+       committed by then, and failing would make a caller roll back
+       (or Spark abort) a committed txn.
+
+    ``extra`` is recorded verbatim (``publish``)."""
+    tdir = txn_data_dir(db_path, txn_id)
+    dims = [d.name for d in schema.dimensions if d.type in stats._STAT_TYPES]
+    payload = dict(extra or {})
+    txn_stats = stats.footer_stats([os.path.join(tdir, f) for f in files], dims)
+    if txn_stats is not None:
+        payload["stats"] = txn_stats
+    if len(files) <= _MANIFEST_FILES_CAP:
+        payload["files"] = sorted(files)
+    if new_values:
+        _schema.evolve(db_path, new_values)
+    publish(db_path, txn_id, segments, replaces=replaces, extra=payload)
+    release_txn_reservation(db_path, txn_id)
+    try:
+        maybe_checkpoint(db_path)
+    except Exception as e:  # pragma: no cover - env-dependent
+        warnings.warn(f"post-commit checkpoint fold failed: {e}")
 
 
 def _fsync_dir(path: str) -> None:

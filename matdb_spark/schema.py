@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import json
 import os
+import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
@@ -30,6 +32,8 @@ from pyspark.sql import types as T
 TXN_COL = "__txn"
 SEQ_COL = "__seq"
 CHUNK_PREFIX = "__chunk_"
+
+SCHEMA_FILENAME = "schema.json"  # reference: storage.rs:21
 
 _TYPE_MAP: dict[str, T.DataType] = {
     "long": T.LongType(),
@@ -212,3 +216,73 @@ class Schema:
     def load(cls, path: str) -> "Schema":
         with open(path) as f:
             return cls.from_json(f.read())
+
+
+@contextmanager
+def _locked(path: str):
+    """Hold an exclusive O_CREAT|O_EXCL claim on ``path`` + ".lock" (the
+    txn-reservation discipline, manifest.reserve_txn_id). A holder that
+    crashed leaves a stale lock, stolen once 60 s old (evolution itself
+    is a sub-second critical section); a waiter gives up after 90 s,
+    by which time any crashed holder's lock has been stolen."""
+    lock = path + ".lock"
+    deadline = time.monotonic() + 90.0
+    while True:
+        try:
+            os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            break
+        except FileExistsError:
+            try:
+                if time.time() - os.path.getmtime(lock) > 60.0:
+                    os.unlink(lock)
+                    continue
+            except OSError:
+                continue  # lock vanished between the claim and the stat
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"schema evolution lock busy for 90s: {lock}")
+            time.sleep(0.05)
+    try:
+        yield
+    finally:
+        try:
+            os.unlink(lock)
+        except FileNotFoundError:
+            pass
+
+
+def with_values(sch: Schema, new, exist_ok: bool = True) -> Schema:
+    """``sch`` with the value columns ``new`` ((name, type) pairs)
+    appended, one epoch per added column. A column ``sch`` already has
+    is an error unless ``exist_ok``; then the same type is a no-op and
+    a differing type a conflict."""
+    have = {c.name: c.type for c in list(sch.dimensions) + list(sch.values)}
+    values = list(sch.values)
+    for name, typ in new:
+        cur = have.get(name)
+        if cur is None:
+            values.append(Value(name, typ))
+            have[name] = typ
+        elif not exist_ok:
+            raise ValueError(f"column {name!r} already exists")
+        elif cur != typ:
+            raise ValueError(
+                f"concurrent schema evolution conflict: column "
+                f"{name!r} exists as {cur}, writer wants {typ}"
+            )
+    added = len(values) - len(sch.values)
+    return Schema(list(sch.dimensions), values, sch.epoch + added) if added else sch
+
+
+def evolve(db_path: str, new, exist_ok: bool = True) -> Schema:
+    """Add the value columns ``new`` to the store's ``schema.json`` and
+    return the schema now on disk: a read-modify-write under the
+    schema lock, so two handles or writers evolving one store
+    serialize and neither loses the other's column, however stale the
+    schema each of them holds (``with_values`` for ``exist_ok``)."""
+    path = os.path.join(db_path, SCHEMA_FILENAME)
+    with _locked(path):
+        sch = Schema.load(path)
+        out = with_values(sch, new, exist_ok)
+        if out is not sch:
+            out.save(path)
+    return out

@@ -48,10 +48,12 @@ to the staging schema, routed by ``scan._arrow_chunks`` (the library
 writer's floor arithmetic), split by chunk with one sort, key-sorted
 per file. pyarrow leaves NaN out of a float column's min/max, and
 stats that hide NaN would prune NaN keys away, so a file writes no
-min/max for a float column holding NaN, and the manifest keeps none
-for float dims. Both commit through ``_publish``: the manifest lists
-exactly the files the successful tasks reported, with txn stats read
-from their footers for integral dims only.
+min/max for a float column holding NaN. Both commit through
+``manifest.commit``, the library's own commit routine: the manifest
+lists exactly the files the successful tasks reported, with txn stats
+read from their footers by the library's rule (a txn holding a NaN
+float key thus gets no stats for that dim), and ``evolve`` columns join ``schema.json``
+under the schema lock just before the publish.
 
 Semantics and bounds, stated plainly:
 - Committed state only (a snapshot of the store as of the horizon) —
@@ -84,7 +86,6 @@ Spark user expects to reach a table.
 from __future__ import annotations
 
 import os
-import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -105,8 +106,8 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from matdb_spark import manifest
-from matdb_spark.schema import _TYPE_MAP, SEQ_COL, TXN_COL, Schema
-from matdb_spark.stats import footer_stats, spark_order
+from matdb_spark.schema import _TYPE_MAP, SCHEMA_FILENAME, SEQ_COL, TXN_COL, Schema, with_values
+from matdb_spark.stats import spark_order
 from matdb_spark.scan import (
     _chunk_ranges,
     _has_value,
@@ -116,7 +117,6 @@ from matdb_spark.scan import (
     resolve_arrow,
 )
 
-SCHEMA_FILENAME = "schema.json"
 
 def _truthy(v) -> bool:
     return str(v).strip().lower() in ("true", "1", "yes")
@@ -136,10 +136,10 @@ def _check_write_schema(db_path: str, schema, evolve: bool) -> list:
     default: DataFrame columns must equal the store's. With
     ``.option("evolve", "true")`` (the mergeSchema idiom), EXTRA
     DataFrame columns are returned as pending ``(name, matdb_type)``
-    additions; nothing is persisted here. The writer applies them in
-    its COMMIT path (``_apply_pending_evolution``) atomically with the
-    transaction, so an aborted write never permanently evolves the
-    store — the Delta mergeSchema contract (r7 advice, medium).
+    additions; nothing is persisted here. The writer's commit
+    (``manifest.commit``'s ``new_values``) applies them under the
+    schema lock with the transaction, so an aborted write never
+    permanently evolves the store — the Delta mergeSchema contract.
     Missing store columns are an error either way — a write may not
     silently drop data the store's schema promises."""
     sch = Schema.load(os.path.join(db_path, SCHEMA_FILENAME))
@@ -167,93 +167,6 @@ def _check_write_schema(db_path: str, schema, evolve: bool) -> list:
             else ""
         )
     )
-
-
-def _schema_with_pending(sch: Schema, pending: list) -> Schema:
-    """In-memory view of the store schema with the pending evolved
-    columns appended — what write tasks lay files down with BEFORE the
-    evolution is durably committed (extra parquet columns are invisible
-    to scans until schema.json grows them, so staged files are safe
-    whether the txn commits or aborts)."""
-    if not pending:
-        return sch
-    from matdb_spark.schema import Schema as _S, Value as _V
-
-    names = set(sch.column_names)
-    vals = list(sch.values) + [
-        _V(n, t) for n, t in pending if n not in names
-    ]
-    return _S(dimensions=list(sch.dimensions), values=vals, epoch=sch.epoch)
-
-
-def _apply_pending_evolution(db_path: str, pending: list) -> None:
-    """Persist additive value-column evolution under an exclusive
-    O_CREAT|O_EXCL claim on ``schema.json.lock`` (the txn-reservation
-    discipline, manifest.reserve_txn_id), RE-VALIDATING against the
-    persisted schema inside the critical section: two concurrent
-    evolving writers serialize their read-modify-writes, so neither
-    can lose the other's column. A column another writer already added
-    with the SAME type is an idempotent no-op; a differing type is a
-    loud conflict. Called from the writer's commit path, immediately
-    before manifest.publish — the schema change commits with the
-    transaction (crash between the two leaves an additive, all-null
-    column: harmless, retry-safe)."""
-    if not pending:
-        return
-    import time as _time
-
-    from matdb_spark.schema import Schema as _S, Value as _V
-
-    spath = os.path.join(db_path, SCHEMA_FILENAME)
-    lock = spath + ".lock"
-    deadline = _time.monotonic() + 30.0
-    while True:
-        try:
-            os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-            break
-        except FileExistsError:
-            try:
-                # a holder that crashed mid-evolution leaves a stale
-                # lock; steal it after the same staleness reasoning as
-                # recover()'s reservation sweep (evolution itself is a
-                # sub-second critical section)
-                if _time.time() - os.path.getmtime(lock) > 60.0:
-                    os.unlink(lock)
-                    continue
-            except OSError:
-                continue  # lock vanished between listing and stat
-            if _time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"schema evolution lock busy for 30s: {lock}"
-                )
-            _time.sleep(0.05)
-    try:
-        sch = Schema.load(spath)  # re-read under the lock
-        existing = {
-            c.name: c.type for c in list(sch.dimensions) + list(sch.values)
-        }
-        vals = list(sch.values)
-        epoch = sch.epoch
-        for name, typ in pending:
-            cur = existing.get(name)
-            if cur is not None:
-                if cur != typ:
-                    raise ValueError(
-                        f"concurrent schema evolution conflict: column "
-                        f"{name!r} exists as {cur}, writer wants {typ}"
-                    )
-                continue  # already added by a concurrent writer
-            vals.append(_V(name, typ))
-            epoch += 1
-        if epoch != sch.epoch:
-            _S(
-                dimensions=list(sch.dimensions), values=vals, epoch=epoch
-            ).save(spath)
-    finally:
-        try:
-            os.unlink(lock)
-        except FileNotFoundError:
-            pass
 
 
 @dataclass
@@ -570,32 +483,6 @@ def _write_segment_files(batches, sch: Schema, base_dir: str) -> list[str]:
     return files
 
 
-def _publish(
-    db_path: str, sch: Schema, txn: int, files: list[str], pending: list, replaces=None, **extra
-) -> None:
-    """A sink's commit of the files its successful tasks reported, as
-    txn ``txn``: the manifest lists exactly those files, with stats
-    from their footers — integral dims only, because pyarrow leaves
-    NaN out of a float column's min/max and such stats would prune NaN
-    keys away — then the pending schema evolution, the publish, the
-    reservation release and a checkpoint fold. A fold failure only
-    warns: it comes after the publish, and failing the commit then
-    would make Spark abort a committed txn."""
-    payload: dict = {"files": sorted(files), **extra}
-    tdir = manifest.txn_data_dir(db_path, txn)
-    integral = [d.name for d in sch.dimensions if d.type in ("long", "int")]
-    stats = footer_stats([os.path.join(tdir, f) for f in files], integral) if files else None
-    if stats is not None:
-        payload["stats"] = stats
-    _apply_pending_evolution(db_path, pending)
-    manifest.publish(db_path, txn, segment_count=1, replaces=replaces, extra=payload)
-    manifest.release_txn_reservation(db_path, txn)
-    try:
-        manifest.maybe_checkpoint(db_path)
-    except Exception as e:  # pragma: no cover - env-dependent
-        warnings.warn(f"post-commit checkpoint fold failed: {e}")
-
-
 class MatdbBatchWriter(DataSourceArrowWriter):
     """``df.write.format("matdb").mode("append"|"overwrite").save(db)``
     — one atomic MVCC transaction per save.
@@ -613,7 +500,7 @@ class MatdbBatchWriter(DataSourceArrowWriter):
     a speculative or retried task's orphan files are never listed,
     hence never visible (the manifest-resolved read path ignores them;
     a later compaction's vacuum removes the directory wholesale) — and
-    whose stats come from those files' footers (``_publish``).
+    whose stats come from those files' footers (``manifest.commit``).
     ``abort`` discards the staged directory and the reservation.
 
     ``mode("overwrite")`` publishes with ``replaces`` = every txn
@@ -631,12 +518,12 @@ class MatdbBatchWriter(DataSourceArrowWriter):
     def __init__(self, db_path: str, overwrite: bool, pending_evolution: list | None = None):
         self.db_path = db_path
         # pending evolved columns are part of the write's schema view
-        # so tasks lay files down with them; schema.json grows them
+        # so tasks lay files down with them (extra parquet columns stay
+        # invisible until schema.json has them); schema.json grows them
         # only in commit() — an aborted write evolves nothing
         self.pending_evolution = pending_evolution or []
-        self.schema_obj = _schema_with_pending(
-            Schema.load(os.path.join(db_path, SCHEMA_FILENAME)),
-            self.pending_evolution,
+        self.schema_obj = with_values(
+            Schema.load(os.path.join(db_path, SCHEMA_FILENAME)), self.pending_evolution
         )
         self.txn_id = manifest.reserve_txn_id(db_path, start=1)
         self.replaces = manifest.committed_txn_ids(db_path) if overwrite else None
@@ -647,8 +534,9 @@ class MatdbBatchWriter(DataSourceArrowWriter):
 
     def commit(self, messages):
         files = [f for m in messages for f in m.files]
-        _publish(
-            self.db_path, self.schema_obj, self.txn_id, files, self.pending_evolution, replaces=self.replaces
+        manifest.commit(
+            self.db_path, self.txn_id, self.schema_obj, files, 1,
+            replaces=self.replaces, new_values=self.pending_evolution,
         )
 
     def abort(self, messages):
@@ -677,9 +565,9 @@ class MatdbStreamWriter(DataSourceStreamArrowWriter):
     copies, still safe — visibility comes only from the manifest), and
     publishes stamped with ``(stream_source, batch_id)``. A replayed
     batch (crash between manifest publish and checkpoint advance) is
-    recognized exactly as the library sink does
-    (manifest.max_committed_batch_id — stamps survive compaction via
-    the carried ``stream_batch_ids``) and commits nothing. Crash
+    recognized by the library sink's own ``BatchReplayGuard``
+    (streaming/ingest.py — stamps survive compaction via the carried
+    ``stream_batch_ids``) and commits nothing. Crash
     debris in the staging area is invisible to every reader and swept
     by ``recover()`` once stale.
 
@@ -691,14 +579,15 @@ class MatdbStreamWriter(DataSourceStreamArrowWriter):
     protocol."""
 
     def __init__(self, db_path: str, source: str, pending_evolution: list | None = None):
+        from matdb_spark.streaming.ingest import BatchReplayGuard
+
         self.db_path = db_path
         self.pending_evolution = pending_evolution or []
-        self.schema_obj = _schema_with_pending(
-            Schema.load(os.path.join(db_path, SCHEMA_FILENAME)),
-            self.pending_evolution,
+        self.schema_obj = with_values(
+            Schema.load(os.path.join(db_path, SCHEMA_FILENAME)), self.pending_evolution
         )
         self.source = source
-        self._last_committed: int | None = None
+        self._guard = BatchReplayGuard(db_path, source, "matdb stream sink")
 
     def write(self, iterator):
         import uuid
@@ -714,10 +603,7 @@ class MatdbStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId):
         import shutil as _sh
 
-        if self._last_committed is None:
-            prev = manifest.max_committed_batch_id(self.db_path, self.source)
-            self._last_committed = -1 if prev is None else prev
-        if int(batchId) <= self._last_committed:
+        if self._guard.already_committed(int(batchId)):
             for root in self._staging_roots(messages):
                 _sh.rmtree(root, ignore_errors=True)
             return  # replayed batch: already committed, a no-op
@@ -733,12 +619,13 @@ class MatdbStreamWriter(DataSourceStreamArrowWriter):
         # evolution commits with the first non-replayed batch (a crash
         # between it and publish leaves an additive all-null column;
         # the replayed batch re-runs it idempotently)
-        _publish(
-            self.db_path, self.schema_obj, txn, rels, self.pending_evolution,
-            stream_source=self.source, batch_id=int(batchId),
+        manifest.commit(
+            self.db_path, txn, self.schema_obj, rels, 1,
+            extra={"stream_source": self.source, "batch_id": int(batchId)},
+            new_values=self.pending_evolution,
         )
         self.pending_evolution = []
-        self._last_committed = int(batchId)
+        self._guard.record(int(batchId))
         for root in self._staging_roots(messages):
             _sh.rmtree(root, ignore_errors=True)
 

@@ -34,6 +34,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from matdb_spark import manifest
 from matdb_spark.database import Database
 from matdb_spark.schema import Dimension, Schema, Value
 from matdb_spark.functions.encoders import (
@@ -235,15 +236,13 @@ def load(spark: SparkSession, db_path: str, paths: list[str]) -> int:
     # recovery grace elapses (same hazard database.compact guards)
     with db.begin() as txn:
         txn.add_dataframe(facts)
-        # row count from the written segment's parquet footers —
-        # counting the *input* DataFrame would re-run the whole
-        # decompress + parse + dictionary-join pipeline a second time
-        # (gzip TSV is non-splittable; the re-read doubled ingest
-        # wall-clock)
-        stats = txn._txn_stats
-        n = stats["rows"] if stats else facts.count()
         txn.commit()
-    return n
+    # row count from the published manifest's footer stats — counting
+    # the *input* DataFrame would re-run the whole decompress + parse +
+    # dictionary-join pipeline a second time (gzip TSV is
+    # non-splittable; the re-read doubled ingest wall-clock)
+    stats = manifest.read_manifest(db.path, txn.txn_id).get("stats")
+    return stats["rows"] if stats else facts.count()
 
 
 def main(argv: list[str]) -> int:

@@ -10,17 +10,21 @@ level — but only after the reader has LISTED and OPENED the files.
 At 100 TB the listing itself is the cost: a snapshot may hold
 thousands of transactions, each with many chunk directories. So the
 commit manifest additionally carries per-transaction min/max bounds
-per dimension, aggregated driver-side from the Parquet FOOTERS of the
-just-written segment (no data scan — footer metadata only, O(files)
-small reads). A key-range scan, or a point get key by key, then drops
+per dimension, read on the driver at commit (``manifest.commit``, the
+one commit routine of every writer) from the Parquet FOOTERS of the
+files the txn lists (no data scan — footer metadata only, one small
+read per file). A key-range scan, or a point get key by key, then drops
 entire transactions at *planning* time, before any file listing or
 Spark job: three pruning tiers — manifest stats (txn level) → Hive
 partition pruning (chunk level) → Parquet row-group stats (page
 level).
 
-Only integral/float dimension stats are recorded (the types chunking
-supports plus float); anything else is left absent, and absent stats
-always mean "cannot prune" — correctness never depends on stats.
+Only integral/float dimension stats are recorded (``_STAT_TYPES``);
+anything else is left absent, and absent stats always mean "cannot
+prune" — correctness never depends on stats. A footer without min/max
+for a tracked dim leaves that dim out of the txn's stats: the format
+sinks write none for a float column holding NaN, whose min/max would
+hide the NaN.
 """
 
 from __future__ import annotations
@@ -32,48 +36,39 @@ import os
 _STAT_TYPES = {"long", "int", "double", "float"}
 
 
-def _iter_parquet_files(seg_dir: str):
-    for root, _dirs, files in os.walk(seg_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                yield os.path.join(root, f)
+def collect_segment_info(seg_dir: str) -> list[str]:
+    """The parquet files of one written segment: '/'-normalized paths
+    relative to ``seg_dir``, from one filesystem walk. The commit
+    manifest records them (``manifest.commit``), so scans resolve their
+    file sets WITHOUT listing jobs (the Delta/Iceberg design: at scale,
+    listing thousands of chunk directories costs more than the pruned
+    read), and the commit reads the txn stats from their footers.
 
-
-def collect_segment_info(seg_dir: str, schema) -> tuple[dict | None, list[str]]:
-    """ONE filesystem walk producing both per-segment artifacts:
-
-    - stats: per-dimension [min, max] + row count from parquet footers
-      (None if pyarrow is unavailable or any footer lacks stats for a
-      tracked dim — absent stats only loosen pruning, never correctness);
-    - files: '/'-normalized paths relative to ``seg_dir``, recorded in
-      the commit manifest so scans resolve their file sets WITHOUT
-      listing jobs (the Delta/Iceberg design: at scale, listing
-      thousands of chunk directories costs more than the pruned read).
-
-    A stats failure does NOT abort the walk — the file list keeps
-    accumulating (files affect correctness-relevant file resolution;
-    stats are advisory). CAVEAT for eventually-consistent stores: this
-    list is a post-write listing of the local filesystem; a gateway
-    that can omit a just-written file from a listing would silently
-    drop rows from every scan of this txn. On such deployments record
-    file sets from the writer's commit protocol instead (or disable
-    the list and fall back to listing-based scans)."""
-    n = len(seg_dir.rstrip(os.sep)) + 1
-    paths = list(_iter_parquet_files(seg_dir))
-    stats = footer_stats(paths, [d.name for d in schema.dimensions if d.type in _STAT_TYPES])
-    return stats, sorted(p[n:].replace(os.sep, "/") for p in paths)
+    CAVEAT for eventually-consistent stores: this list is a post-write
+    listing of the local filesystem; a gateway that can omit a
+    just-written file from a listing would silently drop rows from
+    every scan of this txn. On such deployments record file sets from
+    the writer's commit protocol instead, as the DSv2 sinks do (their
+    tasks report the files they wrote)."""
+    return sorted(
+        os.path.relpath(os.path.join(root, f), seg_dir).replace(os.sep, "/")
+        for root, _dirs, files in os.walk(seg_dir)
+        for f in files
+        if f.endswith(".parquet")
+    )
 
 
 def footer_stats(paths: list[str], dims: list[str]) -> dict | None:
     """Row count and per-dim [min, max] of the parquet files ``paths``
-    from their footers alone, or None when pyarrow is unavailable or
-    any row group lacks min/max for one of ``dims`` (absent stats only
-    loosen pruning, never correctness)."""
+    from their footers alone, or None when pyarrow is unavailable or a
+    footer is unreadable. A dim that some row group has no min/max for
+    is left out (absent stats only loosen pruning, never correctness)."""
     try:
         import pyarrow.parquet as pq
     except Exception:
         return None
     out: dict[str, list] = {}
+    lost: set[str] = set()
     rows = 0
     try:
         for path in paths:
@@ -86,28 +81,17 @@ def footer_stats(paths: list[str], dims: list[str]) -> dict | None:
                     # dimension columns are always written into the
                     # data files (segments partitionBy only the derived
                     # __chunk_* columns) — a missing dim means an
-                    # unexpected layout: disable pruning rather than
-                    # emit wrong bounds
+                    # unexpected layout: disable its pruning rather
+                    # than emit wrong bounds
                     st = g.column(names[d]).statistics if d in names else None
                     if st is None or not st.has_min_max:
-                        return None
+                        lost.add(d)
+                        continue
                     cur = out.get(d)
                     out[d] = [st.min, st.max] if cur is None else _hull(cur, [st.min, st.max])
     except Exception:
         return None
-    return {"rows": rows, "dims": out}
-
-
-def merge_stats(a: dict | None, b: dict | None) -> dict | None:
-    """Combine per-segment stats into per-transaction stats. None is
-    infectious: one segment without stats disables txn-level pruning
-    (absent always means 'cannot prune')."""
-    if a is None or b is None:
-        return None
-    dims: dict[str, list] = {}
-    for d in set(a["dims"]) & set(b["dims"]):
-        dims[d] = _hull(a["dims"][d], b["dims"][d])
-    return {"rows": a["rows"] + b["rows"], "dims": dims}
+    return {"rows": rows, "dims": {d: r for d, r in out.items() if d not in lost}}
 
 
 def spark_order(v):

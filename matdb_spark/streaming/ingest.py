@@ -105,13 +105,13 @@ def stream_into_database(
     and so on — each row is rewritten O(log_M batches) times total and
     the visible txn count stays O(N + M·log_M batches) under unbounded
     standing ingest. Refused folds (concurrent-writer conflicts) leave
-    raw txns that the next level's contiguous interval absorbs.
-    Batch-id replay stamps are
-    carried through folds (manifest ``stream_batch_ids``), so
-    exactly-once suppression survives compaction + vacuum.
-    ``vacuum_superseded`` additionally reclaims folded data
-    immediately — note this forfeits time travel into the folded
-    window AND permanently fails any change-feed consumer
+    raw txns that the next level's contiguous interval absorbs (the
+    schedule is ``Database._fold_levels``, auto-compaction's too).
+    Batch-id replay stamps are carried through folds (manifest
+    ``stream_batch_ids``), so exactly-once suppression survives
+    compaction + vacuum. ``vacuum_superseded`` additionally reclaims
+    folded data once it is older than the recovery grace — note this
+    forfeits time travel into the folded window AND permanently fails any change-feed consumer
     (``changes``/``follow_changes``) whose cursor still lags inside
     it; leave it False when CDC consumers tail the store.
     """
@@ -139,30 +139,12 @@ def stream_into_database(
             txn.commit(extra={"stream_source": source, "batch_id": int(batch_id)})
         guard.record(batch_id)
         if compact_every is not None:
-            # Leveled folding, LSM-style: tier 1 folds each N-batch
-            # window; tier k (span N·M^(k-1)) folds the M tier-(k-1)
-            # rollups that accumulated since its last firing. All folds
-            # are newest-contiguous, so a refused fold's raw txns are
-            # absorbed by the next level up. Amortized: each row is
-            # rewritten once per level = O(log_M batches) times total;
-            # visible txn count stays O(N + M·log_M batches).
             # Scheduling keys off the CHECKPOINT-SCOPED batch id, not a
             # process-local counter, so restarts keep the tier
             # boundaries aligned; txns stranded by a crash mid-window
             # sit below later rollups and are absorbed the same way
             # refused folds are.
-            did = False
-            n_batches = int(batch_id) + 1
-            span, size = compact_every, compact_every
-            while n_batches % span == 0:
-                did = (db.compact(max_txns=size, fold="newest") is not None) or did
-                span *= major_every
-                size = major_every
-            if did and vacuum_superseded:
-                # grace-delayed, not immediate: protects a concurrent
-                # compaction that published before stamping its next
-                # intent (see Database._after_commit for the race)
-                db.vacuum(min_age_seconds=manifest.DEFAULT_RECOVERY_GRACE)
+            db._fold_levels(int(batch_id) + 1, compact_every, major_every, vacuum_superseded)
 
     writer = (
         stream_df.writeStream.foreachBatch(_commit_batch)

@@ -19,6 +19,10 @@ Two write paths:
   task, in one Spark job, like the reference's one writer per flush
   (segment.rs:30-46).
 
+``commit`` publishes through ``manifest.commit``, the one commit
+routine the DSv2 sinks share: the manifest lists every flushed
+segment's files, with txn stats from their footers.
+
 Every row carries a write sequence (``__seq``): within a transaction
 the newest sequence wins at scan time, faithfully producing the
 in-place-overwrite upsert semantics of the reference
@@ -27,12 +31,11 @@ in-place-overwrite upsert semantics of the reference
 
 from __future__ import annotations
 
-import warnings
 from typing import TYPE_CHECKING, Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Row, functions as F
 
-from matdb_spark import manifest, scan
+from matdb_spark import manifest, scan, stats
 from matdb_spark.scan import (
     ScanSource,
     _chunked,
@@ -47,10 +50,6 @@ from matdb_spark.schema import SEQ_COL
 #: fearlessly. seq counts WRITE CALLS (add_row / add_dataframe), not
 #: rows, so 2^32 is unreachable in practice.
 _SEQ_LIMIT = 1 << 32
-
-#: manifests stay small: a txn with more data files than this records
-#: no file list and its scans fall back to filesystem listing
-_MANIFEST_FILES_CAP = 20_000
 
 if TYPE_CHECKING:
     from matdb_spark.database import Database
@@ -99,15 +98,10 @@ class Transaction:
         self._buffer: list[tuple] = []
         self._seq = 0
         self._closed = False
-        # Per-txn min/max dim bounds, merged across segments at flush
-        # time and published in the manifest (stats.py). None once any
-        # segment lacks stats (absent stats = cannot prune).
-        self._txn_stats: dict | None = None
-        self._first_segment_pending = True
-        # Relative data-file paths accumulated per segment, published
-        # in the manifest so scans skip filesystem listing. Becomes
-        # None if the list grows past the manifest-bloat cap.
-        self._txn_files: list[str] | None = []
+        # Data-file paths relative to the txn dir, listed per segment;
+        # the commit publishes them and reads the txn stats from their
+        # footers (manifest.commit).
+        self._txn_files: list[str] = []
         # Key-uniqueness tracking for the manifest's ``unique_keys``
         # stamp (scan.py dedup-free fast path): None = no writes yet;
         # True = exactly one deduplicated add_dataframe; False = any
@@ -362,25 +356,7 @@ class Transaction:
         if chunk_cols:
             writer = writer.partitionBy(*chunk_cols)
         writer.parquet(seg_dir)
-        # ONE footer walk (no data scan) produces both manifest
-        # artifacts: the txn-level stats zone map (planner prunes whole
-        # transactions before any listing) and the segment's file paths
-        # (scans resolve + chunk-prune their file sets from the
-        # manifest alone — no filesystem listing job at read time).
-        from matdb_spark.stats import collect_segment_info, merge_stats
-
-        seg_stats, seg_files = collect_segment_info(seg_dir, schema)
-        if self._first_segment_pending:
-            self._txn_stats = seg_stats
-            self._first_segment_pending = False
-        else:
-            self._txn_stats = merge_stats(self._txn_stats, seg_stats)
-        if self._txn_files is not None:
-            self._txn_files.extend(f"seg={seg}/{rel}" for rel in seg_files)
-            if len(self._txn_files) > _MANIFEST_FILES_CAP:
-                # a pathological txn (millions of files) must not bloat
-                # the manifest; scans fall back to listing for it
-                self._txn_files = None
+        self._txn_files += [f"seg={seg}/{rel}" for rel in stats.collect_segment_info(seg_dir)]
         self.segments_flushed += 1
 
     def flush(self) -> None:
@@ -544,7 +520,10 @@ class Transaction:
     def commit(
         self, replaces: list[int] | None = None, extra: dict | None = None
     ) -> None:
-        """Flush then atomically publish (reference: transaction.rs:60-65).
+        """Flush then atomically publish (reference: transaction.rs:60-65)
+        through ``manifest.commit``, the commit routine every writer
+        shares: it lists the files of every flushed segment, takes the
+        txn stats from their footers, publishes and folds a checkpoint.
 
         A transaction that never wrote commits as a no-op (no txn id is
         ever allocated — mirroring lazy id allocation). ``replaces``
@@ -554,36 +533,23 @@ class Transaction:
         self.flush()
         if self.txn_id is not None:
             payload = dict(extra or {})
-            if self._unique_keys is True and "unique_keys" not in payload:
-                payload["unique_keys"] = True
-            if self._txn_stats is not None and "stats" not in payload:
-                payload["stats"] = self._txn_stats
-            if self._txn_files is not None and "files" not in payload:
-                payload["files"] = self._txn_files
-            manifest.publish(
+            if self._unique_keys is True:
+                payload.setdefault("unique_keys", True)
+            manifest.commit(
                 self.db.path,
                 self.txn_id,
+                self.schema,
+                self._txn_files,
                 self.segments_flushed,
                 replaces=replaces,
-                extra=payload or None,
+                extra=payload,
             )
-            self.db.note_committed(self.txn_id)
+            self.db.next_txn_id = max(self.db.next_txn_id, self.txn_id + 1)
             # The txn is durably published from this point: close the
-            # handle BEFORE any post-publish housekeeping so a failure
-            # there can never route through rollback() and delete the
-            # data of a committed txn.
+            # handle BEFORE the post-commit policy hook, which may open
+            # (and commit) compaction transactions of its own, so a
+            # failure there can never route through rollback().
             self._closed = True
-            # fold the manifest log every N commits so snapshot
-            # resolution stays one-checkpoint-read flat however long
-            # the store lives (manifest.maybe_checkpoint docstring).
-            # The checkpoint is purely a read ACCELERATOR — its failure
-            # (ENOSPC, permissions) must never fail the commit.
-            try:
-                manifest.maybe_checkpoint(self.db.path)
-            except Exception as e:  # pragma: no cover - env-dependent
-                warnings.warn(f"post-commit checkpoint fold failed: {e}")
-            # policy hook AFTER this txn is fully closed: the hook may
-            # open (and commit) compaction transactions of its own
             self.db._after_commit(compaction=bool(replaces))
         self._closed = True
 

@@ -28,11 +28,8 @@ from matdb_spark import Database, Dimension, Schema, Value, manifest
 from matdb_spark.catalog import register_store
 from matdb_spark.ddl import _strip_comments
 from matdb_spark.operators import multimodal as M
-from matdb_spark.sources.dsv2 import (
-    _apply_pending_evolution,
-    _check_write_schema,
-    register_matdb_source,
-)
+from matdb_spark.schema import evolve
+from matdb_spark.sources.dsv2 import _check_write_schema, register_matdb_source
 
 SCHEMA_FILENAME = "schema.json"
 
@@ -157,17 +154,17 @@ def test_concurrent_evolution_loses_no_column(spark, tmp_db_path):
         spark.createDataFrame([Row(k=1, v=1, c2=1.5)]).schema,
         evolve=True,
     )
-    _apply_pending_evolution(tmp_db_path, p1)
-    _apply_pending_evolution(tmp_db_path, p2)
+    evolve(tmp_db_path, p1)
+    evolve(tmp_db_path, p2)
     sch = Schema.load(os.path.join(tmp_db_path, SCHEMA_FILENAME))
     assert {"c1", "c2"} <= set(sch.column_names)
     assert sch.epoch == sch0.epoch + 2
     # idempotent re-apply (stream replay): same type is a no-op
-    _apply_pending_evolution(tmp_db_path, p1)
+    evolve(tmp_db_path, p1)
     assert Schema.load(os.path.join(tmp_db_path, SCHEMA_FILENAME)).epoch == sch0.epoch + 2
     # a differing type for an existing column is a loud conflict
     with pytest.raises(ValueError, match="conflict"):
-        _apply_pending_evolution(tmp_db_path, [("c1", "double")])
+        evolve(tmp_db_path, [("c1", "double")])
     # the lock never leaks
     assert not os.path.exists(
         os.path.join(tmp_db_path, SCHEMA_FILENAME + ".lock")
@@ -180,7 +177,7 @@ def test_stale_evolution_lock_is_stolen(spark, tmp_db_path):
     with open(lock, "w"):
         pass
     os.utime(lock, (0, 0))  # ancient: the holder crashed
-    _apply_pending_evolution(tmp_db_path, [("late", "long")])
+    evolve(tmp_db_path, [("late", "long")])
     sch = Schema.load(os.path.join(tmp_db_path, SCHEMA_FILENAME))
     assert "late" in sch.column_names
     assert not os.path.exists(lock)
