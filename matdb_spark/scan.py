@@ -260,14 +260,15 @@ _SINGLE_TASK_MAX_FILES = 8
 #: pruned files' on-disk sizes (``_small_input``) and then the
 #: uncompressed sizes of their row groups from the footers it opens
 #: (``_read_files``), so a highly compressible file set cannot decode
-#: to far more on the driver; a commit uses Spark's size estimate of
-#: its generated input (``transaction._small_write``) and then writes
-#: its segment in one task without the chunk exchange.
-#: Median of 10 commits of storebench ``ingest``-shaped steps (slab +
-#: 10 % upsert), forced to one task vs the exchange, on a shared
-#: 4-vCPU host: 72k rows (3.5 MiB estimated) 506 vs 654 ms, 144k
-#: (7 MiB) 562 vs 627 ms, 288k (14 MiB) 644 vs 614 ms, 1.15M (56 MiB)
-#: 1883 vs 1600 ms — break-even between 7 and 14 MiB, above this cap
+#: to far more on the driver. A commit uses Spark's size estimate of
+#: its generated input (``transaction._small_write``): at most this
+#: many bytes, it is collected and its segment written on the driver
+#: (``write_segment_files``), so the cap also bounds what a commit
+#: holds in driver memory. Median of 14 storebench ``ingest``-shaped
+#: commits (72k rows, 3.5 MiB estimated) on a shared 4-vCPU host:
+#: 304 ms written on the driver, 684 ms through Spark's chunk
+#: exchange. Larger inputs keep Spark's parallel writer: forced to one
+#: task, 288k rows (14 MiB) already took longer than the exchange
 _SINGLE_TASK_MAX_BYTES = 4 * 1024 * 1024
 
 
@@ -839,6 +840,96 @@ def _read_files(files: list, sch: Schema, versioned: bool, where=None, max_bytes
     if versioned:
         t = t.append_column(TXN_COL, pa.chunked_array(txns, pa.int64()))
     return t
+
+
+#: Rows of one chunk the segment writer holds before writing them as
+#: one key-sorted file (a constant; no write option sets it): a
+#: writer's footprint stays O(bound × touched chunks) plus the Arrow
+#: batches those rows slice, however large its input (at 100 TB, a
+#: format write's input splits are maxPartitionBytes-sized). A chunk
+#: may thus get several files, as Spark's writer also emits.
+_FLUSH_ROWS = 262_144
+
+
+def write_segment_files(batches, sch: Schema, base_dir: str, seq: int | None = 1, seg: int = 0) -> list[str]:
+    """The one Arrow segment writer: the library's small commits write
+    with it on the driver (``Transaction._write_segment``), and the
+    ``matdb`` batch and stream sinks in each task, over the Arrow
+    batches Spark hands the task. Each batch is cast to the staging
+    schema, checked for null dims, routed by ``_arrow_chunks``
+    (``_chunked``'s floor arithmetic) and split by chunk with one sort;
+    each chunk's rows are key-sorted and written as zstd parquet under
+    ``base_dir/seg=<seg>/__chunk_*/part-<uuid>.parquet`` once
+    ``_FLUSH_ROWS`` of them are pending, and at the end. Every row gets
+    the write sequence ``seq``; with ``seq=None`` the batches carry
+    their own ``__seq`` (the library's staging projection stamps it).
+    Returns the files written, relative to ``base_dir``.
+
+    A file writes no min/max for a float column holding NaN: pyarrow
+    leaves NaN out of them, and stats that hide NaN would prune NaN
+    keys away. ``manifest.commit`` then leaves that dim out of the
+    txn's stats, where Spark's parquet writer, which the library keeps
+    for large inputs, records stats that span the NaN. The library
+    promises only that stats never prune a row they hold: a txn with a
+    NaN float dim may or may not carry stats for that dim, by writer."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out_schema = to_arrow_schema(sch.staging_schema())  # dims, values, __seq
+    floats = [f.name for f in out_schema if pa.types.is_floating(f.type)]
+    chunk_cols = sch.chunk_cols
+    pending: dict[tuple, list] = {}
+    files: list[str] = []
+
+    def flush(key: tuple) -> None:
+        t = pa.concat_tables(pending.pop(key)).sort_by([(d, "ascending") for d in sch.dim_names])
+        rel_dir = "/".join([f"seg={seg}"] + [f"{c}={v}" for c, v in zip(chunk_cols, key)])
+        os.makedirs(os.path.join(base_dir, rel_dir), exist_ok=True)
+        rel = f"{rel_dir}/part-{uuid.uuid4().hex}.parquet"
+        # Spark's parquet reader skips row groups by min/max, which
+        # pyarrow takes without NaN: a range read up to NaN would lose
+        # the file's NaN rows
+        nan = {c for c in floats if pc.any(pc.is_nan(t[c])).as_py()}
+        stats = [c for c in out_schema.names if c not in nan]
+        pq.write_table(t, os.path.join(base_dir, rel), compression="zstd", write_statistics=stats)
+        files.append(rel)
+
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        t = pa.Table.from_batches([batch]).select(sch.column_names + ([SEQ_COL] if seq is None else []))
+        for d in sch.dim_names:
+            if t[d].null_count:
+                raise ValueError(f"null dimension {d!r}: dimension values are the key and must be non-null")
+        if seq is not None:
+            t = t.append_column(SEQ_COL, pa.repeat(pa.scalar(seq, pa.int64()), n))
+        t = t.cast(out_schema)
+        starts = [0]
+        if chunk_cols:
+            for c, chunk in zip(chunk_cols, _arrow_chunks(t, sch)):
+                t = t.append_column(c, chunk)
+            t = t.sort_by([(c, "ascending") for c in chunk_cols])
+            ends = pa.repeat(False, n - 1)
+            for c in chunk_cols:
+                # plain arrays: indices_nonzero of a chunked array with
+                # no chunks (a one-row batch) crashes pyarrow 16.1
+                col = t[c].combine_chunks()
+                ends = pc.or_(ends, pc.not_equal(col[:-1], col[1:]))
+            starts += [i + 1 for i in pc.indices_nonzero(ends).to_pylist()]
+        for lo, hi in zip(starts, starts[1:] + [n]):
+            part = t.slice(lo, hi - lo)
+            key = tuple(int(part[c][0].as_py()) for c in chunk_cols)
+            pending.setdefault(key, []).append(part.select(out_schema.names))
+            if sum(map(len, pending[key])) >= _FLUSH_ROWS:
+                flush(key)
+    for key in list(pending):
+        flush(key)
+    return files
 
 
 def _overlay_table(rows: list[tuple], sch: Schema, arrow_schema, txn: int):

@@ -43,12 +43,14 @@ equals 0.0 and reads back as 0.0, and every other key type compares
 by value.
 
 Both sinks, the batch and the stream writer, write the Arrow batches
-Spark hands a task with one function (``_write_segment_files``): cast
-to the staging schema, routed by ``scan._arrow_chunks`` (the library
-writer's floor arithmetic), split by chunk with one sort, key-sorted
-per file. pyarrow leaves NaN out of a float column's min/max, and
-stats that hide NaN would prune NaN keys away, so a file writes no
-min/max for a float column holding NaN. Both commit through
+Spark hands a task with the library's one segment writer
+(``scan.write_segment_files``, which also writes small library
+commits on the driver): cast to the staging schema, routed by
+``scan._arrow_chunks`` (``scan._chunked``'s floor arithmetic), split
+by chunk with one sort, key-sorted per file. pyarrow leaves NaN out of
+a float column's min/max, and stats that hide NaN would prune NaN keys
+away, so a file writes no min/max for a float column holding NaN.
+Both commit through
 ``manifest.commit``, the library's own commit routine: the manifest
 lists exactly the files the successful tasks reported, with txn stats
 read from their footers by the library's rule (a txn holding a NaN
@@ -106,7 +108,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from matdb_spark import manifest
-from matdb_spark.schema import _TYPE_MAP, SCHEMA_FILENAME, SEQ_COL, TXN_COL, Schema, with_values
+from matdb_spark.schema import _TYPE_MAP, SCHEMA_FILENAME, TXN_COL, Schema, with_values
 from matdb_spark.stats import spark_order
 from matdb_spark.scan import (
     _chunk_ranges,
@@ -115,6 +117,7 @@ from matdb_spark.scan import (
     _select_manifest_files,
     plan_txns,
     resolve_arrow,
+    write_segment_files,
 )
 
 
@@ -404,85 +407,6 @@ class _Written(WriterCommitMessage):
     base: str | None = None
 
 
-#: Rows of one chunk a write task holds before writing them as one
-#: key-sorted file (a constant; no write option sets it): a task's
-#: footprint stays O(bound × touched chunks) plus the Arrow batches
-#: those rows slice, however large its input partition (at 100 TB,
-#: input splits are maxPartitionBytes-sized). A chunk may thus get
-#: several files, as the library writer also emits.
-_FLUSH_ROWS = 262_144
-
-
-def _write_segment_files(batches, sch: Schema, base_dir: str) -> list[str]:
-    """Task-side segment write shared by the batch and stream writers,
-    over the Arrow batches Spark hands the task: each batch is cast to
-    the staging schema with the shared write sequence, checked for
-    null dims, routed by ``scan._arrow_chunks`` (``_chunked``'s floor
-    arithmetic) and split by chunk with one sort; each chunk's rows
-    are key-sorted and written as zstd parquet under
-    ``base_dir/seg=0/__chunk_*/part-<uuid>.parquet`` once
-    ``_FLUSH_ROWS`` of them are pending, and at the end, without
-    min/max for a float column holding NaN. Returns the files
-    written, relative to ``base_dir``."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from matdb_spark.scan import _arrow_chunks
-
-    out_schema = to_arrow_schema(sch.staging_schema())  # dims, values, __seq
-    floats = [f.name for f in out_schema if pa.types.is_floating(f.type)]
-    chunk_cols = sch.chunk_cols
-    pending: dict[tuple, list] = {}
-    files: list[str] = []
-
-    def flush(key: tuple) -> None:
-        t = pa.concat_tables(pending.pop(key)).sort_by([(d, "ascending") for d in sch.dim_names])
-        rel_dir = "/".join(["seg=0"] + [f"{c}={v}" for c, v in zip(chunk_cols, key)])
-        os.makedirs(os.path.join(base_dir, rel_dir), exist_ok=True)
-        rel = f"{rel_dir}/part-{uuid.uuid4().hex}.parquet"
-        # Spark's parquet reader skips row groups by min/max, which
-        # pyarrow takes without NaN: a range read up to NaN would lose
-        # the file's NaN rows
-        nan = {c for c in floats if pc.any(pc.is_nan(t[c])).as_py()}
-        stats = [c for c in out_schema.names if c not in nan]
-        pq.write_table(t, os.path.join(base_dir, rel), compression="zstd", write_statistics=stats)
-        files.append(rel)
-
-    for batch in batches:
-        n = batch.num_rows
-        if not n:
-            continue
-        t = pa.Table.from_batches([batch]).select(sch.column_names)
-        for d in sch.dim_names:
-            if t[d].null_count:
-                raise ValueError(f"null dimension {d!r}: dimension values are the key and must be non-null")
-        t = t.append_column(SEQ_COL, pa.repeat(pa.scalar(1, pa.int64()), n)).cast(out_schema)
-        starts = [0]
-        if chunk_cols:
-            for c, chunk in zip(chunk_cols, _arrow_chunks(t, sch)):
-                t = t.append_column(c, chunk)
-            t = t.sort_by([(c, "ascending") for c in chunk_cols])
-            ends = pa.repeat(False, n - 1)
-            for c in chunk_cols:
-                # plain arrays: indices_nonzero of a chunked array with
-                # no chunks (a one-row batch) crashes pyarrow 16.1
-                col = t[c].combine_chunks()
-                ends = pc.or_(ends, pc.not_equal(col[:-1], col[1:]))
-            starts += [i + 1 for i in pc.indices_nonzero(ends).to_pylist()]
-        for lo, hi in zip(starts, starts[1:] + [n]):
-            part = t.slice(lo, hi - lo)
-            key = tuple(int(part[c][0].as_py()) for c in chunk_cols)
-            pending.setdefault(key, []).append(part.select(out_schema.names))
-            if sum(map(len, pending[key])) >= _FLUSH_ROWS:
-                flush(key)
-    for key in list(pending):
-        flush(key)
-    return files
-
-
 class MatdbBatchWriter(DataSourceArrowWriter):
     """``df.write.format("matdb").mode("append"|"overwrite").save(db)``
     — one atomic MVCC transaction per save.
@@ -490,7 +414,7 @@ class MatdbBatchWriter(DataSourceArrowWriter):
     The txn id is reserved on the DRIVER (O_CREAT|O_EXCL — the same
     claim the library's allocate_txn_id makes, so a concurrent library
     writer can never collide with a DSv2 writer). Each task writes the
-    Arrow batches Spark hands it (``_write_segment_files``) as parquet
+    Arrow batches Spark hands it (``scan.write_segment_files``) as parquet
     under ``data/txn=<t>/seg=0/__chunk_*/`` with uuid file names —
     chunk routing, within-file key sort, canonical column types, and
     the shared write sequence all as transaction.py's _write_segment
@@ -530,7 +454,7 @@ class MatdbBatchWriter(DataSourceArrowWriter):
 
     def write(self, iterator):
         tdir = manifest.txn_data_dir(self.db_path, self.txn_id)
-        return _Written(_write_segment_files(iterator, self.schema_obj, tdir))
+        return _Written(write_segment_files(iterator, self.schema_obj, tdir))
 
     def commit(self, messages):
         files = [f for m in messages for f in m.files]
@@ -558,7 +482,7 @@ class MatdbStreamWriter(DataSourceStreamArrowWriter):
 
     Tasks don't know the batch's txn id (the Python stream-writer API
     creates one writer for the query's lifetime), so they STAGE their
-    chunk-routed parquet (``_write_segment_files``, as the batch sink)
+    chunk-routed parquet (``scan.write_segment_files``, as the batch sink)
     under ``data/_stream_staging/<task-uuid>/`` and the driver's
     per-batch ``commit`` reserves a txn id, MOVES the staged files into
     ``data/txn=<t>/`` (same-FS renames; on an object store these are
@@ -595,7 +519,7 @@ class MatdbStreamWriter(DataSourceStreamArrowWriter):
         base = os.path.join(
             manifest.data_dir(self.db_path), STREAM_STAGING_DIR, uuid.uuid4().hex
         )
-        return _Written(_write_segment_files(iterator, self.schema_obj, base), base)
+        return _Written(write_segment_files(iterator, self.schema_obj, base), base)
 
     def _staging_roots(self, messages):
         return {m.base for m in messages if m is not None and m.base}

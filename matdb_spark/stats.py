@@ -49,7 +49,10 @@ def collect_segment_info(seg_dir: str) -> list[str]:
     just-written file from a listing would silently drop rows from
     every scan of this txn. On such deployments record file sets from
     the writer's commit protocol instead, as the DSv2 sinks do (their
-    tasks report the files they wrote)."""
+    tasks report the files they wrote). Small library commits already
+    do: their segments are written on the driver by
+    ``scan.write_segment_files``, whose returned file list the commit
+    records; this listing serves only segments Spark's writer wrote."""
     return sorted(
         os.path.relpath(os.path.join(root, f), seg_dir).replace(os.sep, "/")
         for root, _dirs, files in os.walk(seg_dir)

@@ -15,9 +15,11 @@ Two write paths:
   the reference example's parser-threads→channel→writer pipeline
   (examples/sensor-log.rs:241-305) with Spark's own parallelism.
   A small generated input (at most ``scan._SINGLE_TASK_MAX_BYTES`` by
-  Spark's estimate) skips the chunk exchange and is written by one
-  task, in one Spark job, like the reference's one writer per flush
-  (segment.rs:30-46).
+  Spark's estimate, over a plan whose every node bounds its estimate)
+  is collected with ``toArrow()`` and written on the driver by
+  ``scan.write_segment_files``, the segment writer of the ``matdb``
+  sinks, like the reference's one writer per flush (segment.rs:30-46);
+  no Spark write job runs.
 
 ``commit`` publishes through ``manifest.commit``, the one commit
 routine the DSv2 sinks share: the manifest lists every flushed
@@ -55,23 +57,40 @@ if TYPE_CHECKING:
     from matdb_spark.database import Database
 
 
+#: Catalyst operators whose size estimate bounds the rows they emit,
+#: and the generated leaves, estimated at their rows' in-memory size.
+#: ``Generate`` (``explode``, ``inline``, UDTFs) and the Python map
+#: nodes (``mapInPandas``, ``mapInArrow``, grouped maps) keep their
+#: child's estimate however many rows they emit, so a plan holding one
+#: is never small.
+_BOUNDED_NODES = frozenset(
+    {
+        "Project", "Filter", "Union", "Join", "Aggregate", "Deduplicate", "Sort",
+        "GlobalLimit", "LocalLimit", "SubqueryAlias", "Repartition", "RepartitionByExpression",
+        "Range", "LocalRelation", "OneRowRelation",
+    }
+)
+
+
 def _small_write(df: DataFrame) -> bool:
-    """Is ``df`` small enough to write as one task? Spark's own size
-    estimate of the analyzed plan (no job) must be at most
-    ``scan._SINGLE_TASK_MAX_BYTES``, and every leaf must be generated
-    in memory (``Range``, ``LocalRelation``, ``OneRowRelation``), whose
-    estimate is the rows' in-memory size. File and source scans are
-    estimated at their compressed on-disk bytes, far below the rows
-    they decode to, so compaction, MERGE and UPDATE inputs never
-    qualify; Python-row frames (``LogicalRDD``) estimate as unbounded."""
+    """Is ``df`` small enough to collect and write on the driver?
+    Spark's own size estimate of the analyzed plan (no job) must be at
+    most ``scan._SINGLE_TASK_MAX_BYTES``, and every node of the plan
+    must be in ``_BOUNDED_NODES``. File and source scans are estimated
+    at their compressed on-disk bytes, far below the rows they decode
+    to, so compaction, MERGE and UPDATE inputs never qualify;
+    Python-row frames (``LogicalRDD``) estimate as unbounded.
+
+    The node names come from one py4j call: the plan's tree string with
+    each node's fields cut to one (``toJSON`` costs about 50 ms on an
+    ``ingest`` commit's plan, the tree string 2 ms). Each node's line
+    begins with its name after the tree's ``:- +-`` prefix; a
+    multi-line literal adds lines whose first words may be anything,
+    which can only make a plan not small."""
     plan = df._jdf.queryExecution().analyzed()
-    leaves = plan.collectLeaves()
-    if not all(
-        leaves.apply(i).nodeName() in ("Range", "LocalRelation", "OneRowRelation")
-        for i in range(leaves.size())
-    ):
-        return False
-    return plan.stats().sizeInBytes() <= scan._SINGLE_TASK_MAX_BYTES
+    tree = plan.treeString(False, False, 1, False, False)
+    nodes = {line.lstrip(" :|+-").split(" ", 1)[0] for line in tree.splitlines() if line.strip()}
+    return nodes <= _BOUNDED_NODES and plan.stats().sizeInBytes() <= scan._SINGLE_TASK_MAX_BYTES
 
 
 class Transaction:
@@ -290,73 +309,90 @@ class Transaction:
         segment.rs:30-46): each staging column is its ``sources`` SQL
         expression (default: ``df``'s column) cast to its declared type,
         with the chunk columns, in ONE ``selectExpr`` (``scan._chunked``;
-        SQL text, see ``scan._range_filters``). Layout discipline = the
-        engine's physical strategy at scale:
-        - route rows by chunk columns (``partitionBy``) so the reader
-          gets Hive partition pruning (reference chunk routing,
-          schema.rs:28-38);
-        - repartition by chunk before writing so each chunk's rows are
-          produced by few tasks (bounded file counts at scale; AQE
-          coalesces tiny outputs locally) — unless the input is small
-          (``_small_write``): then one task writes every chunk dir, in
-          one job with no exchange, and each chunk dir still gets one
-          file holding the same rows in the same order;
-        - sort within partitions by key so Parquet row-group min/max
-          stats act as the reference's zone maps (block.rs:210-232).
+        SQL text, see ``scan._range_filters``); a null dim raises
+        ``null dimension`` inside it. That projection is written one of
+        two ways:
+        - small (``_small_write``), with no ``bloom`` dim and no
+          ``cluster_by``: collected with ``toArrow()`` in one Spark job
+          and written on the driver by ``scan.write_segment_files``,
+          the segment writer of the ``matdb`` sinks, which routes rows
+          by chunk, key-sorts each chunk's file and reports the files
+          it wrote;
+        - otherwise Spark's parquet writer, whose layout discipline is
+          the engine's physical strategy at scale: rows are repartitioned
+          by chunk (or range-partitioned with ``cluster_by``) so each
+          chunk's rows are produced by few tasks, routed by chunk
+          columns (``partitionBy``) so the reader gets Hive partition
+          pruning (reference chunk routing, schema.rs:28-38), and
+          sorted within partitions by key so Parquet row-group min/max
+          stats act as the reference's zone maps (block.rs:210-232);
+          the segment's files are then listed
+          (``stats.collect_segment_info``).
+        Either way each chunk dir of a small input gets one file
+        holding the same rows in key order.
         """
         txn = self._ensure_txn_id()
         seg = self.segments_flushed
-        seg_dir = f"{manifest.txn_data_dir(self.db.path, txn)}/seg={seg}"
+        tdir = manifest.txn_data_dir(self.db.path, txn)
 
         schema = self.schema
+        dims = set(schema.dim_names)
+
         # Canonicalize column types so every segment file carries the
         # exact declared schema — mixed int/long inputs must not create
         # per-segment parquet schema drift (breaks multi-segment scans).
-        canon = {
-            f.name: f"CAST({(sources or {}).get(f.name, f'`{f.name}`')} AS {f.dataType.simpleString()})"
-            for f in schema.staging_schema().fields
-        }
-        out = _chunked(df, schema, canon)
-        chunk_cols = schema.chunk_cols
-        # cluster_by replaces the key sort (e.g. z-order interleave) —
-        # a layout choice; chunk routing always stays outermost so
-        # partition pruning is unaffected.
-        sort_cols = chunk_cols + list(cluster_by or schema.dim_names)
-        if (chunk_cols or cluster_by is not None) and _small_write(out):
-            # One partition already satisfies both exchanges below: the
-            # sort then routes every chunk's rows into one file.
-            out = out.coalesce(1)
-        elif cluster_by is not None:
-            # Clustered rewrite: RANGE-partition on (chunks, cluster
-            # key) so the clustering is GLOBAL — every task (hence
-            # every file) owns a contiguous cluster-key range. A hash
-            # repartition would scatter the key space across tasks and
-            # cap locality at the file-interior level. (This is the
-            # public OPTIMIZE ZORDER shape: range partition + sort.)
-            try:
-                # may be non-numeric on some platforms (e.g. "auto")
-                nparts = int(
-                    out.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-                )
-            except ValueError:
-                nparts = 200
-            out = out.repartitionByRange(nparts, *sort_cols)
-        elif chunk_cols:
-            out = out.repartition(*chunk_cols)
-        out = out.sortWithinPartitions(*sort_cols)
-        writer = out.write.mode("error")
-        for d in schema.dimensions:
-            if d.bloom:
-                # Parquet bloom filter per segment file: row-group
-                # skipping for point probes on non-leading dims, where
-                # the within-partition sort gives min/max stats no
-                # selectivity (SURVEY §2.1 O8's zone maps only help
-                # the leading key).
-                writer = writer.option(f"parquet.bloom.filter.enabled#{d.name}", "true")
-        if chunk_cols:
-            writer = writer.partitionBy(*chunk_cols)
-        writer.parquet(seg_dir)
-        self._txn_files += [f"seg={seg}/{rel}" for rel in stats.collect_segment_info(seg_dir)]
+        def canon(f) -> str:
+            expr = f"CAST({(sources or {}).get(f.name, f'`{f.name}`')} AS {f.dataType.simpleString()})"
+            if f.name not in dims:
+                return expr
+            msg = scan._sql_literal(
+                f"null dimension {f.name!r}: dimension values are the key and must be non-null", "string"
+            )
+            return f"CASE WHEN {expr} IS NULL THEN raise_error({msg}) ELSE {expr} END"
+
+        out = _chunked(df, schema, {f.name: canon(f) for f in schema.staging_schema().fields})
+        if cluster_by is None and not any(d.bloom for d in schema.dimensions) and _small_write(out):
+            files = scan.write_segment_files(out.toArrow().to_batches(), schema, tdir, seq=None, seg=seg)
+        else:
+            chunk_cols = schema.chunk_cols
+            # cluster_by replaces the key sort (e.g. z-order interleave)
+            # — a layout choice; chunk routing always stays outermost so
+            # partition pruning is unaffected.
+            sort_cols = chunk_cols + list(cluster_by or schema.dim_names)
+            if cluster_by is not None:
+                # Clustered rewrite: RANGE-partition on (chunks, cluster
+                # key) so the clustering is GLOBAL — every task (hence
+                # every file) owns a contiguous cluster-key range. A hash
+                # repartition would scatter the key space across tasks
+                # and cap locality at the file-interior level. (This is
+                # the public OPTIMIZE ZORDER shape: range partition +
+                # sort.)
+                try:
+                    # may be non-numeric on some platforms (e.g. "auto")
+                    nparts = int(
+                        out.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+                    )
+                except ValueError:
+                    nparts = 200
+                out = out.repartitionByRange(nparts, *sort_cols)
+            elif chunk_cols:
+                out = out.repartition(*chunk_cols)
+            out = out.sortWithinPartitions(*sort_cols)
+            writer = out.write.mode("error")
+            for d in schema.dimensions:
+                if d.bloom:
+                    # Parquet bloom filter per segment file: row-group
+                    # skipping for point probes on non-leading dims,
+                    # where the within-partition sort gives min/max
+                    # stats no selectivity (SURVEY §2.1 O8's zone maps
+                    # only help the leading key).
+                    writer = writer.option(f"parquet.bloom.filter.enabled#{d.name}", "true")
+            if chunk_cols:
+                writer = writer.partitionBy(*chunk_cols)
+            seg_dir = f"{tdir}/seg={seg}"
+            writer.parquet(seg_dir)
+            files = [f"seg={seg}/{rel}" for rel in stats.collect_segment_info(seg_dir)]
+        self._txn_files += files
         self.segments_flushed += 1
 
     def flush(self) -> None:

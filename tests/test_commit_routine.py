@@ -3,7 +3,11 @@
 - A crash (a ``BaseException``) at each durable step of the routine —
   schema save, manifest tmp write, manifest rename, reservation release,
   checkpoint fold — leaves a store that reopens to the pre-commit or
-  the post-commit state, for a library commit and for a format write.
+  the post-commit state, for a library commit (buffered rows, and a
+  small frame written on the driver) and for a format write; every
+  listed file exists, and ``manifest.recover`` removes the unlisted
+  ones. So does a crash between two chunk files of the driver's
+  segment write, where rollback removes them too.
 - A float dim holding NaN leaves only that dim out of a txn's stats.
 - Schema evolution from a stale handle keeps every column other
   handles added (one locked read-modify-write, ``schema.evolve``).
@@ -99,6 +103,17 @@ def _library_commit(spark, path: str) -> None:
     t.commit()
 
 
+def _driver_commit(spark, path: str) -> None:
+    """A library commit of a small generated frame: written on the
+    driver by ``scan.write_segment_files``, one file per chunk."""
+    t = Database.open(spark, path).begin()
+    pad = ", NULL" * (len(t.schema.value_names) - 1)
+    rows = ", ".join(f"({k}L, {v}L{pad})" for k, v in WRITE.items())
+    t.add_dataframe(spark.sql(f"SELECT * FROM VALUES {rows} AS x({', '.join(t.schema.column_names)})"))
+    assert len(t._txn_files) == 2 and all(re.search(r"/part-[0-9a-f]{32}\.parquet$", f) for f in t._txn_files)
+    t.commit()
+
+
 def _format_commit(spark, path: str) -> None:
     """A ``format("matdb")`` batch write with ``evolve`` of column
     ``w``, driven through the sink's writer in this process (Spark runs
@@ -107,6 +122,28 @@ def _format_commit(spark, path: str) -> None:
     ks = list(WRITE)
     batch = pa.table({"k": ks, "v": [WRITE[k] for k in ks], "w": [-k for k in ks]})
     w.commit([w.write(iter(batch.to_batches()))])
+
+
+def _data_files(path: str) -> set[str]:
+    return {
+        os.path.join(root, f)
+        for root, _, files in os.walk(manifest.data_dir(path))
+        for f in files
+        if f.endswith(".parquet")
+    }
+
+
+def _check_files(path: str) -> None:
+    """Every file a manifest lists exists; once ``manifest.recover``
+    has swept, no other data file does."""
+    listed = {
+        os.path.join(manifest.txn_data_dir(path, t), f)
+        for t in manifest.committed_txn_ids(path)
+        for f in manifest.read_manifest(path, t)["files"]
+    }
+    assert listed <= _data_files(path), listed - _data_files(path)
+    manifest.recover(path, grace_seconds=0)
+    assert _data_files(path) == listed
 
 
 def _read_reopened(spark, path: str) -> dict:
@@ -126,11 +163,15 @@ def _read_reopened(spark, path: str) -> dict:
             ["manifest tmp write", "manifest rename", "reservation release", "checkpoint"],
         ),
         (
+            _driver_commit,
+            ["manifest tmp write", "manifest rename", "reservation release", "checkpoint"],
+        ),
+        (
             _format_commit,
             ["schema save", "manifest tmp write", "manifest rename", "reservation release", "checkpoint"],
         ),
     ],
-    ids=["library", "format"],
+    ids=["library", "driver", "format"],
 )
 def test_crash_at_every_durable_commit_step(spark, tmp_path_factory, monkeypatch, commit, steps):
     """4 crash points for a library commit, 5 for an evolving format
@@ -159,9 +200,47 @@ def test_crash_at_every_durable_commit_step(spark, tmp_path_factory, monkeypatch
                 commit(spark, path)
         want = post if at >= published_at else pre
         assert _read_reopened(spark, path) == want, name
+        _check_files(path)
         # the store stays writable: the next commit lands on top
-        _library_commit(spark, path)
+        (_driver_commit if commit is _driver_commit else _library_commit)(spark, path)
         assert _read_reopened(spark, path) == {**want, **{k: (v, None) for k, v in WRITE.items()}}
+        _check_files(path)
+
+
+@pytest.mark.parametrize("rollback", [False, True], ids=["process-death", "rollback"])
+def test_crash_between_chunk_files_of_a_driver_write(spark, tmp_path_factory, monkeypatch, rollback):
+    """A crash after the driver's writer wrote the first of a commit's
+    two chunk files: the store reopens to the pre-commit state, the
+    partial file is removed by rollback (or, after a process death, by
+    ``manifest.recover``), and the next commit lands on top."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path_factory.mktemp("chunkcrash") / "db")
+    _store(spark, path)
+    real, written = pq.write_table, []
+
+    def write_table(table, where, **kw):
+        if written:
+            raise _Crash("second chunk file")
+        written.append(where)
+        real(table, where, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(pq, "write_table", write_table)
+        with pytest.raises(_Crash):
+            if rollback:
+                with Database.open(spark, path).begin() as t:
+                    t.add_dataframe(spark.sql("SELECT * FROM VALUES (2L, 21L), (30L, 300L) AS x(k, v)"))
+            else:
+                _driver_commit(spark, path)
+    assert len(written) == 1
+    assert (written[0] in _data_files(path)) is not rollback
+    pre = {k: (v, None) for k, v in BEFORE.items()}
+    assert _read_reopened(spark, path) == pre
+    _check_files(path)
+    _driver_commit(spark, path)
+    assert _read_reopened(spark, path) == {**pre, **{k: (v, None) for k, v in WRITE.items()}}
+    _check_files(path)
 
 
 def test_float_nan_leaves_only_its_dim_out_of_the_stats(tmp_db_path):

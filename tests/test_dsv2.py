@@ -514,7 +514,7 @@ def test_dsv2_writer_incremental_flush(spark, tmp_path_factory):
     than ``_FLUSH_ROWS`` plus one Arrow batch (about 10k rows) into one
     chunk lands them as several key-sorted files of that chunk, and
     the scan result is the library's."""
-    from matdb_spark.sources.dsv2 import _FLUSH_ROWS
+    from matdb_spark.scan import _FLUSH_ROWS
 
     register_matdb_source(spark)
     p = str(tmp_path_factory.mktemp("dsv2flush") / "db")

@@ -14,6 +14,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import os
+import re
 import shutil
 import tempfile
 
@@ -453,10 +454,12 @@ def test_every_read_path_matches_model(spark, dim_type, workload, reads, overlay
     pool = _KEY_POOLS[dim_type]
     os.makedirs(SCRATCH, exist_ok=True)
     path = tempfile.mkdtemp(prefix="prop_reads_", dir=SCRATCH)
+    spark_path = tempfile.mkdtemp(prefix="prop_reads_spark_", dir=SCRATCH)
     try:
-        _read_every_way(spark, dim_type, pool, path, workload, reads, overlay)
+        _read_every_way(spark, dim_type, pool, path, spark_path, workload, reads, overlay)
     finally:
         shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(spark_path, ignore_errors=True)
 
 
 def _both_ways(read):
@@ -486,25 +489,28 @@ def _agree(tag, got, want, tied):
         assert g[k] == w[k], f"{tag}: {k} = {g[k]} on the driver, {w[k]} on Spark"
 
 
-def _read_every_way(spark, dim_type, pool, path, workload, reads, overlay):
-    from pyspark.sql import functions as F
+def _write_workload(spark, db, path, pool, workload, on_spark):
+    """Run ``workload`` against ``db``; return (committed user txn ->
+    key -> allowed rows, every committed id, keys some write call wrote
+    twice, differently). Each ``add_dataframe`` frame is a local
+    relation (Arrow), so a call is written on the driver as built, and
+    by Spark's parquet writer when ``on_spark`` (a byte cap of 0)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from matdb_spark.sources.dsv2 import MatdbChangesStreamReader
+    import pyarrow as pa
 
-    chunk = 4 if dim_type in ("long", "int", "decimal(20,0)") else 0
-    schema = Schema(
-        dimensions=[Dimension("a", chunk, type=dim_type), Dimension("b", 2)],
-        values=[Value("v"), Value("w")],
-    )
-    db = Database.create(spark, path, schema)
+    schema = db.schema
+    arrow_schema = to_arrow_schema(schema.spark_schema())
 
     def key(ai, b):
         return (_tok(_norm(pool[ai])), b)
 
     def frame(rows):
-        return spark.createDataFrame([(pool[ai], b, *vw) for ai, b, vw in rows], schema.spark_schema())
+        cols = list(zip(*[(pool[ai], b, *vw) for ai, b, vw in rows])) or [()] * len(arrow_schema)
+        table = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema)
+        return spark.createDataFrame(table, schema.spark_schema())
 
-    ever_tied: set = set()  # keys some write call wrote twice, differently
+    ever_tied: set = set()
 
     def tied(rows):  # key -> every row written for it: they tie
         out: dict = {}
@@ -513,8 +519,8 @@ def _read_every_way(spark, dim_type, pool, path, workload, reads, overlay):
         ever_tied.update(k for k, r in out.items() if len(r) > 1)
         return out
 
-    writes: dict[int, dict] = {}  # committed user txn -> key -> allowed rows
-    committed = []  # every committed id, compactions included
+    writes: dict[int, dict] = {}
+    committed = []  # compactions included
     for step in workload:
         if step[0] == "txn":
             txn = db.begin()
@@ -529,7 +535,14 @@ def _read_every_way(spark, dim_type, pool, path, workload, reads, overlay):
                     txn.delete_row([pool[ai], b])
                     net[key(ai, b)] = {_TOMB}
                 else:
-                    txn.add_dataframe(frame(call[1]))
+                    n = len(txn._txn_files)
+                    with pytest.MonkeyPatch.context() as m:
+                        if on_spark:
+                            m.setattr(scan, "_SINGLE_TASK_MAX_BYTES", 0)
+                        txn.add_dataframe(frame(call[1]))
+                    # the driver's writer names files part-<uuid hex>.parquet
+                    by_driver = {bool(re.fullmatch(r"part-[0-9a-f]{32}\.parquet", f.rsplit("/", 1)[-1])) for f in txn._txn_files[n:]}
+                    assert by_driver <= {not on_spark}, txn._txn_files[n:]
                     net.update(tied(call[1]))
             if step[2]:
                 txn.commit()
@@ -552,8 +565,32 @@ def _read_every_way(spark, dim_type, pool, path, workload, reads, overlay):
             committed += [t] if t is not None else []
         else:
             db.vacuum()
+    return writes, committed, ever_tied
 
-    def state(upto=None):
+
+def _read_every_way(spark, dim_type, pool, path, spark_path, workload, reads, overlay):
+    """Write ``workload`` twice — as built, and with every
+    ``add_dataframe`` call forced onto Spark's writer — and check both
+    stores against the model: the first through every read path, the
+    second through the library's reads and the DSv2 snapshot."""
+    from pyspark.sql import functions as F
+
+    from matdb_spark.sources.dsv2 import MatdbChangesStreamReader
+
+    chunk = 4 if dim_type in ("long", "int", "decimal(20,0)") else 0
+    schema = Schema(
+        dimensions=[Dimension("a", chunk, type=dim_type), Dimension("b", 2)],
+        values=[Value("v"), Value("w")],
+    )
+    db = Database.create(spark, path, schema)
+    spark_db = Database.create(spark, spark_path, schema)
+
+    def key(ai, b):
+        return (_tok(_norm(pool[ai])), b)
+
+    writes, committed, ever_tied = _write_workload(spark, db, path, pool, workload, False)
+
+    def state(upto=None, writes=writes):
         out: dict = {}
         for t in sorted(writes):
             if upto is None or t <= upto:
@@ -571,16 +608,22 @@ def _read_every_way(spark, dim_type, pool, path, workload, reads, overlay):
     inv = {key(i, 0)[0]: pool[i] for i in range(len(pool))}
     box = {k: r for k, r in head.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
     points = {key(ai, b) for ai, b in reads[1]}
-
-    # the library's reads; each bounded one served on the driver where
-    # its files are few and small, and on the Spark plan
-    _check_rows("query", db.begin().query().collect(), head, ordered=True)
     bounds = {"a": (pool[lo], pool[hi]), "b": (blo, bhi)}
     keys = [(pool[ai], b) for ai, b in reads[1]]
-    for way, rows in zip(("driver", "spark"), _both_ways(lambda: db.begin().query_range(bounds))):
-        _check_rows(f"query_range ({way})", rows, box, ordered=True)
-    for way, rows in zip(("driver", "spark"), _both_ways(lambda: db.begin().query_points(keys))):
-        _check_rows(f"query_points ({way})", rows, {k: r for k, r in head.items() if k in points}, ordered=True)
+
+    # the library's reads; each bounded one served on the driver where
+    # its files are few and small, and on the Spark plan — over both
+    # stores, each against its own model
+    spark_writes = _write_workload(spark, spark_db, spark_path, pool, workload, True)[0]
+    spark_head = state(writes=spark_writes)
+    for tag, d, h in (("", db, head), ("spark-written ", spark_db, spark_head)):
+        h_box = {k: r for k, r in h.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
+        _check_rows(f"{tag}query", d.begin().query().collect(), h, ordered=True)
+        for way, rows in zip(("driver", "spark"), _both_ways(lambda: d.begin().query_range(bounds))):
+            _check_rows(f"{tag}query_range ({way})", rows, h_box, ordered=True)
+        for way, rows in zip(("driver", "spark"), _both_ways(lambda: d.begin().query_points(keys))):
+            _check_rows(f"{tag}query_points ({way})", rows, {k: r for k, r in h.items() if k in points}, ordered=True)
+    _check_rows("spark-written dsv2", spark.read.format("matdb").load(spark_path).collect(), spark_head)
     flagged = {
         "query_range include_txn": lambda: db.begin().query_range(bounds, include_txn=True),
         "query_points include_txn": lambda: db.begin().query_points(keys, include_txn=True),

@@ -1,12 +1,14 @@
 """Driver cost of store reads and commits.
 
 On a 12-commit store (10 ticks x 16 sensors each), prints for a key
-range, an 8-key point get and a small commit (up to its write call) the
-median milliseconds of the build and of the build plus ``collect``,
-and over both the py4j round trips, eagerly analysed Datasets (one per
-DataFrame op) and Spark jobs, over ``--repeat`` runs. A small read
-served on the driver runs inside its build, so its build alone is not
-its cost; a commit is measured up to its write call.
+range, an 8-key point get and a small commit the median milliseconds
+of the build and of the build plus ``collect``, and over both the py4j
+round trips, eagerly analysed Datasets (one per DataFrame op) and
+Spark jobs, over ``--repeat`` runs. A small read served on the driver
+runs inside its build, so its build alone is not its cost. A commit
+is timed whole (``begin -> add_dataframe -> commit``, including
+``manifest.commit``), written on the driver as built and, as
+``commit_spark``, forced onto Spark's writer (a byte cap of 0).
 
     PYTHONPATH=. python tools/build_cost.py [--repeat 5]
 """
@@ -20,10 +22,9 @@ import tempfile
 import time
 
 import py4j.clientserver
-from pyspark.sql import DataFrameWriter
 from pyspark.sql.classic.dataframe import DataFrame
 
-from matdb_spark import Database, Dimension, Schema, Value, get_spark
+from matdb_spark import Database, Dimension, Schema, Value, get_spark, scan
 
 COUNTS = {"py4j": 0, "datasets": 0}
 
@@ -39,26 +40,15 @@ def _count(cls, name: str, key: str, again=lambda *a: False) -> None:
     setattr(cls, name, wrapped)
 
 
-class _WriteCall(Exception):
-    """Raised at the commit's write call: its build ends there."""
-
-
-def _stop_at_write(*a, **kw):
-    raise _WriteCall
-
-
 def _run(spark, build, finish) -> tuple[float, float, int, int, int]:
     """(build ms, build + ``finish`` ms, py4j round trips, Datasets,
     Spark jobs) of one ``finish(build())``."""
     sc, group = spark.sparkContext, f"build_cost-{time.perf_counter_ns()}"
     sc.setJobGroup(group, group)
     before, t0 = dict(COUNTS), time.perf_counter()
-    try:
-        out = build()
-        t1 = time.perf_counter()
-        finish(out)
-    except _WriteCall:
-        t1 = time.perf_counter()
+    out = build()
+    t1 = time.perf_counter()
+    finish(out)
     t2 = time.perf_counter()
     rt, ds = COUNTS["py4j"] - before["py4j"], COUNTS["datasets"] - before["datasets"]
     sc.setLocalProperty("spark.jobGroup.id", None)
@@ -86,12 +76,20 @@ def main() -> None:
         _count(py4j.clientserver.ClientServerConnection, "send_command", "py4j")
         # PySpark's DataFrame.__new__ runs __init__, then Python runs it again
         _count(DataFrame, "__init__", "datasets", lambda df, *a: "_jdf" in vars(df))
-        DataFrameWriter.parquet = _stop_at_write
         collect = lambda df: df.collect()  # noqa: E731
+
+        def commit_spark():
+            cap, scan._SINGLE_TASK_MAX_BYTES = scan._SINGLE_TASK_MAX_BYTES, 0
+            try:
+                commit()
+            finally:
+                scan._SINGLE_TASK_MAX_BYTES = cap
+
         ops = {
             "query_range": (lambda: db.begin().query_range({"t": (15, 34), "s": (4, 7)}), collect),
             "query_points": (lambda: db.begin().query_points(keys), collect),
             "commit": (commit, lambda _: None),
+            "commit_spark": (commit_spark, lambda _: None),
         }
         print(f"{'op':<14}{'build_ms':>10}{'total_ms':>10}{'py4j':>8}{'datasets':>10}{'jobs':>6}")
         for name, (build, finish) in ops.items():
