@@ -263,8 +263,10 @@ _SINGLE_TASK_MAX_FILES = 8
 #: to far more on the driver. A commit uses Spark's size estimate of
 #: its generated input (``transaction._small_write``): at most this
 #: many bytes, it is collected and its segment written on the driver
-#: (``write_segment_files``), so the cap also bounds what a commit
-#: holds in driver memory. Median of 14 storebench ``ingest``-shaped
+#: (``write_segment_files``). The estimate counts a string or binary
+#: value at 20 bytes, so only a schema without such columns takes
+#: that path, and for it the cap also bounds what a commit holds in
+#: driver memory. Median of 14 storebench ``ingest``-shaped
 #: commits (72k rows, 3.5 MiB estimated) on a shared 4-vCPU host:
 #: 304 ms written on the driver, 684 ms through Spark's chunk
 #: exchange. Larger inputs keep Spark's parallel writer: forced to one

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Iterable, Iterator, Sequence
 
-from pyspark.sql import DataFrame, Row, functions as F
+from pyspark.sql import DataFrame, Row, functions as F, types as T
 
 from matdb_spark import manifest, scan, stats
 from matdb_spark.scan import (
@@ -79,7 +79,10 @@ def _small_write(df: DataFrame) -> bool:
     must be in ``_BOUNDED_NODES``. File and source scans are estimated
     at their compressed on-disk bytes, far below the rows they decode
     to, so compaction, MERGE and UPDATE inputs never qualify;
-    Python-row frames (``LogicalRDD``) estimate as unbounded.
+    Python-row frames (``LogicalRDD``) estimate as unbounded. The
+    estimate counts a string or binary value at 20 bytes however long
+    it is, so it bounds the collected bytes only for fixed-width rows;
+    ``_write_segment`` asks only for schemas without such columns.
 
     The node names come from one py4j call: the plan's tree string with
     each node's fields cut to one (``toJSON`` costs about 50 ms on an
@@ -308,17 +311,18 @@ class Transaction:
         """Write one segment (reference: one file per flush,
         segment.rs:30-46): each staging column is its ``sources`` SQL
         expression (default: ``df``'s column) cast to its declared type,
-        with the chunk columns, in ONE ``selectExpr`` (``scan._chunked``;
-        SQL text, see ``scan._range_filters``); a null dim raises
-        ``null dimension`` inside it. That projection is written one of
-        two ways:
-        - small (``_small_write``), with no ``bloom`` dim and no
-          ``cluster_by``: collected with ``toArrow()`` in one Spark job
-          and written on the driver by ``scan.write_segment_files``,
-          the segment writer of the ``matdb`` sinks, which routes rows
-          by chunk, key-sorts each chunk's file and reports the files
-          it wrote;
-        - otherwise Spark's parquet writer, whose layout discipline is
+        in ONE ``selectExpr`` (SQL text, see ``scan._range_filters``); a
+        null dim raises ``null dimension`` inside it. That projection is
+        written one of two ways:
+        - small (``_small_write``), with no ``bloom`` dim, no
+          ``string``/``binary`` column and no ``cluster_by``: collected
+          with ``toArrow()`` in one Spark job and written on the driver
+          by ``scan.write_segment_files``, the segment writer of the
+          ``matdb`` sinks, which routes rows by chunk, key-sorts each
+          chunk's file and reports the files it wrote;
+        - otherwise Spark's parquet writer over the same projection
+          with the chunk columns added (``scan._chunked``, still one
+          ``selectExpr``), whose layout discipline is
           the engine's physical strategy at scale: rows are repartitioned
           by chunk (or range-partitioned with ``cluster_by``) so each
           chunk's rows are produced by few tasks, routed by chunk
@@ -350,10 +354,23 @@ class Transaction:
             )
             return f"CASE WHEN {expr} IS NULL THEN raise_error({msg}) ELSE {expr} END"
 
-        out = _chunked(df, schema, {f.name: canon(f) for f in schema.staging_schema().fields})
-        if cluster_by is None and not any(d.bloom for d in schema.dimensions) and _small_write(out):
-            files = scan.write_segment_files(out.toArrow().to_batches(), schema, tdir, seq=None, seg=seg)
+        staging = schema.staging_schema().fields
+        cols = {f.name: canon(f) for f in staging}
+        small = None
+        if (
+            cluster_by is None
+            and not any(d.bloom for d in schema.dimensions)
+            # Spark estimates a string or binary value at 20 bytes,
+            # however long it is: only fixed-width rows are bounded by
+            # the estimate _small_write reads
+            and not any(isinstance(f.dataType, (T.StringType, T.BinaryType)) for f in staging)
+        ):
+            small = df.selectExpr(*[f"{e} AS `{name}`" for name, e in cols.items()])
+            small = small if _small_write(small) else None
+        if small is not None:
+            files = scan.write_segment_files(small.toArrow().to_batches(), schema, tdir, seq=None, seg=seg)
         else:
+            out = _chunked(df, schema, cols)
             chunk_cols = schema.chunk_cols
             # cluster_by replaces the key sort (e.g. z-order interleave)
             # — a layout choice; chunk routing always stays outermost so

@@ -49,6 +49,23 @@ def test_small_write_needs_a_bounded_plan(spark):
     assert _small_write(bounded)
 
 
+def test_string_columns_keep_sparks_writer(spark, tmp_db_path):
+    """Spark estimates a string value at 20 bytes however long it is, so
+    a ``repeat()`` over a ``Range`` passes ``_small_write`` at any width
+    (a 1000 × 1 MB frame below, never run); a schema with a string or
+    binary column therefore keeps Spark's writer, so no such frame is
+    collected onto the driver."""
+    wide = spark.range(1000).selectExpr("id AS t", "0 AS s", "repeat('x', 1000000) AS v")
+    assert _small_write(wide)
+    for vtype in ("string", "binary"):
+        db = Database.create(spark, os.path.join(tmp_db_path, vtype), Schema(dimensions=SCHEMA.dimensions, values=[Value("v", type=vtype)]))
+        with db.begin() as t:
+            t.add_dataframe(spark.range(10).selectExpr("id AS t", "0 AS s", f"CAST(repeat('x', 100) AS {vtype}) AS v"))
+            t.commit()
+        assert not _by_driver(db)
+        assert db.begin().query().count() == 10
+
+
 @pytest.mark.parametrize("cap", [None, 0], ids=["driver", "spark"])
 def test_null_dimension_is_refused_and_nothing_published(spark, tmp_db_path, monkeypatch, cap):
     """A null dim raises ``null dimension`` whether the frame is written

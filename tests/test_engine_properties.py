@@ -494,13 +494,15 @@ def _write_workload(spark, db, path, pool, workload, on_spark):
     key -> allowed rows, every committed id, keys some write call wrote
     twice, differently). Each ``add_dataframe`` frame is a local
     relation (Arrow), so a call is written on the driver as built, and
-    by Spark's parquet writer when ``on_spark`` (a byte cap of 0)."""
+    by Spark's parquet writer when ``on_spark`` (a byte cap of 0) or
+    the schema has a string column."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     import pyarrow as pa
 
     schema = db.schema
     arrow_schema = to_arrow_schema(schema.spark_schema())
+    on_driver = not on_spark and not any(pa.types.is_string(f.type) for f in arrow_schema)
 
     def key(ai, b):
         return (_tok(_norm(pool[ai])), b)
@@ -542,7 +544,7 @@ def _write_workload(spark, db, path, pool, workload, on_spark):
                         txn.add_dataframe(frame(call[1]))
                     # the driver's writer names files part-<uuid hex>.parquet
                     by_driver = {bool(re.fullmatch(r"part-[0-9a-f]{32}\.parquet", f.rsplit("/", 1)[-1])) for f in txn._txn_files[n:]}
-                    assert by_driver <= {not on_spark}, txn._txn_files[n:]
+                    assert by_driver <= {on_driver}, txn._txn_files[n:]
                     net.update(tied(call[1]))
             if step[2]:
                 txn.commit()
@@ -570,9 +572,9 @@ def _write_workload(spark, db, path, pool, workload, on_spark):
 
 def _read_every_way(spark, dim_type, pool, path, spark_path, workload, reads, overlay):
     """Write ``workload`` twice — as built, and with every
-    ``add_dataframe`` call forced onto Spark's writer — and check both
-    stores against the model: the first through every read path, the
-    second through the library's reads and the DSv2 snapshot."""
+    ``add_dataframe`` call forced onto Spark's writer — and check each
+    store against its own model through every read path; then overlay
+    a transaction's buffered writes on the first."""
     from pyspark.sql import functions as F
 
     from matdb_spark.sources.dsv2 import MatdbChangesStreamReader
@@ -582,113 +584,110 @@ def _read_every_way(spark, dim_type, pool, path, spark_path, workload, reads, ov
         dimensions=[Dimension("a", chunk, type=dim_type), Dimension("b", 2)],
         values=[Value("v"), Value("w")],
     )
-    db = Database.create(spark, path, schema)
-    spark_db = Database.create(spark, spark_path, schema)
 
     def key(ai, b):
         return (_tok(_norm(pool[ai])), b)
-
-    writes, committed, ever_tied = _write_workload(spark, db, path, pool, workload, False)
-
-    def state(upto=None, writes=writes):
-        out: dict = {}
-        for t in sorted(writes):
-            if upto is None or t <= upto:
-                out.update(writes[t])
-        return out
 
     def in_box(k, lo, hi, blo, bhi):
         a = _order(pool[lo]), _order(pool[hi])
         return a[0] <= _order(k[0]) <= a[1] and blo <= k[1] <= bhi
 
-    head = state()
     lo, hi, blo, bhi = reads[0]
     blo, bhi = min(blo, bhi), max(blo, bhi)
     # the box's state: keys are tokens, so compare through the pool
     inv = {key(i, 0)[0]: pool[i] for i in range(len(pool))}
-    box = {k: r for k, r in head.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
     points = {key(ai, b) for ai, b in reads[1]}
     bounds = {"a": (pool[lo], pool[hi]), "b": (blo, bhi)}
     keys = [(pool[ai], b) for ai, b in reads[1]]
 
-    # the library's reads; each bounded one served on the driver where
-    # its files are few and small, and on the Spark plan — over both
-    # stores, each against its own model
-    spark_writes = _write_workload(spark, spark_db, spark_path, pool, workload, True)[0]
-    spark_head = state(writes=spark_writes)
-    for tag, d, h in (("", db, head), ("spark-written ", spark_db, spark_head)):
-        h_box = {k: r for k, r in h.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
-        _check_rows(f"{tag}query", d.begin().query().collect(), h, ordered=True)
-        for way, rows in zip(("driver", "spark"), _both_ways(lambda: d.begin().query_range(bounds))):
-            _check_rows(f"{tag}query_range ({way})", rows, h_box, ordered=True)
-        for way, rows in zip(("driver", "spark"), _both_ways(lambda: d.begin().query_points(keys))):
-            _check_rows(f"{tag}query_points ({way})", rows, {k: r for k, r in h.items() if k in points}, ordered=True)
-    _check_rows("spark-written dsv2", spark.read.format("matdb").load(spark_path).collect(), spark_head)
-    flagged = {
-        "query_range include_txn": lambda: db.begin().query_range(bounds, include_txn=True),
-        "query_points include_txn": lambda: db.begin().query_points(keys, include_txn=True),
-        "query_range cell_merge": lambda: db.begin().query_range(bounds, include_txn=True, cell_merge=True),
-        "tombstones kept": lambda: scan.scan_dataframe(
-            spark, db.begin()._source(), include_txn=True, drop_null_value_rows=False, bounds=bounds
-        ),
-    }
-    models = {
-        "query_range include_txn": box,
-        "query_points include_txn": {k: r for k, r in head.items() if k in points},
-    }
-    for tag, read in flagged.items():
-        got, want = _both_ways(read)
-        _agree(tag, got, want, ever_tied)
-        if tag in models:
-            _check_rows(f"{tag} (driver)", got, models[tag], ordered=True)
-            _check_rows(f"{tag} (spark)", want, models[tag], ordered=True)
+    def check_store(tag, db, path, on_spark):
+        writes, committed, ever_tied = _write_workload(spark, db, path, pool, workload, on_spark)
 
-    # the DSv2 snapshot reader, whole and with pushed dim filters
-    def dsv2(as_of=None, filtered=False):
-        r = spark.read.format("matdb")
-        df = (r if as_of is None else r.option("as_of", as_of)).load(path)
-        if filtered:
-            df = df.filter(
-                (F.col("a") >= F.lit(pool[lo])) & (F.col("a") <= F.lit(pool[hi]))
-                & (F.col("b") >= blo) & (F.col("b") <= bhi)
-            )
-        return df.collect()
+        def state(upto=None):
+            out: dict = {}
+            for t in sorted(writes):
+                if upto is None or t <= upto:
+                    out.update(writes[t])
+            return out
 
-    _check_rows("dsv2", dsv2(), head)
-    _check_rows("dsv2 filtered", dsv2(filtered=True), box)
+        head = state()
+        box = {k: r for k, r in head.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
+        at_points = {k: r for k, r in head.items() if k in points}
 
-    # time travel: the library and DSv2 agree, or both refuse alike
-    ids = committed or [0]
-    as_of = ids[reads[2] % len(ids)]
-    past = state(as_of)
-    lib, got = _raises_alike(
-        f"as_of={as_of}", lambda: db.begin(as_of=as_of).query().collect(), lambda: dsv2(as_of)
-    )
-    if lib is not None:
-        _check_rows(f"query as_of={as_of}", lib, past, ordered=True)
-        _check_rows(f"dsv2 as_of={as_of}", got, past)
-        past_box = {k: r for k, r in past.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
-        _check_rows(f"dsv2 filtered as_of={as_of}", dsv2(as_of, True), past_box)
+        # the library's reads; each bounded one served on the driver
+        # where its files are few and small, and on the Spark plan
+        _check_rows(f"{tag}query", db.begin().query().collect(), head, ordered=True)
+        for way, rows in zip(("driver", "spark"), _both_ways(lambda: db.begin().query_range(bounds))):
+            _check_rows(f"{tag}query_range ({way})", rows, box, ordered=True)
+        for way, rows in zip(("driver", "spark"), _both_ways(lambda: db.begin().query_points(keys))):
+            _check_rows(f"{tag}query_points ({way})", rows, at_points, ordered=True)
+        flagged = {
+            "query_range include_txn": lambda: db.begin().query_range(bounds, include_txn=True),
+            "query_points include_txn": lambda: db.begin().query_points(keys, include_txn=True),
+            "query_range cell_merge": lambda: db.begin().query_range(bounds, include_txn=True, cell_merge=True),
+            "tombstones kept": lambda: scan.scan_dataframe(
+                spark, db.begin()._source(), include_txn=True, drop_null_value_rows=False, bounds=bounds
+            ),
+        }
+        models = {"query_range include_txn": box, "query_points include_txn": at_points}
+        for name, read in flagged.items():
+            got, want = _both_ways(read)
+            _agree(f"{tag}{name}", got, want, ever_tied)
+            if name in models:
+                _check_rows(f"{tag}{name} (driver)", got, models[name], ordered=True)
+                _check_rows(f"{tag}{name} (spark)", want, models[name], ordered=True)
 
-    # the change feed over (since, until]: the library and DSv2 alike
-    cursors = [0] + committed
-    since, until = sorted(cursors[i % len(cursors)] for i in reads[3:5])
-    feed: dict = {}
-    for t in sorted(writes):
-        if since < t <= until:
-            feed.update({k: (r, t) for k, r in writes[t].items()})
+        # the DSv2 snapshot reader, whole and with pushed dim filters
+        def dsv2(as_of=None, filtered=False):
+            r = spark.read.format("matdb")
+            df = (r if as_of is None else r.option("as_of", as_of)).load(path)
+            if filtered:
+                df = df.filter(
+                    (F.col("a") >= F.lit(pool[lo])) & (F.col("a") <= F.lit(pool[hi]))
+                    & (F.col("b") >= blo) & (F.col("b") <= bhi)
+                )
+            return df.collect()
 
-    def dsv2_feed():
-        src = MatdbChangesStreamReader(path, since)
-        parts = src.partitions({"cursor": since}, {"cursor": until})
-        return [row for p in parts for batch in src.read(p) for row in batch.to_pylist()]
+        _check_rows(f"{tag}dsv2", dsv2(), head)
+        _check_rows(f"{tag}dsv2 filtered", dsv2(filtered=True), box)
 
-    lib, got = _raises_alike(
-        f"changes({since}, {until})", lambda: db.changes(since, until).collect(), dsv2_feed
-    )
-    if lib is not None:
-        _check_feed(f"changes({since}, {until})", lib, feed)
-        _check_feed(f"dsv2 feed ({since}, {until}]", got, feed)
+        # time travel: the library and DSv2 agree, or both refuse alike
+        ids = committed or [0]
+        as_of = ids[reads[2] % len(ids)]
+        past = state(as_of)
+        lib, got = _raises_alike(
+            f"{tag}as_of={as_of}", lambda: db.begin(as_of=as_of).query().collect(), lambda: dsv2(as_of)
+        )
+        if lib is not None:
+            _check_rows(f"{tag}query as_of={as_of}", lib, past, ordered=True)
+            _check_rows(f"{tag}dsv2 as_of={as_of}", got, past)
+            past_box = {k: r for k, r in past.items() if in_box((inv[k[0]], k[1]), lo, hi, blo, bhi)}
+            _check_rows(f"{tag}dsv2 filtered as_of={as_of}", dsv2(as_of, True), past_box)
+
+        # the change feed over (since, until]: the library and DSv2 alike
+        cursors = [0] + committed
+        since, until = sorted(cursors[i % len(cursors)] for i in reads[3:5])
+        feed: dict = {}
+        for t in sorted(writes):
+            if since < t <= until:
+                feed.update({k: (r, t) for k, r in writes[t].items()})
+
+        def dsv2_feed():
+            src = MatdbChangesStreamReader(path, since)
+            parts = src.partitions({"cursor": since}, {"cursor": until})
+            return [row for p in parts for batch in src.read(p) for row in batch.to_pylist()]
+
+        lib, got = _raises_alike(
+            f"{tag}changes({since}, {until})", lambda: db.changes(since, until).collect(), dsv2_feed
+        )
+        if lib is not None:
+            _check_feed(f"{tag}changes({since}, {until})", lib, feed)
+            _check_feed(f"{tag}dsv2 feed ({since}, {until}]", got, feed)
+        return head, ever_tied
+
+    check_store("spark-written ", Database.create(spark, spark_path, schema), spark_path, True)
+    db = Database.create(spark, path, schema)
+    head, ever_tied = check_store("", db, path, False)
 
     # a transaction's buffered writes overlay the snapshot it reads
     txn = db.begin()
