@@ -15,7 +15,8 @@ Two write paths:
   the reference example's parser-threads→channel→writer pipeline
   (examples/sensor-log.rs:241-305) with Spark's own parallelism.
   A small generated input (at most ``scan._SINGLE_TASK_MAX_BYTES`` by
-  Spark's estimate, over a plan whose every node bounds its estimate)
+  Spark's estimate, over a plan whose every node bounds its estimate,
+  on a schema without ``string``/``binary`` columns or ``bloom`` dims)
   is collected with ``toArrow()`` and written on the driver by
   ``scan.write_segment_files``, the segment writer of the ``matdb``
   sinks, like the reference's one writer per flush (segment.rs:30-46);
